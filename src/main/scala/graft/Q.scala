@@ -30,7 +30,7 @@ final case class Q(
   * every graft entry point pins `spark.sql.session.timeZone=UTC`, matching
   * DuckDB's UTC-naive reading of the same column.
   */
-/** Driver-process hygiene shared by Verify/Bench/MiniBench: iterative
+/** Driver-process hygiene shared by Verify/Bench: iterative
   * operators localCheckpoint intermediate frames, whose blocks stay
   * pinned in the block manager for the JVM's life; a driver running the
   * whole registered query suite in one session must drop them between
@@ -68,16 +68,18 @@ object Par {
     * frames (guide §2.1/§2.2: size partitions toward the 100 MB-1 GB
     * band, derived from the input, never a constant): `rows` is a row
     * count the operator already holds (its convergence checksum), and
-    * the result targets ~64 MB per partition at `bytesPerRow`. A
-    * test-scale pair graph (thousands of edges) runs its O(log n)
-    * contraction rounds on 1 task instead of spark.sql.shuffle.partitions
-    * tasks — the per-round scheduling overhead, not the data, dominates
-    * there — while a 100 TB pair graph derives proportionally many
-    * partitions with no local-mode constant anywhere. */
-  def adaptiveParts(rows: Long, bytesPerRow: Long = 16L): Int = {
-    val target = 64L << 20
-    math.max(1L, math.min((rows * bytesPerRow + target - 1) / target,
-      1L << 20)).toInt
+    * the result targets ~64 MB per partition at 16 bytes per row (an
+    * edge of two longs). A test-scale pair graph (thousands of edges)
+    * runs its O(log n) contraction rounds on 1 task instead of
+    * spark.sql.shuffle.partitions tasks — the per-round scheduling
+    * overhead, not the data, dominates there — while a 100 TB pair
+    * graph derives proportionally many partitions with no local-mode
+    * constant anywhere. The width is a ceiling division in rows, so no
+    * row count overflows it. */
+  def adaptiveParts(rows: Long): Int = {
+    val rowsPerPart = (64L << 20) / 16
+    val parts = rows / rowsPerPart + (if (rows % rowsPerPart > 0) 1 else 0)
+    math.max(1L, math.min(parts, 1L << 20)).toInt
   }
 }
 

@@ -3,7 +3,9 @@ package graft.api
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Scoped tracking of `localCheckpoint` block ownership.
+/** The `localCheckpoint` lifecycle of graft's iterative operators:
+  * pin ([[Ckpt.apply]]), lazy-pin ([[Ckpt.lzy]]), track
+  * ([[Ckpt.tracking]]) and drop ([[Ckpt.drop]]).
   *
   * Iterative operators ([[TextDedup]]'s contraction rounds,
   * [[TextAnalysis.bpeLearn]]) truncate lineage with eager
@@ -63,6 +65,17 @@ private[graft] object Ckpt {
     val out = df.localCheckpoint(eager = false)
     scope.value.foreach(set => rddId(out).foreach(set += _))
     out
+  }
+
+  /** Drop a localCheckpoint'd frame's pinned blocks (a no-op on any
+    * other frame). Iterative operators drop each round's frame once the
+    * next round is materialized — without this they pin
+    * rounds × |frame| blocks for the session's life (memory must be ∝
+    * one round, not the round count). Safe only once every consumer of
+    * the frame has been materialized: its lineage is gone. */
+  def drop(df: DataFrame): Unit = df.queryExecution.analyzed match {
+    case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+    case _ => ()
   }
 
   /** Run `body` with a fresh tracking scope; returns (result, the RDD

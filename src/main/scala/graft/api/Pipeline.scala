@@ -148,11 +148,7 @@ object Pipeline {
   /** Free the materialized blocks backing a frame returned by
     * `prepare(nearDedup = true)` once the caller is done with it. A
     * no-op on any other frame. */
-  def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
+  def release(df: DataFrame): Unit = Ckpt.drop(df)
 
   /** The corpus-prep pipeline AT INGEST — the streaming form of
     * [[prepare]] for a continuously-arriving corpus (e.g. the `arrivals`

@@ -161,37 +161,6 @@ object Profiler {
         coalesce(col("cnt"), lit(0L)).as("cnt"))
   }
 
-  /** [[quantileBins]]'s 100 TB scale variant: the n−1 cut points fit via
-    * `approx_percentile` (one mergeable GK-summary aggregate) instead of
-    * exact `percentile`'s buffer-everything final task. Bucket
-    * assignment, tie rule (strict `>` against each cut), spine zeros,
-    * and output shape are IDENTICAL — only the cut positions can sit a
-    * rank-error (n/accuracy, plus the data-value-vs-interpolated
-    * convention) away from the exact fit, so per-bucket counts wobble by
-    * at most the rows inside those slivers. */
-  def quantileBinsApprox(df: DataFrame, valueCol: String, nBuckets: Int,
-      accuracy: Int = 10000): DataFrame = {
-    require(nBuckets >= 2, s"nBuckets must be ≥2, got $nBuckets")
-    require(accuracy > 0, s"accuracy must be positive, got $accuracy")
-    val vals = df.select(col(valueCol).cast("double").as("x"))
-      .filter(col("x").isNotNull)
-    val fracs = (1 until nBuckets).map(i => i.toDouble / nBuckets)
-    val cuts = vals.agg(
-      expr(s"approx_percentile(x, array(${fracs.mkString(", ")}), $accuracy)")
-        .cast("array<double>").as("cuts"))
-    val counts = vals.crossJoin(broadcast(cuts))
-      .select((expr("aggregate(cuts, 0, (a, c) -> a + CASE WHEN x > c THEN 1 ELSE 0 END)")
-        + 1).cast("long").as("bucket"))
-      .groupBy("bucket").agg(count(lit(1)).as("cnt"))
-    val spine = cuts.select(
-      explode(expr(s"sequence(1L, ${nBuckets}L)")).as("bucket"), col("cuts"))
-    spine.join(counts, Seq("bucket"), "left")
-      .select(col("bucket"),
-        when(col("bucket") > 1,
-          round(element_at(col("cuts"), (col("bucket") - 1).cast("int")), 4)).as("lo"),
-        coalesce(col("cnt"), lit(0L)).as("cnt"))
-  }
-
   /** WINSORIZATION: clamp a numeric column into its [loFrac, hiFrac]
     * exact interpolated percentile range — the outlier-trimming pass
     * (event values, doc lengths, quality scores) that tames tails
@@ -216,34 +185,6 @@ object Profiler {
     df.crossJoin(broadcast(cuts))
       // least/greatest SKIP nulls (both engines) — unguarded, a NULL
       // value would fabricate the low cut; the when-gate keeps NULL→NULL
-      .withColumn("value_w",
-        when(v.isNotNull,
-          least(greatest(v, col("__cuts").getItem(0)), col("__cuts").getItem(1))))
-      .withColumn("clipped_low", (v < col("__cuts").getItem(0)).cast("long"))
-      .withColumn("clipped_high", (v > col("__cuts").getItem(1)).cast("long"))
-      .drop("__cuts")
-  }
-
-  /** [[winsorize]]'s 100 TB scale variant: the two cut points fit via
-    * `approx_percentile` (mergeable GK summaries) instead of exact
-    * `percentile` (which buffers the whole column in the final reduce
-    * task). The clamp itself is unchanged and still bit-exact against
-    * whatever cuts the fit produced — the only divergence from the
-    * exact form is the cut position (rank error ≤ n/accuracy, plus the
-    * data-value-vs-interpolated convention), so clipped rows differ
-    * only within that sliver of the tails. Same shape: one sketch
-    * aggregate, one 1-row broadcast, map-side clamp. */
-  def winsorizeApprox(df: DataFrame, valueCol: String,
-      loFrac: Double = 0.01, hiFrac: Double = 0.99,
-      accuracy: Int = 10000): DataFrame = {
-    require(loFrac >= 0 && hiFrac <= 1 && loFrac < hiFrac,
-      s"need 0 ≤ loFrac < hiFrac ≤ 1, got ($loFrac, $hiFrac)")
-    require(accuracy > 0, s"accuracy must be positive, got $accuracy")
-    val cuts = df.select(col(valueCol).cast("double").as("__x"))
-      .filter(col("__x").isNotNull)
-      .agg(expr(s"approx_percentile(__x, array($loFrac, $hiFrac), $accuracy)").as("__cuts"))
-    val v = col(valueCol).cast("double")
-    df.crossJoin(broadcast(cuts))
       .withColumn("value_w",
         when(v.isNotNull,
           least(greatest(v, col("__cuts").getItem(0)), col("__cuts").getItem(1))))
@@ -278,42 +219,6 @@ object Profiler {
     val mad = df.filter(v.isNotNull).crossJoin(broadcast(med))
       .select(abs(v - col("__med")).as("__ad"))
       .agg(expr("percentile(__ad, 0.5)").as("__mad"))
-    df.filter(v.isNotNull)
-      .crossJoin(broadcast(med)).crossJoin(broadcast(mad))
-      .withColumn("abs_dev", abs(v - col("__med")))
-      .filter(col("abs_dev") > lit(k) * lit(1.4826) * col("__mad"))
-      .drop("__med", "__mad")
-  }
-
-  /** [[madOutliers]]'s 100 TB scale variant (the swap the exact form's
-    * scaladoc promises): both percentile fits run through
-    * `approx_percentile` (Greenwald-Khanna summaries — bounded-memory
-    * partial aggregates that MERGE, vs exact `percentile` which buffers
-    * every value in the final reduce task and cannot survive a 100 TB
-    * column). `accuracy` is Spark's 1/rank-error knob: the fitted cut is
-    * some value whose rank is within n/accuracy of the true median's.
-    * Convention difference vs the exact form even at uncompressed
-    * accuracy: `approx_percentile` returns a DATA value where
-    * `percentile` interpolates between the two middle ranks, so the cut
-    * can shift by one inter-point gap — rows inside that sliver may flip,
-    * everything else agrees (OperatorPropertiesSpec pins the flag set
-    * between the exact operator at k·1.2 and k·0.8 at both fine and
-    * coarse accuracy). At 100 TB pick accuracy ~1e5 and read the
-    * threshold as a rank-fuzzy cut.
-    *
-    * Same shape/columns as the exact form: 3 scans, two 1-row
-    * broadcasts, map-side flag pass. */
-  def madOutliersApprox(df: DataFrame, valueCol: String, k: Double = 3.0,
-      accuracy: Int = 10000): DataFrame = {
-    require(k > 0, s"k must be positive, got $k")
-    require(accuracy > 0, s"accuracy must be positive, got $accuracy")
-    val v = col(valueCol).cast("double")
-    val med = df.filter(v.isNotNull)
-      .select(v.as("__x"))
-      .agg(expr(s"approx_percentile(__x, 0.5, $accuracy)").as("__med"))
-    val mad = df.filter(v.isNotNull).crossJoin(broadcast(med))
-      .select(abs(v - col("__med")).as("__ad"))
-      .agg(expr(s"approx_percentile(__ad, 0.5, $accuracy)").as("__mad"))
     df.filter(v.isNotNull)
       .crossJoin(broadcast(med)).crossJoin(broadcast(mad))
       .withColumn("abs_dev", abs(v - col("__med")))
@@ -373,10 +278,7 @@ object Profiler {
     * value equi-joins. All five Pearson moments accumulate as DECIMAL(38,0)
     * integers; one fixed double expression, floor-4dp. Returns one row
     * `(n_rows, spearman)`. */
-  def spearman(df: DataFrame, xCol: String, yCol: String,
-      buckets: Int = 0): DataFrame = {
-    require(buckets == 0 || buckets >= 2,
-      s"buckets must be ≥2 (or 0 = occupancy-derived), got $buckets")
+  def spearman(df: DataFrame, xCol: String, yCol: String): DataFrame = {
     // spread (guide §2.5) so the checkpoint materialization and every
     // downstream map side run at cluster parallelism, not the
     // single-row-group scan's one task
@@ -387,14 +289,13 @@ object Profiler {
       .transform(Ckpt.apply) // consumed by both rank builds and the join
     def rankFrame(c: String): DataFrame = {
       // LAZY (r14, guide §1.2): the first consumer is a single
-      // sequential action — the bucket-derivation count below (or the
-      // approx-percentile broadcast build when buckets is fixed) — so
-      // the lazy mark fuses the eager form's dedicated job into it
+      // sequential action — the bucket-derivation count below — so the
+      // lazy mark fuses the eager form's dedicated job into it
       val counts = rows.groupBy(col(c).as("v")).agg(count(lit(1)).as("k"))
         .transform(Ckpt.lzy)
-      // 0 = bound per-window rows at any scale (Drift.scanBuckets);
+      // bound per-window rows at any scale (Drift.scanBuckets);
       // bucket boundaries cannot move ranks or the statistic
-      val b = if (buckets > 0) buckets else Drift.scanBuckets(counts.count())
+      val b = Drift.scanBuckets(counts.count())
       val fracs = (1 until b).map(i => i.toDouble / b)
       // APPROX cuts on purpose: bucket boundaries only partition the
       // prefix scan — they cannot move the ranks or the statistic — so

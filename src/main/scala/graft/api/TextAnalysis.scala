@@ -739,11 +739,6 @@ object TextAnalysis {
       minCount: Long = 1L): DataFrame = {
     require(rounds >= 1, s"rounds must be ≥1, got $rounds")
     val spark = df.sparkSession
-    def dropCheckpoint(d: DataFrame): Unit =
-      d.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-        case _ => ()
-      }
     // THE one corpus scan: word frequencies, then words become symbol
     // arrays (chars + the end-of-word marker).
     // LAZY checkpoints throughout (r14, guide §1.2): each round's
@@ -751,9 +746,8 @@ object TextAnalysis {
     // current vocab frame — it materializes the lazy mark fused into a
     // job the loop runs anyway, saving one dedicated scheduled job per
     // round (13 jobs at the q_bpe_learn parameterization). The previous
-    // round's blocks are dropped only AFTER that aggregate runs (the
-    // connectedComponents drop discipline — an early unpersist of a
-    // lineage-truncated frame is unrecoverable).
+    // round's blocks are dropped only AFTER that aggregate runs (an
+    // early unpersist of a lineage-truncated frame is unrecoverable).
     var vocab = df.select(explode(split(col(textCol), " ")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("cnt"))
@@ -781,7 +775,7 @@ object TextAnalysis {
         .limit(1).collect()
       // the collect above materialized the current vocab (it was the
       // lazy mark's first action) — last round's blocks are now dead
-      if (prevVocab != null) { dropCheckpoint(prevVocab); prevVocab = null }
+      if (prevVocab != null) { Ckpt.drop(prevVocab); prevVocab = null }
       if (top.isEmpty) exhausted = true
       else {
         val (a, b, c) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
@@ -801,8 +795,8 @@ object TextAnalysis {
       }
       r += 1
     }
-    dropCheckpoint(vocab)
-    if (prevVocab != null) dropCheckpoint(prevVocab)
+    Ckpt.drop(vocab)
+    if (prevVocab != null) Ckpt.drop(prevVocab)
     import spark.implicits._
     merges.result().toDF("round", "left", "right", "merged", "cnt")
   }

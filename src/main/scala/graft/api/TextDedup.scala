@@ -430,97 +430,6 @@ object TextDedup {
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
-  /** Connected components over a near-dup pair graph — the step that
-    * turns pairwise matches into DEDUP CLUSTERS (one canonical document
-    * per group). Returns (id, cluster_id) for every id in `allIds`,
-    * where cluster_id = the smallest id reachable through `pairs`
-    * (singletons map to themselves).
-    *
-    * Algorithm: iterative min-label propagation. Each round every node
-    * takes min(own label, neighbors' labels) — one shuffle by node id
-    * per round; lineage is truncated per round (localCheckpoint) so the
-    * plan stays bounded, and convergence is detected with a single-row
-    * aggregate (sum of labels strictly decreases until fixpoint — a
-    * scalar read, not a data collect). Rounds needed = graph diameter;
-    * near-dup graphs are shallow (tight clusters), so this converges in
-    * a handful of rounds. For adversarial long-chain graphs at 100 TB
-    * the drop-in upgrade is large-star/small-star (Kiveris et al.,
-    * "Connected Components in MapReduce"), which contracts in O(log n)
-    * rounds with the same per-round join shape. */
-  def connectedComponents(pairs: DataFrame, allIds: DataFrame,
-      idCol: String, maxRounds: Int = 50): DataFrame = {
-    // EAGER checkpoint of the PAIR frame (r14, VERDICT r13 #1): the
-    // union-of-swap needs the pair-generation subtree twice — lazily
-    // marked, its two branches are independent stages of the first
-    // consuming job and can re-execute that (possibly expensive)
-    // subtree concurrently before any block pins. Materializing the
-    // pair projection ONCE makes the union two cheap cache reads; the
-    // union itself needs no checkpoint of its own. Per-round frames
-    // below stay LAZY — their first consumer is the single sequential
-    // labelSum aggregate, which materializes them fused into a job the
-    // loop runs anyway.
-    val p = Ckpt(pairs.select(col("id_a").as("u"), col("id_b").as("v")))
-    // ONE scale-adaptive shuffle width for every per-round exchange
-    // (guide §2.1/§2.2): derived from the pair-graph size (a cache-read
-    // count of the just-materialized p), never the conf constant — the
-    // propagation rounds of a test-scale graph run on single-task
-    // stages, a 100 TB pair graph derives proportionally many
-    // partitions. A single shared width keeps the two per-round joins
-    // co-partitioned (no extra exchange from mismatched widths).
-    val n = graft.Par.adaptiveParts(p.count() * 2)
-    val edges = p.union(p.select(col("v").as("u"), col("u").as("v")))
-      .repartition(n, col("v")) // pre-keyed for the per-round join
-    // propagate only over nodes that HAVE edges (near-dup graphs are
-    // sparse — most documents are singletons); the full id set joins
-    // back once at the end, so per-round work scales with the graph,
-    // not the corpus
-    var labels = edges.select(col("v").as("id")).repartition(n, col("id"))
-      .distinct()
-      .select(col("id"), col("id").as("label"))
-      .transform(Ckpt.lzy)
-    // coalesce: sum over ZERO rows is NULL — an empty pair graph (clean
-    // corpus) must yield all-singleton clusters, not a crash
-    def labelSum(): Long =
-      labels.agg(coalesce(sum("label"), lit(0L))).head().getLong(0)
-    var prevSum = labelSum()
-    var round = 0
-    var converged = labels.isEmpty
-    // sum-based convergence needs one extra NO-CHANGE round to confirm
-    // the fixpoint, so allow maxRounds propagation rounds PLUS that
-    // confirming round — maxRounds bounds the graph diameter, not
-    // diameter + 1
-    while (!converged && round < maxRounds + 1) {
-      val neighborMin = edges
-        .join(labels.repartition(n, col("id"))
-          .select(col("id").as("v"), col("label")), "v")
-        .repartition(n, col("u"))
-        .groupBy("u").agg(min("label").as("nl"))
-      val next = labels.repartition(n, col("id"))
-        .join(neighborMin.withColumnRenamed("u", "id"), Seq("id"), "left")
-        .select(col("id"),
-          least(col("label"), coalesce(col("nl"), col("label"))).as("label"))
-        .transform(Ckpt.lzy)
-      val prevLabels = labels
-      labels = next
-      val s = labelSum() // materializes next (reads prevLabels' blocks)
-      dropCheckpoint(prevLabels) // only AFTER next is materialized
-      converged = s == prevSum
-      prevSum = s
-      round += 1
-    }
-    // wrong cluster ids are worse than no answer: a graph whose diameter
-    // exceeds maxRounds must fail loudly (the large-star/small-star
-    // contraction is the O(log n) upgrade for such graphs)
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxRounds rounds — " +
-          "graph diameter exceeds maxRounds; raise it or use a " +
-          "contraction-based variant for long-chain graphs")
-    allIds.select(col(idCol).as("id"))
-      .join(labels.select(col("id"), col("label").as("cluster_id")), Seq("id"), "left")
-      .select(col("id"), coalesce(col("cluster_id"), col("id")).as("cluster_id"))
-  }
-
   /** Bloom-filter eval-set decontamination — the scale path for when the
     * held-out set is too large to broadcast as a join hash relation.
     * The eval fingerprints are folded into ONE Bloom filter
@@ -750,26 +659,57 @@ object TextDedup {
       .select(col(idCol))
   }
 
-  /** Drop a localCheckpoint'd frame's pinned blocks. Eager
-    * localCheckpoint materializes each round's frame, after which the
-    * PREVIOUS round's blocks are dead weight — without this, iterative
-    * operators pin rounds × |edges| blocks for the session's life
-    * (memory must be ∝ one round, not the round count). Safe only once
-    * every consumer of the frame has been materialized. */
-  private def dropCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.unpersist(false)
-      case _ => ()
-    }
+  /** One large-star step (see [[connectedComponentsStar]]): every node
+    * connects its LARGER neighbors to its minimum neighbor (or itself).
+    * Exposed at package level so PlanAuditSpec can pin the per-round
+    * physical plan — this is the scale-critical inner loop. */
+  private[graft] def largeStarStep(e: DataFrame, nParts: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("u")
+    // nParts pins BOTH per-step exchanges to a scale-adaptive width
+    // (guide §2.1 — the caller derives it from the live edge count via
+    // Par.adaptiveParts): the explicit repartitions SATISFY the window's
+    // and the dedup aggregate's required distributions, so the plan
+    // carries exactly 2 hash exchanges (PlanAuditSpec's pin), at the
+    // derived width instead of spark.sql.shuffle.partitions.
+    e.union(e.select(col("v").as("u"), col("u").as("v")))
+      .repartition(nParts, col("u"))
+      .withColumn("m", least(min(col("v")).over(w), col("u")))
+      .filter(col("v") > col("u"))
+      .select(col("v").as("u"), col("m").as("v"))
+      .filter(col("u") =!= col("v"))
+      .repartition(nParts, col("u"), col("v"))
+      .distinct()
+  }
 
-  /** Contraction-based connected components — large-star/small-star
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    * the scale-path alternative to [[connectedComponents]]'s min-label
-    * propagation. Propagation needs diameter-many rounds, so an
-    * adversarial CHAIN of near-dups (plagiarism chains produce exactly
-    * this) makes it blow past maxRounds; star contraction halves tree
-    * heights every iteration and converges in O(log² n) rounds on any
-    * graph shape.
+  /** One small-star step (see [[connectedComponentsStar]]): with edges
+    * oriented big→small, every node connects its smaller neighbors (and
+    * itself) to their minimum. */
+  private[graft] def smallStarStep(e: DataFrame, nParts: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val w = Window.partitionBy("u")
+    // nParts: same scale-adaptive exchange-width pinning as
+    // [[largeStarStep]] — 2 hash exchanges
+    e.select(greatest(col("u"), col("v")).as("u"), least(col("u"), col("v")).as("v"))
+      .repartition(nParts, col("u"))
+      .withColumn("m", min(col("v")).over(w))
+      .select(explode(array(
+        struct(col("v").as("u"), col("m").as("v")),
+        struct(col("u").as("u"), col("m").as("v")))).as("p"))
+      .select(col("p.u").as("u"), col("p.v").as("v"))
+      .filter(col("u") =!= col("v"))
+      .repartition(nParts, col("u"), col("v"))
+      .distinct()
+  }
+
+  /** Connected components over a near-dup pair graph — the step that
+    * turns pairwise matches into DEDUP CLUSTERS (one canonical document
+    * per group) — by contraction: large-star/small-star (Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond"). Min-label
+    * propagation would need diameter-many rounds, so an adversarial
+    * CHAIN of near-dups (plagiarism chains produce exactly this) would
+    * blow past any round cap; star contraction halves tree heights every
+    * iteration and converges in O(log² n) rounds on any graph shape.
     *
     * Per iteration (each step is one hash shuffle on node id — a window
     * min over partitionBy(u), no orderBy — plus a distinct):
@@ -781,56 +721,11 @@ object TextDedup {
     * past the input; at the fixpoint every surviving edge points a node
     * directly at its component minimum. Convergence is detected with a
     * deterministic (count, hash-sum) checksum — a scalar read, not a
-    * data collect — and per-round localCheckpoint truncates lineage
-    * exactly like the propagation variant.
+    * data collect — and per-round localCheckpoint truncates lineage so
+    * the plan stays bounded.
     *
     * Returns (id, cluster_id) for every id in `allIds`, cluster_id =
-    * the component minimum (singletons map to themselves) — same
-    * contract, same oracle as [[connectedComponents]]. */
-  /** One large-star step (see [[connectedComponentsStar]]): every node
-    * connects its LARGER neighbors to its minimum neighbor (or itself).
-    * Exposed at package level so PlanAuditSpec can pin the per-round
-    * physical plan — this is the scale-critical inner loop. */
-  private[graft] def largeStarStep(e: DataFrame, nParts: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("u")
-    // nParts > 0 pins BOTH per-step exchanges to a scale-adaptive width
-    // (guide §2.1 — the caller derives it from the live edge count via
-    // Par.adaptiveParts): the explicit repartitions SATISFY the window's
-    // and the dedup aggregate's required distributions, so the plan
-    // still carries exactly 2 hash exchanges (PlanAuditSpec's pin),
-    // just at the derived width instead of spark.sql.shuffle.partitions.
-    val nbr0 = e.union(e.select(col("v").as("u"), col("u").as("v")))
-    val nbr = if (nParts > 0) nbr0.repartition(nParts, col("u")) else nbr0
-    val out = nbr.withColumn("m", least(min(col("v")).over(w), col("u")))
-      .filter(col("v") > col("u"))
-      .select(col("v").as("u"), col("m").as("v"))
-      .filter(col("u") =!= col("v"))
-    (if (nParts > 0) out.repartition(nParts, col("u"), col("v")) else out)
-      .distinct()
-  }
-
-  /** One small-star step (see [[connectedComponentsStar]]): with edges
-    * oriented big→small, every node connects its smaller neighbors (and
-    * itself) to their minimum. */
-  private[graft] def smallStarStep(e: DataFrame, nParts: Int = 0): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("u")
-    // nParts: same scale-adaptive exchange-width pinning as
-    // [[largeStarStep]] — 2 hash exchanges either way
-    val oriented0 = e.select(greatest(col("u"), col("v")).as("u"),
-      least(col("u"), col("v")).as("v"))
-    val oriented = if (nParts > 0) oriented0.repartition(nParts, col("u")) else oriented0
-    val out = oriented.withColumn("m", min(col("v")).over(w))
-      .select(explode(array(
-        struct(col("v").as("u"), col("m").as("v")),
-        struct(col("u").as("u"), col("m").as("v")))).as("p"))
-      .select(col("p.u").as("u"), col("p.v").as("v"))
-      .filter(col("u") =!= col("v"))
-    (if (nParts > 0) out.repartition(nParts, col("u"), col("v")) else out)
-      .distinct()
-  }
-
+    * the component minimum (singletons map to themselves). */
   def connectedComponentsStar(pairs: DataFrame, allIds: DataFrame,
       idCol: String, maxRounds: Int = 30): DataFrame = {
     val labels = starLabels(pairs, maxRounds)
@@ -877,8 +772,7 @@ object TextDedup {
     // of each step individually — checking only the composition could
     // accept a 2-cycle that passes through an intermediate change).
     // maxRounds bounds the CONTRACTING rounds; detecting the fixpoint
-    // costs one extra all-no-op iteration, hence the + 1 (same contract
-    // as connectedComponents above).
+    // costs one extra all-no-op iteration, hence the + 1.
     while (!converged && round < maxRounds + 1) {
       // per-round shuffle width derived from the LIVE edge count (the
       // checksum already carries it — guide §2.1 scale-adaptive sizing,
@@ -887,11 +781,11 @@ object TextDedup {
       val n = graft.Par.adaptiveParts(prev._1)
       val ls = largeStarStep(edges, n).transform(Ckpt.lzy)
       val cls = checksum(ls) // materializes ls (reads edges' blocks)
-      dropCheckpoint(edges) // ls is materialized; last round's blocks are dead
+      Ckpt.drop(edges) // ls is materialized; last round's blocks are dead
       val ss = smallStarStep(ls, graft.Par.adaptiveParts(cls._1))
         .transform(Ckpt.lzy)
       val css = checksum(ss) // materializes ss (reads ls's blocks)
-      dropCheckpoint(ls)
+      Ckpt.drop(ls)
       converged = cls == prev && css == cls
       edges = ss
       prev = css

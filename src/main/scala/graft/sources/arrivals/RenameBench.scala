@@ -1,7 +1,6 @@
 package graft.sources.arrivals
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Commit-rename throughput benchmark for the arrivals source (VERDICT
   * r9 item 6 — the flagship source's end-to-end scale number beside its
@@ -26,12 +25,7 @@ import org.apache.spark.sql.SparkSession
 object RenameBench {
   def main(args: Array[String]): Unit = {
     val n = sys.env.getOrElse("SPARK_GRAFT_RENAMEBENCH_FILES", "100000").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
 
     def mkFiles(dir: java.nio.file.Path): Unit = {
       val payload = "x".getBytes("UTF-8")

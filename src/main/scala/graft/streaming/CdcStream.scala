@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming form of [[graft.api.Cdc]]: fold an unbounded changelog into
   * per-key materialized state at ingest, emitting one upsert/delete
@@ -158,6 +158,9 @@ object CdcStream {
     * is IDEMPOTENT (same winners, one redundant version) — the merge
     * needs only at-least-once delivery, which is what makes blowing
     * away the entire checkpoint/state a supported restart mode.
+    * Deployed as `applyChangesStreamBounded(...).writeStream
+    * .foreachBatch(mergeSnapshot)` with a checkpoint; CdcStreamSpec
+    * drives the same pieces by hand and pins the snapshot-only restart.
     * Version directories make the write crash-safe: a killed merge
     * leaves a dangling unreferenced directory, never a half-written
     * referenced snapshot. */
@@ -210,29 +213,5 @@ object CdcStream {
     val v = latestVersion(spark, snapshotDir).getOrElse(
       throw new IllegalStateException(s"no committed snapshot under $snapshotDir"))
     spark.read.parquet(s"$snapshotDir/v$v")
-  }
-
-  /** The assembled bounded-state materialization: trim-after-TTL state,
-    * per-batch snapshot merge via foreachBatch, checkpointed. TWO
-    * restart modes hold exact batch-election parity: resume from
-    * (checkpoint, snapshot) — the normal path — or from the SNAPSHOT
-    * ALONE with a fresh checkpoint and empty state (disaster recovery /
-    * state-store migration): an empty state store is indistinguishable
-    * from an all-keys trim, and the merge's per-key max is idempotent
-    * under the at-least-once replay a fresh checkpoint implies
-    * (CdcStreamSpec pins the snapshot-only mode — the stronger claim).
-    * This is the production deployment shape; the spec drives the same
-    * pieces directly for determinism. */
-  def materializeToSnapshot(changes: Dataset[Change], deleteOp: String,
-      snapshotDir: String, checkpointDir: String, stateTtlMs: Long,
-      nFiles: Int = 4): StreamingQuery = {
-    val spark = changes.sparkSession
-    applyChangesStreamBounded(changes, stateTtlMs)
-      .writeStream.outputMode("append")
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (df: Dataset[SnapRow], _: Long) =>
-        mergeSnapshot(spark, df.toDF(), snapshotDir, nFiles)
-      }
-      .start()
   }
 }

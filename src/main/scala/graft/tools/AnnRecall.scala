@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic: measured pair recall of the occupancy-aware ANN join
   * (`q_ann_join`) against the exact cosine near-dup baseline
   * (`q_embed_neardup`) at an arbitrary scale factor — the evidence run
@@ -40,14 +38,7 @@ object AnnRecall {
       if (queriesArg == "all") Seq("q_ann_join", "q_ann_pairs", "q_ann_ivf", "q_ann_ivfpq")
       else queriesArg.split(",").toSeq
     val mode = args.drop(2).headOption.getOrElse("both")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     // exact DIRECTED top-5 per vector via the quadratic baseline
     // (the q_knn_eval exemption class — evidence tooling, not a
     // registered operator); computed ONCE per run for all queries
@@ -64,7 +55,7 @@ object AnnRecall {
       val em = graft.Tables.embeddings(spark, sfDir)
         .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
         .select(col("vec_id").as("id"), col("embedding").cast("array<double>").as("e"))
-      val probes = em.repartition(cpus.toInt * 4)
+      val probes = em.repartition(spark.sparkContext.defaultParallelism * 4)
         .select(col("id").as("ia"), col("e").as("ea"),
           sqrt(call_function("vec_dot", col("e"), col("e"))).as("na"))
       val idx = em.select(col("id").as("ib"), col("e").as("eb"),

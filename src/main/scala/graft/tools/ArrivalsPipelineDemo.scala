@@ -4,7 +4,6 @@ import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end arrivals-at-scale demo — the FULL reference dataflow
@@ -53,7 +52,6 @@ object ArrivalsPipelineDemo {
     val dir = args.drop(1).headOption.map(new File(_)).getOrElse(
       Files.createTempDirectory("arrivals-e2e-").toFile)
     dir.mkdirs()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
 
     // deterministic delivery stream: seq%10==9 RETRIES record seq-1
     def record(i: Int): Int = if (i % dupEvery == dupEvery - 1) i - 1 else i
@@ -68,13 +66,7 @@ object ArrivalsPipelineDemo {
     }
     val writeSec = (System.nanoTime() - t0) / 1e9
 
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import spark.implicits._
 
     val t1 = System.nanoTime()
@@ -84,7 +76,6 @@ object ArrivalsPipelineDemo {
     val rows = spark.readStream.format("arrivals")
       .option("path", dir.getPath)
       .option("maxFilesPerTrigger", perTrigger.toString)
-      .option("executorRenameThreshold", "5000") // commits fan out to executors
       .load()
       .select(
         regexp_extract(col("file_name"), "_r(\\d+)", 1).as("fp"),

@@ -32,7 +32,10 @@ class ParSpec extends SparkTestBase {
     assert(Par.adaptiveParts(4L * 1024 * 1024 + 1) == 2)
     assert(Par.adaptiveParts(40L * 1000 * 1000) == 10)
     assert(Par.adaptiveParts(1L << 40) > 100000) // grows with scale, uncapped till 2^20
-    assert(Par.adaptiveParts(Long.MaxValue / 32, 16) == (1 << 20)) // hard ceiling
+    assert(Par.adaptiveParts(Long.MaxValue / 32) == (1 << 20)) // hard ceiling
+    // rows × 16 B would overflow a Long here: the width must still hit the ceiling
+    assert(Par.adaptiveParts(Long.MaxValue / 16 + 1) == (1 << 20))
+    assert(Par.adaptiveParts(Long.MaxValue) == (1 << 20))
   }
 
   test("star steps: explicit width changes neither rows nor the 2-exchange shape") {
@@ -41,9 +44,10 @@ class ParSpec extends SparkTestBase {
     for (step <- Seq[(org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame](
         (e, n) => graft.api.TextDedup.largeStarStep(e, n),
         (e, n) => graft.api.TextDedup.smallStarStep(e, n))) {
-      val default = step(edges, 0).orderBy("u", "v").collect().toSeq
+      // the width starLabels would derive (1 at this size) vs a pinned 2
+      val derived = step(edges, Par.adaptiveParts(edges.count())).orderBy("u", "v").collect().toSeq
       val pinned = step(edges, 2)
-      assert(pinned.orderBy("u", "v").collect().toSeq == default)
+      assert(pinned.orderBy("u", "v").collect().toSeq == derived)
       val plan = pinned.queryExecution.executedPlan.toString
       val hashEx = "Exchange hashpartitioning".r.findAllIn(plan).size
       assert(hashEx == 2, s"expected 2 hash exchanges with explicit width, got $hashEx\n" + plan)

@@ -257,15 +257,19 @@ class PlanAuditSpec extends SparkTestBase {
       .select(org.apache.spark.sql.functions.greatest(col("u"), col("v")).as("u"),
         org.apache.spark.sql.functions.least(col("u"), col("v")).as("v"))
       .localCheckpoint() // round inputs are checkpointed RDDs, as in the operator
+    // the width starLabels derives from the live edge count: 1 at this
+    // size, so both exchanges plan as SinglePartition (ParSpec pins the
+    // same two exchanges as hashpartitioning at an explicit width of 2)
+    val n = Par.adaptiveParts(edges.count())
     for ((step, p) <- Seq(
-        "largeStar" -> graft.api.TextDedup.largeStarStep(edges),
-        "smallStar" -> graft.api.TextDedup.smallStarStep(edges))) {
+        "largeStar" -> graft.api.TextDedup.largeStarStep(edges, n),
+        "smallStar" -> graft.api.TextDedup.smallStarStep(edges, n))) {
       // audit the pre-execution plan (like the suite's other exchange
       // counts): an EXECUTED AdaptiveSparkPlan prints final + initial
       // trees and double-counts every node
       val plan = p.queryExecution.executedPlan.toString
-      val hashEx = "Exchange hashpartitioning".r.findAllIn(plan).size
-      assert(hashEx == 2, s"$step: expected 2 hash exchanges (window + dedup), got $hashEx\n" + plan)
+      val ex = "Exchange (hashpartitioning|SinglePartition)".r.findAllIn(plan).size
+      assert(ex == 2, s"$step: expected 2 exchanges (window + dedup), got $ex\n" + plan)
       assert(!plan.contains("Exchange rangepartitioning"), s"$step planned a range exchange\n" + plan)
       assert(plan.contains("Window"), s"$step lost its window\n" + plan)
       assert("HashAggregate".r.findAllIn(plan).size >= 2,

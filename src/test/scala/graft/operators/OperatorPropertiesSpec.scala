@@ -255,14 +255,6 @@ class OperatorPropertiesSpec extends SparkTestBase {
     assert(chunks.map(_._1).toSet == docs.keySet, "every doc must produce chunks")
   }
 
-  test("connectedComponents on an EMPTY pair graph: every doc is its own singleton cluster") {
-    val docs = Tables.documents(spark, sfDir)
-    val noPairs = docs.select(col("doc_id").as("id_a"), col("doc_id").as("id_b")).limit(0)
-    val cc = graft.api.TextDedup.connectedComponents(noPairs, docs, "doc_id").collect()
-    assert(cc.length == docs.count())
-    assert(cc.forall(r => r.getAs[Long]("id") == r.getAs[Long]("cluster_id")))
-  }
-
   // reference labeling for the CC tests: driver-side union-find
   private def unionFind(n: Long, edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val parent = scala.collection.mutable.Map((0L until n).map(i => i -> i): _*)
@@ -301,11 +293,6 @@ class OperatorPropertiesSpec extends SparkTestBase {
       .collect()
     assert(got.length == n)
     assert(got.forall(_.getAs[Long]("cluster_id") == 0L), "all nodes must label to 0")
-    // and the diameter-bounded propagation variant must REFUSE loudly
-    // rather than return wrong labels on the same graph
-    intercept[IllegalStateException] {
-      graft.api.TextDedup.connectedComponents(pairs, ids, "doc_id", maxRounds = 20).collect()
-    }
   }
 
   test("connectedComponentsStar on an EMPTY pair graph: singletons, no rounds") {
@@ -1135,54 +1122,6 @@ class OperatorPropertiesSpec extends SparkTestBase {
     assert(out.toSeq == Seq((10L, 94.5)), out.mkString(","))
   }
 
-  test("quantileBinsApprox: same shape/total as exact; per-bucket counts within rank-error of even") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    val n = docs.filter(col("n_chars").isNotNull).count()
-    def bins(out: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
-      out.select(col("bucket"), col("cnt")).as[(Long, Long)].collect().toSeq.sortBy(_._1)
-    val exact = bins(graft.api.Profiler.quantileBins(docs, "n_chars", 10))
-    val approx = bins(graft.api.Profiler.quantileBinsApprox(docs, "n_chars", 10,
-      accuracy = 1000000))
-    // identical shape: all 10 buckets present, every row assigned once
-    assert(approx.map(_._1) == (1L to 10L) && exact.map(_._1) == (1L to 10L))
-    assert(approx.map(_._2).sum == n && exact.map(_._2).sum == n)
-    // at uncompressed accuracy the only divergence is the cut convention
-    // (data value vs interpolation) — each bucket within a small band of
-    // the exact fit
-    approx.zip(exact).foreach { case ((b, ca), (_, ce)) =>
-      assert(math.abs(ca - ce) <= math.max(4L, n / 50),
-        s"bucket $b: approx $ca vs exact $ce")
-    }
-  }
-
-  test("winsorizeApprox: NULL-preserving clamp into approx cuts; interior values untouched vs exact") {
-    import spark.implicits._
-    val docs = Tables.documents(spark, sfDir)
-    val exact = graft.api.Profiler.winsorize(docs, "n_chars", 0.1, 0.9)
-      .select(col("doc_id"), col("value_w"), col("clipped_low") + col("clipped_high"))
-      .as[(Long, Option[Double], Option[Long])].collect()
-      .map { case (k, v, c) => k -> ((v, c)) }.toMap
-    val approx = graft.api.Profiler.winsorizeApprox(docs, "n_chars", 0.1, 0.9,
-      accuracy = 1000000)
-      .select(col("doc_id"), col("value_w"), col("clipped_low") + col("clipped_high"))
-      .as[(Long, Option[Double], Option[Long])].collect()
-    assert(approx.length == exact.size)
-    approx.foreach { case (id, vw, clipped) =>
-      val (evw, eclipped) = exact(id)
-      // a row BOTH forms leave unclipped carries the identical original
-      // double; divergence is confined to rows at least one form clipped
-      // (the cut-convention sliver at the tails)
-      if (clipped.contains(0L) && eclipped.contains(0L))
-        assert(vw == evw, s"doc $id: unclipped values differ ($vw vs $evw)")
-      assert(vw.isDefined == evw.isDefined, s"doc $id: NULL handling diverged")
-    }
-    // the clamp engaged on both tails (the fixture spans enough range)
-    val flags = graft.api.Profiler.winsorizeApprox(docs, "n_chars", 0.1, 0.9)
-      .agg(sum("clipped_low"), sum("clipped_high")).head()
-    assert(flags.getLong(0) > 0 && flags.getLong(1) > 0, flags.toString)
-  }
-
   test("saltedJoin ≡ plain join (inner multiset, left-outer nulls); rejects replicating join types") {
     import spark.implicits._
     val ev = Tables.events(spark, sfDir).select("event_id", "user_id", "value")
@@ -1209,35 +1148,6 @@ class OperatorPropertiesSpec extends SparkTestBase {
       .groupBy("user_id").agg(countDistinct(col("__salt")).as("n"))
       .agg(min(col("n"))).head().getLong(0)
     assert(spread > 1, s"hot keys not spread: min distinct salts = $spread")
-  }
-
-  test("madOutliersApprox flags the hand-model outlier; stays in the exact ±20%-k sandwich") {
-    import spark.implicits._
-    // same hand model as the exact test; approx median is the DATA value
-    // 5 (no interpolation), so the outlier's abs_dev is |100−5| = 95
-    val df = ((1 to 9).map(i => (i.toLong, Some(i.toDouble)))
-      :+ ((10L, Some(100.0))) :+ ((11L, Option.empty[Double]))).toDF("id", "v")
-    val approx = graft.api.Profiler.madOutliersApprox(df, "v", k = 3.0, accuracy = 10000)
-      .select("id", "abs_dev").as[(Long, Double)].collect()
-    assert(approx.toSeq == Seq((10L, 95.0)), approx.mkString(","))
-    // larger skewed corpus (n_chars over documents): at BOTH an
-    // uncompressed accuracy and the coarse accuracy a 100 TB run would
-    // use, the approx flag set stays sandwiched between the exact
-    // operator at k·1.2 and k·0.8 — rank error (and the
-    // data-value-vs-interpolated median convention) shifts the cut
-    // slightly, it cannot invent or lose far outliers
-    val docs = Tables.documents(spark, sfDir)
-    def ids(out: org.apache.spark.sql.DataFrame): Set[Long] =
-      out.select("doc_id").as[Long].collect().toSet
-    val tight = ids(graft.api.Profiler.madOutliers(docs, "n_chars", k = 2.4))
-    val wide = ids(graft.api.Profiler.madOutliers(docs, "n_chars", k = 1.6))
-    for (acc <- Seq(100, 1000000)) {
-      val flagged = ids(graft.api.Profiler.madOutliersApprox(docs, "n_chars", k = 2.0,
-        accuracy = acc))
-      assert(tight.subsetOf(flagged) && flagged.subsetOf(wide),
-        s"accuracy=$acc: approx flag set not between k·1.2 and k·0.8 exact sets: " +
-          s"${(tight -- flagged).size} missing, ${(flagged -- wide).size} extra")
-    }
   }
 
   test("pmiCollocations ≡ hand formula; always-together pair outranks frequent-but-independent") {
