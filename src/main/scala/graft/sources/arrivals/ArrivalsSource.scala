@@ -109,6 +109,10 @@ final case class ArrivalsOptions(
     timeZone: String,
     listingRefreshTriggers: Int) {
   require(path.nonEmpty, "option 'path' is required")
+  // an empty suffix makes every name a completed one (isCandidate admits
+  // nothing) and every rename target equal to its source
+  require(fileSuffix.nonEmpty, "fileSuffix must be non-empty")
+  require(maxFilesPerTrigger > 0, "maxFilesPerTrigger must be > 0")
   require(Set("OLDEST", "YOUNGEST", "RANDOM").contains(consumeOrder),
     s"consumeOrder must be OLDEST|YOUNGEST|RANDOM, got '$consumeOrder'")
   Charset.forName(inputCharset) // fail fast on bad charset
@@ -233,16 +237,22 @@ object ArrivalsUtil {
     ConsumeOrder.order(listCandidates(fs, dirPath, opts, ignoreRe), opts.consumeOrder)
       .take(opts.maxFilesPerTrigger)
 
-  /** Round-robin partition slicing (metadata rows are tiny; 32 slices
-    * bound scheduler overhead). */
-  def slice(files: Seq[FileMeta], opts: ArrivalsOptions): Array[InputPartition] =
-    if (files.isEmpty) Array.empty
-    else {
-      val slices = math.min(files.size, 32)
-      files.zipWithIndex.groupBy(_._2 % slices).values
-        .map(g => ArrivalsPartition(g.map(_._1), opts.inputCharset, opts.timeZone): InputPartition)
-        .toArray
+  /** Split a batch into `min(files, defaultParallelism)` contiguous runs
+    * in admission order (one partition with no active session) — the
+    * session's own width, the rule `Par.spread` follows. Metadata rows are
+    * tiny, so each scan task costs its scheduling, not its rows: a fixed
+    * 32 slices on a 4-core session spent 100-120 ms of a ~410 ms trigger
+    * on the scan stage and made the downstream shuffle fetch 32 map
+    * outputs. */
+  def slice(files: Seq[FileMeta], opts: ArrivalsOptions): Array[InputPartition] = {
+    val all = files.toIndexedSeq
+    val n = all.size
+    val width = SparkSession.getActiveSession.map(_.sparkContext.defaultParallelism).getOrElse(1)
+    val k = math.min(n, width)
+    Array.tabulate[InputPartition](k) { i =>
+      ArrivalsPartition(all.slice(i * n / k, (i + 1) * n / k), opts.inputCharset, opts.timeZone)
     }
+  }
 
   val readerFactory: PartitionReaderFactory = new PartitionReaderFactory {
     override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
@@ -347,8 +357,12 @@ final case class ArrivalsOffset(seq: Long, files: Seq[FileMeta],
 }
 
 object ArrivalsOffset {
+  private def escaped(c: Char): Boolean =
+    c == '\\' || c == '\n' || c == '\r' || c == '\t' || c == '\u0001'
+  // ordinary paths contain none of the escaped characters: return them as is
   def esc(s: String): String =
-    s.flatMap {
+    if (!s.exists(escaped)) s
+    else s.flatMap {
       case '\\' => "\\\\"; case '\n' => "\\n"; case '\r' => "\\r"
       case '\t' => "\\t"; case '\u0001' => "\\1"; case c => c.toString
     }
@@ -416,6 +430,11 @@ class ArrivalsMicroBatchStream(opts: ArrivalsOptions) extends MicroBatchStream
   // and renamed once the engine moves past them.
   @volatile private var lastOffset: ArrivalsOffset = ArrivalsOffset(0L, Nil)
   @volatile private var offeredAny: Boolean = false
+  // The last offset whose renames succeeded on this instance: the engine's
+  // commit(end) for the batch latestOffset() already renamed, and every
+  // idle trigger's latestOffset(), skip it instead of re-statting each
+  // file. A fresh instance (the restart replay) starts without one.
+  @volatile private var renamed: Option[ArrivalsOffset] = None
 
   // Startup canary (ref R9, CephFSEventReader.java:42-66): directory must
   // exist, be a directory, and be read-write — probed with a real file.
@@ -525,7 +544,7 @@ class ArrivalsMicroBatchStream(opts: ArrivalsOptions) extends MicroBatchStream
     // unrenamed indefinitely on a quiet directory.) Replay stays safe
     // either way: rows are materialized from the offset log, never from
     // re-reading the files.
-    renameConsumed(lastOffset.files)
+    renameOnce(lastOffset)
     val p = pending()
     if (p.isEmpty) lastOffset
     else {
@@ -590,8 +609,16 @@ class ArrivalsMicroBatchStream(opts: ArrivalsOptions) extends MicroBatchStream
 
   /** Commit-by-rename (ref R5) AFTER durable checkpoint commit — idempotent
     * for replay, loud for genuine name collisions. */
-  override def commit(end: Offset): Unit =
-    renameConsumed(end.asInstanceOf[ArrivalsOffset].files)
+  override def commit(end: Offset): Unit = renameOnce(end.asInstanceOf[ArrivalsOffset])
+
+  /** Rename `o`'s files unless this instance already did. Compares the
+    * fields, not references: the engine commits a copy deserialized from
+    * its offset log (and `Offset.equals` would render both to json). */
+  private def renameOnce(o: ArrivalsOffset): Unit =
+    if (!renamed.exists(r => r.seq == o.seq && r.files == o.files && r.watermark == o.watermark)) {
+      renameConsumed(o.files)
+      renamed = Some(o)
+    }
 
   /** Commit renames: sequential on the driver for normal batches; for
     * very large commits (≥ executorRenameThreshold files) the renames

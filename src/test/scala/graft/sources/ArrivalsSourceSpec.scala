@@ -1,12 +1,15 @@
 package graft.sources
 
 import java.io.File
+import java.net.URI
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
 import graft.sources.arrivals._
+import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.connector.read.streaming.{Offset => SOffset}
@@ -260,6 +263,54 @@ class ArrivalsSourceSpec extends SparkTestBase {
     assert(new File(dir, "x.COMPLETED").exists())
   }
 
+  test("slicing: one contiguous partition per core, in admission order, each file once") {
+    val st = stream(tmpDir())
+    val files = (1 to 2000).map(i => FileMeta(f"file:/in/f$i%05d", 2000L - i))
+    val parts = st.planInputPartitions(ArrivalsOffset(0, Nil), ArrivalsOffset(1, files))
+      .map(_.asInstanceOf[ArrivalsPartition].files)
+    val widths = parts.map(_.size).toSeq
+    assert(widths.size == spark.sparkContext.defaultParallelism, widths)
+    val flat = parts.toSeq.flatten
+    val firstMismatch = flat.zip(files).indexWhere { case (a, b) => a != b }
+    assert(flat.size == files.size && firstMismatch == -1)
+    val one = st.planInputPartitions(ArrivalsOffset(0, Nil), ArrivalsOffset(1, files.take(1)))
+    assert(one.length == 1)
+  }
+
+  test("rename once: commit(A) after latestOffset renamed A makes no filesystem call; " +
+      "a fresh instance's commit still renames") {
+    val dir = tmpDir()
+    write(dir, "a1", "x", 1704000000000L); write(dir, "a2", "x", 1704000001000L)
+    spark.conf.set("fs.countfs.impl", classOf[CountingFileSystem].getName)
+    spark.conf.set("fs.countfs.impl.disable.cache", "true")
+    try {
+      def open() = new ArrivalsMicroBatchStream(ArrivalsOptions.from(
+        Map("path" -> s"countfs://${dir.getAbsolutePath}")))
+      val calls = CountingFileSystem.calls
+      val st = open()
+      val a = st.latestOffset().asInstanceOf[ArrivalsOffset]
+      assert(a.files.map(_.name) == Seq("a1", "a2"))
+      assert(a.files.forall(_.path.startsWith("countfs:")), a.files.toString)
+      write(dir, "b1", "x", 1704000002000L)
+      val b = st.latestOffset().asInstanceOf[ArrivalsOffset] // renames A, offers B
+      assert(b.files.map(_.name) == Seq("b1"))
+      assert(new File(dir, "a1.COMPLETED").exists() && new File(dir, "a2.COMPLETED").exists())
+      // the engine commits A with a copy read back from its offset log
+      val before = calls.get
+      st.commit(st.deserializeOffset(a.json()))
+      assert(calls.get == before, "commit re-statted a batch latestOffset already renamed")
+      // a fresh instance (the restart replay) has renamed nothing yet
+      val fresh = open()
+      val beforeFresh = calls.get
+      fresh.commit(fresh.deserializeOffset(b.json()))
+      assert(calls.get > beforeFresh)
+      assert(new File(dir, "b1.COMPLETED").exists() && !new File(dir, "b1").exists())
+    } finally {
+      spark.conf.unset("fs.countfs.impl")
+      spark.conf.unset("fs.countfs.impl.disable.cache")
+    }
+  }
+
   test("commit collision: source AND dest exist → IllegalStateException (ref semantics)") {
     val dir = tmpDir()
     write(dir, "x", "x", 1704000000000L)
@@ -290,6 +341,9 @@ class ArrivalsSourceSpec extends SparkTestBase {
     assert(ArrivalsOffset.fromJson(off.json()) == off)
     // the offset log is line-oriented: a multi-line offset corrupts it
     assert(!off.json().contains('\n'))
+    // ordinary paths take the no-escape fast path and still round-trip
+    val clean = ArrivalsOffset(8, (1 to 2000).map(i => FileMeta(f"file:/in/f$i%05d.dat", i.toLong)))
+    assert(ArrivalsOffset.fromJson(clean.json()) == clean)
   }
 
   test("empty-dir latestOffset is stable (no spurious batches)") {
@@ -323,6 +377,14 @@ class ArrivalsSourceSpec extends SparkTestBase {
     assertThrows[IllegalArgumentException](ArrivalsOptions.from(Map.empty))
     assertThrows[IllegalArgumentException](
       ArrivalsOptions.from(Map("path" -> "/tmp", "consumeOrder" -> "NEWEST")))
+    // options under which the stream would idle silently: no file is ever
+    // admitted, or every name counts as completed
+    Seq("0", "-1").foreach { n =>
+      assertThrows[IllegalArgumentException](
+        ArrivalsOptions.from(Map("path" -> "/tmp", "maxFilesPerTrigger" -> n)))
+    }
+    assertThrows[IllegalArgumentException](
+      ArrivalsOptions.from(Map("path" -> "/tmp", "fileSuffix" -> "")))
     intercept[Exception](ArrivalsOptions.from(Map("path" -> "/tmp", "ignorePattern" -> "[")))
     intercept[Exception](ArrivalsOptions.from(Map("path" -> "/tmp", "inputCharset" -> "NOPE")))
     intercept[Exception](ArrivalsOptions.from(Map("path" -> "/tmp", "timeZone" -> "Mars/Olympus")))
@@ -517,9 +579,9 @@ class ArrivalsSourceSpec extends SparkTestBase {
     assert(rows.length == 2000, s"expected 2000 rows, got ${rows.length}")
     assert(rows.map(_.getAs[String]("file_name")).distinct.length == 2000, "duplicates emitted")
     // OLDEST ordering is a BATCH-level contract: each 500-file trigger
-    // admits exactly the next 500 oldest files (within a batch, the 32
-    // partitions append to the sink in parallel — row order there is not
-    // a contract)
+    // admits exactly the next 500 oldest files (within a batch, the
+    // defaultParallelism partitions append to the sink in parallel — row
+    // order there is not a contract)
     val names = rows.map(_.getAs[String]("file_name")).toSeq
     names.grouped(500).zipWithIndex.foreach { case (chunk, i) =>
       val expected = (i * 500 + 1 to i * 500 + 500).map(n => f"f$n%05d").toSet
@@ -660,4 +722,21 @@ class ArrivalsSourceSpec extends SparkTestBase {
     st.commit(off)
     assert(dir.listFiles().count(_.getName.endsWith(".COMPLETED")) == 20)
   }
+}
+
+/** The local filesystem under the test-only `countfs` scheme, counting
+  * the calls a listing or rename pass makes. Hadoop instantiates it by
+  * reflection, so the counter is global. */
+class CountingFileSystem extends RawLocalFileSystem {
+  override def getUri: URI = URI.create("countfs:///")
+  override def getScheme: String = "countfs"
+  private def counted[T](body: => T): T = { CountingFileSystem.calls.incrementAndGet(); body }
+  override def exists(p: Path): Boolean = counted(super.exists(p))
+  override def getFileStatus(p: Path): FileStatus = counted(super.getFileStatus(p))
+  override def rename(src: Path, dst: Path): Boolean = counted(super.rename(src, dst))
+  override def listStatus(p: Path): Array[FileStatus] = counted(super.listStatus(p))
+}
+
+object CountingFileSystem {
+  val calls = new AtomicLong()
 }
