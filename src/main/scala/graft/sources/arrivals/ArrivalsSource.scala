@@ -8,7 +8,7 @@ import java.time.Instant
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -74,7 +74,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * class. The filesystem is resolved
   * through the active SparkSession's Hadoop configuration, so `path` may
   * be any scheme the session is configured for (file://, hdfs://, s3a://;
-  * a CephFS mount is just file:// as in the reference, README.md:3).
+  * a CephFS mount is just file:// as in the reference, README.md:3),
+  * minus Hadoop's client-side checksum layer (`ArrivalsUtil.fileSystem`):
+  * on file:// the source lists and renames through `RawLocalFileSystem`.
   * Backpressure is `maxFilesPerTrigger` admission control — Structured
   * Streaming pulls per trigger, so the reference's channel-full
   * exponential backoff (CephFsSource.java:149-160) has no analog.
@@ -211,6 +213,22 @@ object ArrivalsUtil {
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
 
+  /** The filesystem the source lists and renames through: `path`'s own,
+    * minus Hadoop's client-side checksum layer (`RawLocalFileSystem` for
+    * file:, any other filesystem unchanged). The source never reads file
+    * bytes, so that layer guards nothing here, while its `rename`
+    * re-stats both paths and probes for `.name.crc` sidecars: about 3×
+    * the raw cost per file (`RenameBench`). A sidecar left by a
+    * Hadoop-client writer now stays behind when its file is renamed; it
+    * is dot-hidden, so never a candidate, and the reference's
+    * `java.io.File` rename (CephFSEventReader.java:196-207) leaves it the
+    * same way. */
+  def fileSystem(path: Path, conf: Configuration): FileSystem =
+    path.getFileSystem(conf) match {
+      case c: ChecksumFileSystem => c.getRawFileSystem
+      case fs => fs
+    }
+
   /** Candidate predicate (ref R2, CephFSEventReader.java:111-121) with
     * ignorePattern enforced as documented (fixing the dead config). */
   def isCandidate(opts: ArrivalsOptions, ignoreRe: Option[scala.util.matching.Regex])(
@@ -304,7 +322,7 @@ class ArrivalsTable(opts: ArrivalsOptions) extends Table with SupportsRead {
 class ArrivalsBatch(opts: ArrivalsOptions) extends Batch {
   override def planInputPartitions(): Array[InputPartition] = {
     val dirPath = new Path(opts.path)
-    val fs = dirPath.getFileSystem(ArrivalsUtil.hadoopConf())
+    val fs = ArrivalsUtil.fileSystem(dirPath, ArrivalsUtil.hadoopConf())
     val ignoreRe = if (opts.ignorePattern.nonEmpty) Some(opts.ignorePattern.r) else None
     ArrivalsUtil.slice(
       ArrivalsUtil.listPending(fs, dirPath, opts, ignoreRe), opts)
@@ -398,7 +416,7 @@ object ArrivalsOffset {
 class ArrivalsMicroBatchStream(opts: ArrivalsOptions) extends MicroBatchStream
     with org.apache.spark.sql.connector.read.streaming.ReportsSourceMetrics {
   private val dirPath = new Path(opts.path)
-  private val fs: FileSystem = dirPath.getFileSystem(ArrivalsUtil.hadoopConf())
+  private val fs: FileSystem = ArrivalsUtil.fileSystem(dirPath, ArrivalsUtil.hadoopConf())
   private val ignoreRe = if (opts.ignorePattern.nonEmpty) Some(opts.ignorePattern.r) else None
 
   // Operational counters (ref R8 — the SourceCounter accept/append
@@ -642,7 +660,7 @@ class ArrivalsMicroBatchStream(opts: ArrivalsOptions) extends MicroBatchStream
         var pfs: FileSystem = null
         it.foreach { p =>
           if (firstErr.isEmpty) {
-            if (pfs == null) pfs = new Path(p).getFileSystem(confSer.value)
+            if (pfs == null) pfs = ArrivalsUtil.fileSystem(new Path(p), confSer.value)
             ArrivalsUtil.renameOne(pfs, p, suffix) match {
               case Left(e) => firstErr = Some(e)
               case Right(r) => if (r) renamed += 1

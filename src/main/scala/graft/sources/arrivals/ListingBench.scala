@@ -37,7 +37,7 @@ object ListingBench {
     val opts = ArrivalsOptions.from(Map(
       "path" -> dir.toString, "maxFilesPerTrigger" -> cap.toString))
     val dirPath = new org.apache.hadoop.fs.Path(dir.toString)
-    val fs = dirPath.getFileSystem(ArrivalsUtil.hadoopConf())
+    val fs = ArrivalsUtil.fileSystem(dirPath, ArrivalsUtil.hadoopConf())
 
     // 1. raw full-listing cost (warm + median of 3)
     def listOnce(): Double = {

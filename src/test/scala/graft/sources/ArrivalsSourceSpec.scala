@@ -9,7 +9,7 @@ import scala.jdk.CollectionConverters._
 
 import graft.SparkTestBase
 import graft.sources.arrivals._
-import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path, RawLocalFileSystem}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.connector.read.streaming.{Offset => SOffset}
@@ -309,6 +309,72 @@ class ArrivalsSourceSpec extends SparkTestBase {
       spark.conf.unset("fs.countfs.impl")
       spark.conf.unset("fs.countfs.impl.disable.cache")
     }
+  }
+
+  test("raw handle: file: paths resolve past the checksum layer; a file with a .crc " +
+      "sidecar is offered once and renamed on both rename paths, the sidecar never emitted") {
+    val conf = spark.sessionState.newHadoopConf()
+    val fsOf = (p: String) => ArrivalsUtil.fileSystem(new Path(p), conf)
+    assert(!fsOf(tmpDir().getAbsolutePath).isInstanceOf[ChecksumFileSystem])
+    conf.set("fs.countfs.impl", classOf[CountingFileSystem].getName)
+    conf.set("fs.countfs.impl.disable.cache", "true")
+    assert(fsOf(s"countfs://${tmpDir().getAbsolutePath}").isInstanceOf[CountingFileSystem])
+    val local = FileSystem.getLocal(conf) // Hadoop's checksummed client writer
+    Seq("5000" -> "driver", "1" -> "fanout").foreach { case (threshold, label) =>
+      val dir = tmpDir()
+      val out = local.create(new Path(dir.getAbsolutePath, "w1"), false)
+      out.write("x".getBytes("UTF-8")); out.close()
+      assert(new File(dir, ".w1.crc").exists(), "LocalFileSystem wrote no sidecar")
+      val rows = runStream(dir, s"t_crc_$label", Map("executorRenameThreshold" -> threshold),
+        awaitRenamed = Seq("w1.COMPLETED")).collect()
+      assert(rows.map(_.getAs[String]("file_name")).toSeq == Seq("w1"), label)
+      assert(!new File(dir, "w1").exists(), label)
+      // a raw rename moves the file alone, as the reference's java.io.File one does
+      assert(new File(dir, ".w1.crc").exists(), label)
+      assert(!new File(dir, ".w1.COMPLETED.crc").exists(), label)
+    }
+  }
+
+  /** The rows a batch emits, read back through the partition reader. */
+  private def emitted(st: ArrivalsMicroBatchStream, start: ArrivalsOffset,
+      end: ArrivalsOffset): Seq[String] =
+    st.planInputPartitions(start, end).toSeq.flatMap { p =>
+      val r = new ArrivalsPartitionReader(p.asInstanceOf[ArrivalsPartition])
+      Iterator.continually(r).takeWhile(_.next()).map(_.get().getUTF8String(0).toString).toSeq
+    }
+
+  test("a file deleted between offer and commit: its row still comes from the offset, " +
+      "commit does not throw, and it counts as neither a failure nor a rename") {
+    Seq("5000", "1").foreach { threshold => // driver path, then the fan-out
+      val dir = tmpDir()
+      write(dir, "keep", "x", 1704000000000L)
+      val gone = write(dir, "gone", "x", 1704000001000L)
+      val st = stream(dir, Map("executorRenameThreshold" -> threshold))
+      val off = st.latestOffset().asInstanceOf[ArrivalsOffset]
+      assert(off.files.map(_.name) == Seq("keep", "gone"))
+      assert(gone.delete())
+      assert(emitted(st, ArrivalsOffset(0, Nil), off) == Seq("keep", "gone"))
+      st.commit(off)
+      val m = st.metrics(java.util.Optional.empty()).asScala
+      assert(m("renameFailures") == "0" && m("filesRenamed") == "1", s"threshold $threshold: $m")
+      assert(new File(dir, "keep.COMPLETED").exists())
+      assert(!new File(dir, "gone").exists() && !new File(dir, "gone.COMPLETED").exists())
+    }
+  }
+
+  test("legacy offsets: scheme-less paths deserialize to file: URIs, and a stream " +
+      "restored from one does not offer its files again") {
+    val dir = tmpDir()
+    val old = write(dir, "old1", "x", 1704000000000L)
+    write(dir, "new1", "x", 1704000001000L)
+    val legacy = ArrivalsOffset(3, Seq(FileMeta(old.getAbsolutePath, 1704000000000L)))
+    assert(!legacy.json().contains("file:"))
+    val st = stream(dir)
+    val restored = st.deserializeOffset(legacy.json()).asInstanceOf[ArrivalsOffset]
+    assert(restored.files.map(_.path) == Seq(s"file:${old.getAbsolutePath}"))
+    val next = st.latestOffset().asInstanceOf[ArrivalsOffset]
+    assert(next.seq == 4 && next.files.map(_.name) == Seq("new1"), next.toString)
+    assert(new File(dir, "old1.COMPLETED").exists() && !old.exists())
   }
 
   test("commit collision: source AND dest exist → IllegalStateException (ref semantics)") {
