@@ -161,7 +161,7 @@ object Classifier {
       .filter(length(col("term")) > 0)
     val tf = toks.groupBy("id", "actual", "term").agg(count(lit(1)).as("tf"))
     val classTerm = toks.groupBy("actual", "term").agg(count(lit(1)).as("ct"))
-      .localCheckpoint()
+      .transform(Ckpt.apply)
     val classTotals = classTerm.groupBy(col("actual").as("cls"))
       .agg(sum("ct").as("n_c"))
     val vocabN = classTerm.select("term").distinct()

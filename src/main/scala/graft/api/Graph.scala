@@ -277,7 +277,8 @@ object Graph {
     *
     * Scale shape: each round localCheckpoints the node-sized rank frame
     * (an unbounded round count would otherwise grow the lineage without
-    * limit — the CC-operator discipline) and reads back a SINGLE 1-row
+    * limit — the CC-operator discipline), drops the round before it once
+    * the delta has read it, and reads back a SINGLE 1-row
     * max-|delta| aggregate (stat-sized driver traffic, the ML-fit
     * exemption class; never node-count-sized). Successive-iterate L∞
     * distance < tol bounds the distance to the true fixpoint by
@@ -295,20 +296,23 @@ object Graph {
       validateIdUniverse(pairs, srcCol, dstCol, allIds, idCol, "pageRankConverged")
     // unlike the unrolled form, every round re-executes against the edge
     // subtree from a fresh plan, so the one-time materialization wins here
-    val withDeg = edgesWithDegree(pairs, srcCol, dstCol).localCheckpoint()
-    var ranks = initialRanks(allIds, idCol).localCheckpoint()
+    val withDeg = Ckpt(edgesWithDegree(pairs, srcCol, dstCol))
+    var ranks = Ckpt(initialRanks(allIds, idCol))
     var iters = 0
     var converged = false
     while (iters < maxIterations && !converged) {
-      val next = rankStep(withDeg, ranks, damping).localCheckpoint()
+      val next = Ckpt(rankStep(withDeg, ranks, damping))
       val deltaRow = next
         .join(ranks.select(col("id"), col("rank").as("__prev")), "id")
         .agg(max(abs(col("rank") - col("__prev"))).as("d")).head()
       // empty graph → null max → nothing left to converge
       converged = deltaRow.isNullAt(0) || deltaRow.getDouble(0) < tol
+      Ckpt.drop(ranks) // next is materialized and the delta has read ranks
       ranks = next
       iters += 1
     }
+    // the returned ranks are their own checkpoint: nothing reads the edges now
+    Ckpt.drop(withDeg)
     (ranks, iters)
   }
 

@@ -948,7 +948,7 @@ object TextAnalysis {
     val counts = toks.groupBy("term").agg(
       count(lit(1)).as("cr"),
       sum(when(col("__is_tgt"), 1L).otherwise(0L)).as("ct"))
-      .localCheckpoint()
+      .transform(Ckpt.apply)
     // totals + vocab size: exact longs off the vocab-sized count frame
     val tot = counts.agg(sum(col("cr")).as("nr"), sum(col("ct")).as("nt"),
       count(lit(1)).as("v"))

@@ -65,13 +65,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * Listing is CURSORED, not per-trigger: one full listing builds an
   * ordered in-memory backlog that subsequent triggers drain with zero
   * listing calls (a million-file backlog costs ONE directory scan per
-  * drain cycle, not one per trigger). `listingRefreshTriggers` opts into
-  * mid-drain refresh listings that admit every candidate not already
-  * queued or in flight — including clock-skewed/late-copied gap files —
-  * and the drained-backlog full list covers the refresh-off case; a
-  * (mtime, name) watermark persisted in every offset records the cursor
-  * position. The `listingCalls` source metric exposes the complexity
-  * class. The filesystem is resolved
+  * drain cycle, not one per trigger). Files that arrive mid-drain —
+  * clock-skewed or late-copied gap files included — are admitted by the
+  * next full listing, when the backlog drains; a (mtime, name) watermark
+  * persisted in every offset records the cursor position. The
+  * `listingCalls` source metric exposes the complexity class. Commit
+  * renames run sequentially on the driver, as the reference's do
+  * (CephFSEventReader.java:196-207). The filesystem is resolved
   * through the active SparkSession's Hadoop configuration, so `path` may
   * be any scheme the session is configured for (file://, hdfs://, s3a://;
   * a CephFS mount is just file:// as in the reference, README.md:3),
@@ -107,9 +107,7 @@ final case class ArrivalsOptions(
     inputCharset: String,
     consumeOrder: String,
     maxFilesPerTrigger: Int,
-    executorRenameThreshold: Int,
-    timeZone: String,
-    listingRefreshTriggers: Int) {
+    timeZone: String) {
   require(path.nonEmpty, "option 'path' is required")
   // an empty suffix makes every name a completed one (isCandidate admits
   // nothing) and every rename target equal to its source
@@ -119,9 +117,7 @@ final case class ArrivalsOptions(
     s"consumeOrder must be OLDEST|YOUNGEST|RANDOM, got '$consumeOrder'")
   Charset.forName(inputCharset) // fail fast on bad charset
   if (ignorePattern.nonEmpty) ignorePattern.r // fail fast on bad regex
-  require(executorRenameThreshold > 0, "executorRenameThreshold must be > 0")
   java.time.ZoneId.of(timeZone) // fail fast on bad zone id
-  require(listingRefreshTriggers >= 0, "listingRefreshTriggers must be >= 0")
 }
 
 object ArrivalsOptions {
@@ -135,23 +131,13 @@ object ArrivalsOptions {
       inputCharset = norm.getOrElse("inputcharset", "UTF-8"),
       consumeOrder = norm.getOrElse("consumeorder", "OLDEST").toUpperCase(java.util.Locale.ENGLISH),
       maxFilesPerTrigger = norm.getOrElse("maxfilespertrigger", "1000").toInt,
-      // commits at or above this many files fan the renames out to
-      // executors (driver-side sequential renames below it)
-      executorRenameThreshold = norm.getOrElse("executorrenamethreshold", "5000").toInt,
       // zone for the body CSV's rendered timestamp. The reference renders
       // with a default-zone Calendar (CephFSEventReader.java:230-235);
       // set this to the ingest host's zone for byte-fidelity with it.
       // Default stays UTC — the typed last_modified column is zoneless
       // either way (epoch micros).
-      timeZone = norm.getOrElse("timezone", "UTC"),
-      // with a backlog in hand the source does NOT re-list per trigger
-      // (the scale fix for million-file backlogs); >0 re-lists
-      // incrementally past the watermark every N drain triggers so
-      // mid-backlog arrivals are seen with bounded staleness. 0 (default)
-      // re-lists only when the backlog drains — the reference's own
-      // cached-listing-iterator semantics (CephFSEventReader.java:32-33).
-      listingRefreshTriggers = norm.getOrElse("listingrefreshtriggers", "0").toInt)
-    // backoff keys are inert (see warnInertOptions) but must still be
+      timeZone = norm.getOrElse("timezone", "UTC"))
+    // inert keys (see warnInertOptions) must still be
     // VALIDATED AND WARNED on every construction path — a user-supplied
     // schema bypasses inferSchema entirely, so neither can live there
     warnInertOptions(m).foreach(log.warn)
@@ -165,8 +151,16 @@ object ArrivalsOptions {
     * into a channel that can fill. A migrated reference config may still
     * carry them: accept and VALIDATE them (so a typo'd config still
     * fails fast) but warn that they are inert rather than silently
-    * absorbing or hard-rejecting the keys. */
+    * absorbing or hard-rejecting the keys.
+    *
+    * Two of the source's own former options are warned the same way: a
+    * config written for the executor rename fan-out or the mid-drain
+    * refresh listing still starts, but is told that the key does nothing. */
   private val backoffKeys = Seq("maxbackoffsleep", "backoffsleepincrement")
+  private val removedKeys = Seq(
+    "executorrenamethreshold" -> "commit renames always run sequentially on the driver",
+    "listingrefreshtriggers" ->
+      "files arriving mid-drain are admitted by the full listing taken when the backlog drains")
   def warnInertOptions(m: Map[String, String]): Seq[String] = {
     val norm = m.map { case (k, v) => k.toLowerCase(java.util.Locale.ENGLISH) -> v }
     backoffKeys.flatMap { k =>
@@ -176,22 +170,9 @@ object ArrivalsOptions {
           "but has no effect: the pull model has no channel to back off from " +
           "(use maxFilesPerTrigger + trigger cadence for admission control)"
       }
+    } ++ removedKeys.flatMap { case (k, why) =>
+      norm.get(k).map(v => s"arrivals option '$k'=$v has no effect: $why")
     }
-  }
-}
-
-/** Minimal serializable Hadoop-Configuration carrier (the Spark-internal
-  * one is private[spark]); Configuration itself is a Writable. */
-final class SerializableHadoopConf(@transient var value: Configuration)
-    extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
   }
 }
 
@@ -277,11 +258,10 @@ object ArrivalsUtil {
       new ArrivalsPartitionReader(partition.asInstanceOf[ArrivalsPartition])
   }
 
-  /** One commit-rename attempt — the single definition shared by the
-    * driver-sequential and executor-fan-out paths (ref R5 semantics:
-    * collision-loud, idempotent on replay). Returns Right(true) if a
-    * rename happened, Right(false) if already committed / vanished,
-    * Left(message) on collision or failed rename. */
+  /** One commit-rename attempt (ref R5 semantics: collision-loud,
+    * idempotent on replay). Returns Right(true) if a rename happened,
+    * Right(false) if already committed / vanished, Left(message) on
+    * collision or failed rename. */
   def renameOne(fs: FileSystem, path: String, suffix: String): Either[String, Boolean] = {
     val src = new Path(path)
     val dst = new Path(path + suffix)
@@ -483,16 +463,13 @@ class ArrivalsMicroBatchStream(opts: ArrivalsOptions) extends MicroBatchStream
   // reference's cached-listing-iterator (CephFSEventReader.java:
   // 32-33,107-110,123-124: re-lists ONLY when the iterator drains —
   // files arriving mid-drain wait for the next rescan) from RANDOM to
-  // every consumeOrder; `listingRefreshTriggers` bounds the staleness
-  // with periodic incremental refreshes past the watermark. Driver-only
-  // state, rebuilt from a fresh full listing after restart; replay
-  // safety is unaffected because rows always come from the offset log,
-  // never from this queue.
+  // every consumeOrder. Driver-only state, rebuilt from a fresh full
+  // listing after restart; replay safety is unaffected because rows
+  // always come from the offset log, never from this queue.
   private val backlog = scala.collection.mutable.Queue.empty[FileMeta]
-  // Largest (mtime, name) ever admitted to the backlog in this listing
-  // cycle — the incremental-refresh cursor, persisted in each offset.
+  // Largest (mtime, name) admitted to the backlog in this listing
+  // cycle — the cursor position, persisted in each offset.
   @volatile private var watermark: Option[(Long, String)] = None
-  private var triggersSinceListing = 0
 
   private def wmKey(f: FileMeta): (Long, String) = (f.mtimeMs, f.name)
 
@@ -505,18 +482,13 @@ class ArrivalsMicroBatchStream(opts: ArrivalsOptions) extends MicroBatchStream
     * Empty backlog → one FULL listing (minus the current offset's files:
     * offered-but-not-yet-renamed; re-admitting them would duplicate)
     * rebuilds it and resets the watermark cursor. Non-empty backlog →
-    * no listing at all, unless `listingRefreshTriggers` is due, in
-    * which case one refresh listing admits every candidate not already
-    * queued or in flight (set-difference, NOT a watermark comparison:
-    * the enumeration the refresh already pays dominates the backlog
-    * set-build, and admission-by-set-diff means gap files — failed
-    * renames, clock-skewed or late-copied arrivals whose (mtime, name)
-    * sits at or below the watermark — are picked up at refresh cadence
-    * even when sustained load keeps the backlog from ever draining).
-    * With refreshes off, the drain-time full list is the gap catch, so
-    * either way no file is lost, only deferred. The watermark tracks the
-    * max (mtime, name) admitted — the persisted, inspectable cursor
-    * position. The pendingFiles gauge reports the backlog's remainder
+    * no listing at all. Admission is by set-difference, not a watermark
+    * comparison, so gap files — failed renames, clock-skewed or
+    * late-copied arrivals whose (mtime, name) sits at or below the
+    * watermark — are admitted by the drain-time full list: no file is
+    * lost, only deferred. The watermark tracks the max (mtime, name)
+    * admitted — the persisted, inspectable cursor position. The
+    * pendingFiles gauge reports the backlog's remainder
     * (what the source still intends to offer before the next rescan). */
   private def pending(): Seq[FileMeta] = {
     val offered = lastOffset.files.map(_.path).toSet
@@ -524,27 +496,6 @@ class ArrivalsMicroBatchStream(opts: ArrivalsOptions) extends MicroBatchStream
       val cand = enumerate().filterNot(f => offered.contains(f.path))
       backlog.enqueueAll(ConsumeOrder.order(cand, opts.consumeOrder))
       watermark = if (cand.isEmpty) None else Some(cand.map(wmKey).max)
-      triggersSinceListing = 0
-    } else {
-      triggersSinceListing += 1
-      if (opts.listingRefreshTriggers > 0 &&
-          triggersSinceListing >= opts.listingRefreshTriggers) {
-        val known = backlog.iterator.map(_.path).toSet
-        val fresh = enumerate()
-          .filter(f => !known.contains(f.path) && !offered.contains(f.path))
-        if (fresh.nonEmpty) {
-          watermark = Some((watermark.toSeq ++ fresh.map(wmKey)).max)
-          // RANDOM appends (cached-iterator spirit: new arrivals go last);
-          // ordered modes re-order the merged set — O(backlog log backlog)
-          // per refresh, amortized by the refresh interval
-          val merged =
-            if (opts.consumeOrder == "RANDOM") backlog.toSeq ++ fresh
-            else ConsumeOrder.order(backlog.toSeq ++ fresh, opts.consumeOrder)
-          backlog.clear()
-          backlog.enqueueAll(merged)
-        }
-        triggersSinceListing = 0
-      }
     }
     pendingGauge.set(backlog.size)
     (0 until math.min(opts.maxFilesPerTrigger, backlog.size))
@@ -638,53 +589,19 @@ class ArrivalsMicroBatchStream(opts: ArrivalsOptions) extends MicroBatchStream
       renamed = Some(o)
     }
 
-  /** Commit renames: sequential on the driver for normal batches; for
-    * very large commits (≥ executorRenameThreshold files) the renames
-    * fan out to executors — the driver-side rename wall is the one
-    * scale bottleneck of this source (ARCHITECTURE.md). Executors ship
-    * back only (renamedCount, firstError) per partition, so driver
-    * traffic stays bounded regardless of batch size; any error is
-    * rethrown driver-side with the reference's collision semantics. */
-  private def renameConsumed(files: Seq[FileMeta]): Unit = {
-    if (files.isEmpty) return
-    val active = SparkSession.getActiveSession
-    if (files.size >= opts.executorRenameThreshold && active.isDefined) {
-      val sc = active.get.sparkContext
-      val confSer = new SerializableHadoopConf(ArrivalsUtil.hadoopConf())
-      val suffix = opts.fileSuffix // local val: the stream itself must not be captured
-      val paths = files.map(_.path)
-      val slices = math.max(1, math.min(32, paths.size / 512 + 1))
-      val results = sc.parallelize(paths, slices).mapPartitions { it =>
-        var renamed = 0L
-        var firstErr: Option[String] = None
-        var pfs: FileSystem = null
-        it.foreach { p =>
-          if (firstErr.isEmpty) {
-            if (pfs == null) pfs = ArrivalsUtil.fileSystem(new Path(p), confSer.value)
-            ArrivalsUtil.renameOne(pfs, p, suffix) match {
-              case Left(e) => firstErr = Some(e)
-              case Right(r) => if (r) renamed += 1
-            }
-          }
-        }
-        Iterator.single((renamed, firstErr))
-      }.collect() // ≤ 32 small tuples — control traffic, not data
-      filesRenamed.addAndGet(results.map(_._1).sum)
-      results.flatMap(_._2).headOption.foreach { err =>
-        renameFailures.incrementAndGet()
-        throw new IllegalStateException(err)
-      }
-    } else {
-      files.foreach { f =>
-        ArrivalsUtil.renameOne(fs, f.path, opts.fileSuffix) match {
-          case Left(err) =>
-            renameFailures.incrementAndGet()
-            throw new IllegalStateException(err)
-          case Right(r) => if (r) filesRenamed.incrementAndGet()
-        }
+  /** Commit renames, sequentially on the driver through the stream's
+    * own filesystem handle. The first failure stops the pass and is
+    * rethrown with the reference's collision semantics; the files after
+    * it are renamed by the replayed commit. */
+  private def renameConsumed(files: Seq[FileMeta]): Unit =
+    files.foreach { f =>
+      ArrivalsUtil.renameOne(fs, f.path, opts.fileSuffix) match {
+        case Left(err) =>
+          renameFailures.incrementAndGet()
+          throw new IllegalStateException(err)
+        case Right(r) => if (r) filesRenamed.incrementAndGet()
       }
     }
-  }
 
   override def stop(): Unit = ()
 }

@@ -5,24 +5,16 @@ import java.nio.file.{Files, Paths}
 /** Commit-rename throughput benchmark for the arrivals source (VERDICT
   * r9 item 6 — the flagship source's end-to-end scale number beside its
   * semantics proofs): generate N pending files, drain them into ONE
-  * offset, and time `commit()`'s rename leg on both paths:
+  * offset, and time `commit()`'s rename leg — sequential on the driver,
+  * the source's only commit path, as the reference's own rename loop is
+  * (CephFSEventReader.java:196-207).
   *
-  *   1. driver-sequential (executorRenameThreshold > N) — the wall
-  *      every naive file source hits;
-  *   2. executor fan-out (threshold ≤ N) — renames ship to executors in
-  *      ≤ 32 slices, the driver collects only (count, firstError) per
-  *      slice (ARCHITECTURE.md's answer to the rename wall).
-  *
-  * Both paths rename through `ArrivalsUtil.fileSystem`, the raw local
+  * The renames go through `ArrivalsUtil.fileSystem`, the raw local
   * filesystem on file:// paths: about 35 µs per file (two stats and a
   * rename) on a 4-core ext4 box, against about 90-140 µs through
-  * Hadoop's checksummed `LocalFileSystem`. Local renames are that cheap,
-  * so local numbers UNDERSTATE the fan-out win (a real DFS pays a round
-  * trip per rename — the fan-out's parallelism multiplies against that
-  * latency); what this pins is that the fan-out path itself adds no
-  * driver-side regression at 100k files.
+  * Hadoop's checksummed `LocalFileSystem`.
   *
-  * Run: SPARK_GRAFT_RENAMEBENCH_FILES=100000 SPARK_GRAFT_CPUS=8 \
+  * Run: SPARK_GRAFT_RENAMEBENCH_FILES=100000 SPARK_GRAFT_CPUS=4 \
   *   sbt "runMain graft.sources.arrivals.RenameBench"
   */
 object RenameBench {
@@ -39,13 +31,12 @@ object RenameBench {
       }
     }
 
-    def run(threshold: Int, label: String): Double = {
+    def run(label: String): Double = {
       val dir = Files.createTempDirectory(s"arrivals-renamebench-$label-")
       mkFiles(dir)
       val opts = ArrivalsOptions.from(Map(
         "path" -> dir.toString,
-        "maxFilesPerTrigger" -> n.toString,
-        "executorRenameThreshold" -> threshold.toString))
+        "maxFilesPerTrigger" -> n.toString))
       val st = new ArrivalsMicroBatchStream(opts)
       val off = st.latestOffset().asInstanceOf[ArrivalsOffset]
       require(off.files.size == n, s"drained ${off.files.size}, expected $n")
@@ -60,11 +51,10 @@ object RenameBench {
       secs
     }
 
-    // warm JVM/FS once at a small size, then one quiet pass per path
-    run(Int.MaxValue, "warmup-small") // n files but sequential warm-up counts too
-    val seq = run(Int.MaxValue, "driver-sequential")
-    val fan = run(1, "executor-fanout")
-    println(f"""{"metric":"arrivals_rename","files":$n,"driver_seq_sec":$seq%.2f,"fanout_sec":$fan%.2f,"fanout_renames_per_sec":${n / fan}%.0f}""")
+    // one untimed pass warms the JVM and the filesystem, then one timed pass
+    run("warmup")
+    val seq = run("driver-sequential")
+    println(f"""{"metric":"arrivals_rename","files":$n,"driver_seq_sec":$seq%.2f,"renames_per_sec":${n / seq}%.0f}""")
     spark.stop()
   }
 }

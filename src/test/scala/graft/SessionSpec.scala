@@ -6,19 +6,39 @@ import scala.jdk.CollectionConverters._
 
 /** Every entry point gets its session from [[Session.local]]: a second
   * hand-written builder is a second place for the cores, shuffle width
-  * and UTC zone to drift apart. */
+  * and UTC zone to drift apart. Every checkpoint goes through
+  * [[graft.api.Ckpt]], so a tracking scope sees it and its pin can be
+  * dropped. */
 class SessionSpec extends AnyFunSuite {
-  test("SparkSession.builder() appears exactly once in src/main, in graft/Session.scala") {
-    val root = Paths.get("src/main/scala")
+  private val root = Paths.get("src/main/scala")
+
+  /** The src/main files containing `needle`, one entry per line hit. */
+  private def sitesOf(needle: String): Seq[(Path, Int)] = {
     assert(Files.isDirectory(root), s"run from the repository root: ${root.toAbsolutePath}")
     val files = Files.walk(root)
-    val hits: Seq[(Path, Int)] =
-      try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
-        Files.readAllLines(f).asScala.zipWithIndex.collect {
-          case (line, i) if line.contains("SparkSession.builder()") => (f, i + 1)
-        }
-      } finally files.close()
+    try files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq.flatMap { f =>
+      Files.readAllLines(f).asScala.zipWithIndex.collect {
+        case (line, i) if line.contains(needle) => (f, i + 1)
+      }
+    } finally files.close()
+  }
+
+  test("SparkSession.builder() appears exactly once in src/main, in graft/Session.scala") {
+    val hits = sitesOf("SparkSession.builder()")
     assert(hits.map(_._1) == Seq(root.resolve("graft/Session.scala")),
       hits.map { case (f, n) => s"$f:$n" }.mkString("builder sites: ", ", ", ""))
+  }
+
+  test(".localCheckpoint( appears in src/main only in graft/api/Ckpt.scala") {
+    val hits = sitesOf(".localCheckpoint(")
+    assert(hits.nonEmpty && hits.forall(_._1 == root.resolve("graft/api/Ckpt.scala")),
+      hits.map { case (f, n) => s"$f:$n" }.mkString("localCheckpoint sites: ", ", ", ""))
+  }
+
+  test("Session.local() sizes the generated-code cache above Spark's default of 100") {
+    // read off the settings, not a live session: the test JVM's shared
+    // session already exists, and static confs apply only at creation
+    val entries = Session.settings("4")("spark.sql.codegen.cache.maxEntries").toInt
+    assert(entries == Session.codegenCacheEntries && entries > 100, entries.toString)
   }
 }

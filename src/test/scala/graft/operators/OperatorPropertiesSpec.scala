@@ -991,8 +991,13 @@ class OperatorPropertiesSpec extends SparkTestBase {
     // loop after one round regardless of the maxIterations budget
     val ringIds = Seq(1L, 2L, 3L, 4L).toDF("nid")
     val ring = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)).toDF("a", "b")
+    // each call may leave at most two frames pinned: superseded rounds
+    // are dropped, so the pins never grow with the iteration count
+    def pinned(): Int = spark.sparkContext.getPersistentRDDs.size
+    val pinnedBefore = pinned()
     val (ringRanks, ringIters) = graft.api.Graph.pageRankConverged(
       ring, "a", "b", ringIds, "nid", maxIterations = 50, tol = 1e-9)
+    assert(pinned() - pinnedBefore <= 2, s"${pinned() - pinnedBefore} frames pinned by one call")
     assert(ringIters == 1, s"uniform fixpoint should stop after 1 round, ran $ringIters")
     ringRanks.select("rank").as[Double].collect()
       .foreach(r => assert(math.abs(r - 0.25) < 1e-12, r.toString))
@@ -1006,8 +1011,10 @@ class OperatorPropertiesSpec extends SparkTestBase {
     val ids = Seq(1L, 2L, 3L, 4L, 5L).toDF("nid")
     val pairs = Seq((1L, 2L), (2L, 3L), (2L, 4L), (3L, 4L)).toDF("a", "b")
     val tol = 1e-2
+    val pinnedMid = pinned()
     val (conv, iters) = graft.api.Graph.pageRankConverged(
       pairs, "a", "b", ids, "nid", maxIterations = 50, tol = tol)
+    assert(pinned() - pinnedMid <= 2, s"${pinned() - pinnedMid} frames pinned by one call")
     assert(iters < 50, s"should converge well before the budget, ran $iters")
     val deg = Map(1L -> 1.0, 2L -> 3.0, 3L -> 2.0, 4L -> 2.0)
     val nbr = Map(1L -> Seq(2L), 2L -> Seq(1L, 3L, 4L), 3L -> Seq(2L, 4L),

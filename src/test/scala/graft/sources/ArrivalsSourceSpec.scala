@@ -127,56 +127,6 @@ class ArrivalsSourceSpec extends SparkTestBase {
     } finally q.stop()
   }
 
-  test("executor-side rename fan-out: large commits rename on executors, counters intact") {
-    val dir = tmpDir()
-    val t = 1704000000000L
-    val n = 200
-    (1 to n).foreach(i => write(dir, f"bulk$i%04d.dat", "x", t + i))
-    val q = spark.readStream.format("arrivals").option("path", dir.getAbsolutePath)
-      .option("executorRenameThreshold", "1") // force the fan-out path
-      .option("maxFilesPerTrigger", "500")
-      .load().writeStream.format("memory").queryName("t_fanout")
-      .trigger(Trigger.ProcessingTime("50 milliseconds")).start()
-    try {
-      q.processAllAvailable()
-      awaitCond((1 to n).forall(i => new File(dir, f"bulk$i%04d.dat.COMPLETED").exists()),
-        timeoutMs = 30000)
-      assert(q.exception.isEmpty)
-      def renamedMetric: Option[String] =
-        q.recentProgress.toSeq.flatMap(p => p.sources.toSeq)
-          .flatMap(s => Option(s.metrics).map(_.asScala.toMap)).lastOption
-          .flatMap(_.get("filesRenamed"))
-      awaitCond(renamedMetric.contains(n.toString), timeoutMs = 30000)
-    } finally q.stop()
-    assert(spark.table("t_fanout").count() == n)
-    assert(!(1 to n).exists(i => new File(dir, f"bulk$i%04d.dat").exists()))
-  }
-
-  test("executor-side rename fan-out: a collision on an executor fails the query loudly") {
-    val dir = tmpDir()
-    val t = 1704000000000L
-    write(dir, "c1.dat", "x", t)
-    // pre-existing .COMPLETED file: after c1.dat is consumed its rename
-    // target already exists -> the reference's name-reuse refusal, which
-    // must propagate from the executor task back to the stream
-    write(dir, "c1.dat.COMPLETED", "old", t)
-    val q = spark.readStream.format("arrivals").option("path", dir.getAbsolutePath)
-      .option("executorRenameThreshold", "1")
-      .load().writeStream.format("memory").queryName("t_fanout_collide")
-      .trigger(Trigger.ProcessingTime("50 milliseconds")).start()
-    try {
-      // renames fire on the trigger AFTER the data batch;
-      // processAllAvailable may rethrow the failure itself or return
-      // before it surfaces — accept either, then check the message
-      val direct =
-        try { q.processAllAvailable(); None }
-        catch { case e: Exception => Some(e.toString) }
-      if (direct.isEmpty) awaitCond(q.exception.isDefined, timeoutMs = 30000)
-      val msg = direct.orElse(q.exception.map(_.toString)).get
-      assert(msg.contains("Name re-used"), msg)
-    } finally q.stop()
-  }
-
   test("consumeOrder OLDEST: mtime asc, tie → lexicographically smallest") {
     val dir = tmpDir()
     val t0 = 1704000000000L; val t1 = 1704000060000L
@@ -312,7 +262,7 @@ class ArrivalsSourceSpec extends SparkTestBase {
   }
 
   test("raw handle: file: paths resolve past the checksum layer; a file with a .crc " +
-      "sidecar is offered once and renamed on both rename paths, the sidecar never emitted") {
+      "sidecar is offered once and renamed, the sidecar never emitted") {
     val conf = spark.sessionState.newHadoopConf()
     val fsOf = (p: String) => ArrivalsUtil.fileSystem(new Path(p), conf)
     assert(!fsOf(tmpDir().getAbsolutePath).isInstanceOf[ChecksumFileSystem])
@@ -320,19 +270,16 @@ class ArrivalsSourceSpec extends SparkTestBase {
     conf.set("fs.countfs.impl.disable.cache", "true")
     assert(fsOf(s"countfs://${tmpDir().getAbsolutePath}").isInstanceOf[CountingFileSystem])
     val local = FileSystem.getLocal(conf) // Hadoop's checksummed client writer
-    Seq("5000" -> "driver", "1" -> "fanout").foreach { case (threshold, label) =>
-      val dir = tmpDir()
-      val out = local.create(new Path(dir.getAbsolutePath, "w1"), false)
-      out.write("x".getBytes("UTF-8")); out.close()
-      assert(new File(dir, ".w1.crc").exists(), "LocalFileSystem wrote no sidecar")
-      val rows = runStream(dir, s"t_crc_$label", Map("executorRenameThreshold" -> threshold),
-        awaitRenamed = Seq("w1.COMPLETED")).collect()
-      assert(rows.map(_.getAs[String]("file_name")).toSeq == Seq("w1"), label)
-      assert(!new File(dir, "w1").exists(), label)
-      // a raw rename moves the file alone, as the reference's java.io.File one does
-      assert(new File(dir, ".w1.crc").exists(), label)
-      assert(!new File(dir, ".w1.COMPLETED.crc").exists(), label)
-    }
+    val dir = tmpDir()
+    val out = local.create(new Path(dir.getAbsolutePath, "w1"), false)
+    out.write("x".getBytes("UTF-8")); out.close()
+    assert(new File(dir, ".w1.crc").exists(), "LocalFileSystem wrote no sidecar")
+    val rows = runStream(dir, "t_crc", awaitRenamed = Seq("w1.COMPLETED")).collect()
+    assert(rows.map(_.getAs[String]("file_name")).toSeq == Seq("w1"))
+    assert(!new File(dir, "w1").exists())
+    // a raw rename moves the file alone, as the reference's java.io.File one does
+    assert(new File(dir, ".w1.crc").exists())
+    assert(!new File(dir, ".w1.COMPLETED.crc").exists())
   }
 
   /** The rows a batch emits, read back through the partition reader. */
@@ -345,21 +292,19 @@ class ArrivalsSourceSpec extends SparkTestBase {
 
   test("a file deleted between offer and commit: its row still comes from the offset, " +
       "commit does not throw, and it counts as neither a failure nor a rename") {
-    Seq("5000", "1").foreach { threshold => // driver path, then the fan-out
-      val dir = tmpDir()
-      write(dir, "keep", "x", 1704000000000L)
-      val gone = write(dir, "gone", "x", 1704000001000L)
-      val st = stream(dir, Map("executorRenameThreshold" -> threshold))
-      val off = st.latestOffset().asInstanceOf[ArrivalsOffset]
-      assert(off.files.map(_.name) == Seq("keep", "gone"))
-      assert(gone.delete())
-      assert(emitted(st, ArrivalsOffset(0, Nil), off) == Seq("keep", "gone"))
-      st.commit(off)
-      val m = st.metrics(java.util.Optional.empty()).asScala
-      assert(m("renameFailures") == "0" && m("filesRenamed") == "1", s"threshold $threshold: $m")
-      assert(new File(dir, "keep.COMPLETED").exists())
-      assert(!new File(dir, "gone").exists() && !new File(dir, "gone.COMPLETED").exists())
-    }
+    val dir = tmpDir()
+    write(dir, "keep", "x", 1704000000000L)
+    val gone = write(dir, "gone", "x", 1704000001000L)
+    val st = stream(dir)
+    val off = st.latestOffset().asInstanceOf[ArrivalsOffset]
+    assert(off.files.map(_.name) == Seq("keep", "gone"))
+    assert(gone.delete())
+    assert(emitted(st, ArrivalsOffset(0, Nil), off) == Seq("keep", "gone"))
+    st.commit(off)
+    val m = st.metrics(java.util.Optional.empty()).asScala
+    assert(m("renameFailures") == "0" && m("filesRenamed") == "1", m.toString)
+    assert(new File(dir, "keep.COMPLETED").exists())
+    assert(!new File(dir, "gone").exists() && !new File(dir, "gone.COMPLETED").exists())
   }
 
   test("legacy offsets: scheme-less paths deserialize to file: URIs, and a stream " +
@@ -463,6 +408,14 @@ class ArrivalsSourceSpec extends SparkTestBase {
       Map("path" -> "/tmp", "maxBackoffSleep" -> "4000", "backoffSleepIncrement" -> "1000"))
     assert(warns.size == 2 && warns.forall(_.contains("no effect")), warns.toString)
     assert(ArrivalsOptions.warnInertOptions(Map("path" -> "/tmp")).isEmpty)
+    // so are the removed rename fan-out and refresh-listing options: a
+    // config that still sets them starts, and is told they do nothing
+    val removed = Map("executorRenameThreshold" -> "1", "listingRefreshTriggers" -> "2")
+    val removedWarns = ArrivalsOptions.warnInertOptions(Map("path" -> "/tmp") ++ removed)
+    assert(removedWarns.size == 2 && removedWarns.forall(_.contains("has no effect")),
+      removedWarns.toString)
+    assert(removed.keys.forall(k => removedWarns.exists(_.contains(k.toLowerCase))))
+    ArrivalsOptions.from(Map("path" -> "/tmp") ++ removed)
     // still validated: garbage values fail fast like any other option
     intercept[Exception](
       ArrivalsOptions.warnInertOptions(Map("maxBackoffSleep" -> "soon")))
@@ -523,44 +476,6 @@ class ArrivalsSourceSpec extends SparkTestBase {
     // the final batch); nothing new → offset unchanged
     val after = st.latestOffset().asInstanceOf[ArrivalsOffset]
     assert(after.seq == off.seq)
-  }
-
-  test("listingRefreshTriggers: refresh admits EVERY unseen candidate — new arrivals " +
-      "AND below-watermark gap files — so sustained load cannot starve a gap file") {
-    val dir = tmpDir()
-    val t0 = 1704000000000L
-    Seq("a", "b", "c", "d").zipWithIndex.foreach { case (n, i) =>
-      write(dir, n, "x", t0 + (i + 1) * 1000L)
-    }
-    val st = stream(dir,
-      Map("maxFilesPerTrigger" -> "1", "listingRefreshTriggers" -> "2"))
-    def offer(prev: ArrivalsOffset): ArrivalsOffset = {
-      val off = st.latestOffset().asInstanceOf[ArrivalsOffset]
-      assert(off.seq == prev.seq + 1, s"expected a new batch after $prev, got $off")
-      off
-    }
-    val o1 = offer(ArrivalsOffset(0, Nil)) // full list {a,b,c,d}, wm=d
-    assert(o1.files.map(_.name) == Seq("a"))
-    val o2 = offer(o1) // drain trigger 1: no listing
-    assert(o2.files.map(_.name) == Seq("b"))
-    assert(listingCalls(st) == 1)
-    // one NEW file beyond the watermark and one GAP file below it
-    // (rsync -a style: preserved old mtime) land before the refresh;
-    // admission is by set-difference, so BOTH merge in — a gap file must
-    // not wait for a drain that sustained load may never allow
-    write(dir, "e", "x", t0 + 10000L)
-    write(dir, "gap", "x", t0 - 99000L)
-    val o3 = offer(o2) // drain trigger 2 → refresh due
-    assert(o3.files.map(_.name) == Seq("gap"),
-      "the OLDEST merged file (the gap) must surface at the refresh itself")
-    assert(listingCalls(st) == 2, "refresh must cost exactly one more listing")
-    val o4 = offer(o3)
-    assert(o4.files.map(_.name) == Seq("c"))
-    val o5 = offer(o4) // refresh due again: nothing unseen → backlog unchanged
-    assert(o5.files.map(_.name) == Seq("d"))
-    assert(listingCalls(st) == 3)
-    val o6 = offer(o5)
-    assert(o6.files.map(_.name) == Seq("e"))
   }
 
   test("refresh off (default): a mid-drain gap file waits for the drain-time full list") {
@@ -658,24 +573,6 @@ class ArrivalsSourceSpec extends SparkTestBase {
     assert(secs < 120, f"drain too slow: $secs%.1f s")
   }
 
-  test("throughput: 2000-file drain through the EXECUTOR rename fan-out, exactly-once") {
-    // same drain as above but with the fan-out threshold forced low so
-    // every commit renames on executors — the no-driver-rename-wall path
-    val dir = tmpDir()
-    val t0 = 1704000000000L
-    (1 to 2000).foreach(i => write(dir, f"g$i%05d", "x", t0 + i))
-    val start = System.nanoTime()
-    val rows = runStream(dir, "t_bulk_fanout",
-      Map("maxFilesPerTrigger" -> "500", "executorRenameThreshold" -> "1"),
-      awaitRenamed = Seq("g02000.COMPLETED")).collect()
-    val secs = (System.nanoTime() - start) / 1e9
-    assert(rows.length == 2000, s"expected 2000 rows, got ${rows.length}")
-    assert(rows.map(_.getAs[String]("file_name")).distinct.length == 2000, "duplicates emitted")
-    assert(dir.listFiles().forall(_.getName.endsWith(".COMPLETED")))
-    info(f"fan-out drained 2000 files in $secs%.1f s (${2000 / secs}%.0f files/s)")
-    assert(secs < 120, f"fan-out drain too slow: $secs%.1f s")
-  }
-
   test("lifecycle: start/stop ×10 with a shared checkpoint stays clean") {
     val dir = tmpDir()
     val cp = Files.createTempDirectory("arrivals-lc-").toString
@@ -732,24 +629,22 @@ class ArrivalsSourceSpec extends SparkTestBase {
     assert(w0 == Seq(("alpha", 3L, 0L), ("beta", 2L, 0L)), w0.toString)
   }
 
-  // ---- failure injection (r9 stretch): crash mid-commit under the
-  // ---- executor fan-out rename path, restart, exactly-once ------------
+  // ---- failure injection (r9 stretch): crash mid-commit, restart,
+  // ---- exactly-once ----------------------------------------------------
 
-  test("failure injection: executor fan-out renames, restart from checkpoint — no file lost, none double-emitted") {
+  test("failure injection: multi-batch renames, restart from checkpoint — no file lost, none double-emitted") {
     val dir = tmpDir()
     val cp = Files.createTempDirectory("arrivals-fi-cp-").toString
     val out = Files.createTempDirectory("arrivals-fi-out-").toString
-    val fanout = Map("executorRenameThreshold" -> "10")
-    // batch population 1: 60 files — WELL past the threshold, so the
-    // commit renames run through the executor fan-out path, not the
-    // driver loop
+    // 60 files at 25 per trigger: three batches, each committed by rename
+    val capped = Map("maxFilesPerTrigger" -> "25")
     (1 to 60).foreach(i => write(dir, f"a$i%02d", s"c$i", 1704000000000L + i * 1000))
     runToParquet(dir, out, cp,
-      awaitRenamed = (1 to 60).map(i => f"a$i%02d.COMPLETED"), options = fanout)
+      awaitRenamed = (1 to 60).map(i => f"a$i%02d.COMPLETED"), options = capped)
     // stop (a clean kill), add 15 more, restart from the SAME checkpoint
     (61 to 75).foreach(i => write(dir, f"a$i%02d", s"c$i", 1704000000000L + i * 1000))
     runToParquet(dir, out, cp,
-      awaitRenamed = (61 to 75).map(i => f"a$i%02d.COMPLETED"), options = fanout)
+      awaitRenamed = (61 to 75).map(i => f"a$i%02d.COMPLETED"), options = capped)
     // exactly-once across the restart: all 75, each exactly once
     val names = spark.read.parquet(out).collect().map(_.getAs[String]("file_name"))
     assert(names.length == 75 && names.toSet.size == 75,
@@ -768,7 +663,7 @@ class ArrivalsSourceSpec extends SparkTestBase {
     // dest exists), never throw, never double-rename.
     val dir = tmpDir()
     (1 to 20).foreach(i => write(dir, f"m$i%02d", s"c$i", 1704000000000L + i * 1000))
-    val st = stream(dir, Map("executorRenameThreshold" -> "10")) // fan-out path
+    val st = stream(dir)
     val off = st.latestOffset().asInstanceOf[ArrivalsOffset]
     assert(off.files.size == 20)
     // CRASH: 7 of the 20 renames completed before the process died
