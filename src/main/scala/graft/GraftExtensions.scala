@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import graft.functions.VectorExprs
 
 /** SparkSessionExtensions entry point: enables the graft native functions
@@ -10,53 +10,10 @@ import graft.functions.VectorExprs
   * `--conf spark.sql.extensions=graft.GraftExtensions` (cluster-wide,
   * no code change), complementing the imperative
   * [[graft.functions.VectorExprs.register]] used inside the library.
+  * Both inject the same table, [[graft.functions.VectorExprs.functions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("vec_dot"),
-      new ExpressionInfo(classOf[VectorExprs.VectorDot].getName, "vec_dot"),
-      VectorExprs.buildVecDot(_)))
-    ext.injectFunction((FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[VectorExprs.SimHash64].getName, "graft_simhash"),
-      VectorExprs.buildSimHash(_)))
-    ext.injectFunction((FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[VectorExprs.MinHashSig].getName, "graft_minhash"),
-      VectorExprs.buildMinHash(_)))
-    ext.injectFunction((FunctionIdentifier("graft_hyperplane_keys"),
-      new ExpressionInfo(classOf[VectorExprs.HyperplaneKeys].getName, "graft_hyperplane_keys"),
-      VectorExprs.buildHyperplaneKeys(_)))
-    ext.injectFunction((FunctionIdentifier("graft_nearest_centroids"),
-      new ExpressionInfo(classOf[VectorExprs.NearestCentroids].getName, "graft_nearest_centroids"),
-      VectorExprs.buildNearestCentroids(_)))
-    ext.injectFunction((FunctionIdentifier("graft_adc"),
-      new ExpressionInfo(classOf[VectorExprs.AdcDistance].getName, "graft_adc"),
-      VectorExprs.buildAdc(_)))
-    ext.injectFunction((FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[VectorExprs.PqEncodeExpr].getName, "graft_pq_encode"),
-      VectorExprs.buildPqEncode(_)))
-    ext.injectFunction((FunctionIdentifier("graft_adc_lut"),
-      new ExpressionInfo(classOf[VectorExprs.AdcLutExpr].getName, "graft_adc_lut"),
-      VectorExprs.buildAdcLut(_)))
-    ext.injectFunction((FunctionIdentifier("graft_jaro_winkler"),
-      new ExpressionInfo(
-        classOf[graft.functions.TextExprs.JaroWinkler].getName, "graft_jaro_winkler"),
-      graft.functions.TextExprs.buildJaroWinkler(_)))
-    ext.injectFunction((FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      VectorExprs.buildMightContain(_)))
-    ext.injectFunction((FunctionIdentifier("graft_cms_estimates"),
-      new ExpressionInfo(
-        classOf[graft.functions.SketchExprs.CmsEstimates].getName, "graft_cms_estimates"),
-      graft.functions.SketchExprs.buildCmsEstimates(_)))
-    ext.injectFunction((FunctionIdentifier("graft_dd_quantiles"),
-      new ExpressionInfo(
-        classOf[graft.functions.SketchExprs.DdQuantiles].getName, "graft_dd_quantiles"),
-      graft.functions.SketchExprs.buildDdQuantiles(_)))
-    ext.injectFunction((FunctionIdentifier("graft_kmv_overlap"),
-      new ExpressionInfo(
-        classOf[graft.functions.SketchExprs.KmvOverlapExpr].getName, "graft_kmv_overlap"),
-      graft.functions.SketchExprs.buildKmvOverlap(_)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    for ((name, cls, build) <- VectorExprs.functions)
+      ext.injectFunction((FunctionIdentifier(name), new ExpressionInfo(cls.getName, name), build))
 }

@@ -51,36 +51,76 @@ object ImageCodec {
     out.toByteArray
   }
 
-  /** Encode an 8-bit GRAYSCALE image as a real, spec-conformant PNG:
-    * signature, IHDR, one zlib-deflated IDAT, IEND — correct CRCs, and
-    * the per-row filter CYCLES through all five spec filter types
-    * (None/Sub/Up/Average/Paeth, row index mod 5) so a round-trip
-    * through [[decodePngGray]] exercises every unfilter path, not just
-    * the trivial one. `pixels` is row-major, length w·h, values 0–255.
-    *
-    * The output opens in any standards PNG reader (ImageIO round-trip
-    * is pinned in the spec suite). */
+  /** Encode an 8-bit GRAYSCALE image (color type 0) as a real,
+    * spec-conformant PNG. `pixels` is row-major, length w·h, values
+    * 0–255. The output opens in any standards PNG reader (ImageIO
+    * round-trip is pinned in the spec suite). */
   def encodePngGray(w: Int, h: Int, pixels: Array[Int]): Array[Byte] = {
     require(w > 0 && h > 0, s"bad dims ${w}x$h")
     require(pixels.length == w * h, s"pixels ${pixels.length} != ${w * h}")
+    encodePng(w, h, colorType = 0, bpp = 1, pixels.map(_ & 0xff), plte = None)
+  }
+
+  /** Encode a packed-RGB (0xRRGGBB row-major) image as a real
+    * TRUECOLOR PNG (color type 2, 8-bit, 3-byte pixels). */
+  def encodePngColor(w: Int, h: Int, rgb: Array[Int]): Array[Byte] = {
+    require(w > 0 && h > 0, s"bad dims ${w}x$h")
+    require(rgb.length == w * h, s"pixels ${rgb.length} != ${w * h}")
+    encodePng(w, h, colorType = 2, bpp = 3, rgbBytes(rgb).map(_ & 0xff), plte = None)
+  }
+
+  /** Encode an indexed image as a real PALETTE PNG (color type 3,
+    * 8-bit): PLTE chunk with packed-RGB entries, one index byte per
+    * pixel. `palette` holds ≤ 256 packed 0xRRGGBB entries; every index
+    * must be < palette.length. */
+  def encodePngPal(w: Int, h: Int, palette: Array[Int], idx: Array[Int]): Array[Byte] = {
+    require(w > 0 && h > 0, s"bad dims ${w}x$h")
+    require(palette.nonEmpty && palette.length <= 256, s"bad palette size ${palette.length}")
+    require(idx.length == w * h, s"indices ${idx.length} != ${w * h}")
+    require(idx.forall(i => i >= 0 && i < palette.length), "index out of palette range")
+    encodePng(w, h, colorType = 3, bpp = 1, idx, plte = Some(rgbBytes(palette)))
+  }
+
+  /** Packed 0xRRGGBB → R, G, B bytes. */
+  private def rgbBytes(rgb: Array[Int]): Array[Byte] = {
+    val out = new Array[Byte](3 * rgb.length)
+    var k = 0
+    while (k < rgb.length) {
+      out(k * 3) = (rgb(k) >> 16).toByte
+      out(k * 3 + 1) = (rgb(k) >> 8).toByte
+      out(k * 3 + 2) = rgb(k).toByte
+      k += 1
+    }
+    out
+  }
+
+  /** The PNG encoder behind every entry point: signature, IHDR, the
+    * optional PLTE, one zlib-deflated IDAT, IEND — correct CRCs.
+    * `samples` holds the image's bytes (0–255, row-major, `bpp` per
+    * pixel). The per-row filter CYCLES through all five spec filter
+    * types (None/Sub/Up/Average/Paeth, row index mod 5), with "left"
+    * = `bpp` bytes back as the spec defines it, so a round trip
+    * exercises every unfilter path, not just the trivial one. */
+  private def encodePng(w: Int, h: Int, colorType: Int, bpp: Int, samples: Array[Int],
+      plte: Option[Array[Byte]]): Array[Byte] = {
     val ihdr = new java.io.ByteArrayOutputStream()
     ihdr.write(be32(w)); ihdr.write(be32(h))
     ihdr.write(8)  // bit depth
-    ihdr.write(0)  // color type 0 = grayscale
+    ihdr.write(colorType)
     ihdr.write(0); ihdr.write(0); ihdr.write(0) // deflate / adaptive / no interlace
-    // raw scanlines: 1 filter byte + w samples per row, filter cycling
-    // through the five spec types (bpp = 1 for gray8)
-    val raw = new Array[Byte](h * (w + 1))
+    // raw scanlines: 1 filter byte + stride sample bytes per row
+    val stride = bpp * w
+    val raw = new Array[Byte](h * (stride + 1))
     var y = 0
     while (y < h) {
       val ft = y % 5
-      raw(y * (w + 1)) = ft.toByte
-      var x = 0
-      while (x < w) {
-        val cur = pixels(y * w + x) & 0xff
-        val left = if (x > 0) pixels(y * w + x - 1) & 0xff else 0
-        val up = if (y > 0) pixels((y - 1) * w + x) & 0xff else 0
-        val ul = if (x > 0 && y > 0) pixels((y - 1) * w + x - 1) & 0xff else 0
+      raw(y * (stride + 1)) = ft.toByte
+      var b = 0
+      while (b < stride) {
+        val cur = samples(y * stride + b)
+        val left = if (b >= bpp) samples(y * stride + b - bpp) else 0
+        val up = if (y > 0) samples((y - 1) * stride + b) else 0
+        val ul = if (b >= bpp && y > 0) samples((y - 1) * stride + b - bpp) else 0
         val f = ft match {
           case 0 => cur
           case 1 => cur - left
@@ -88,8 +128,8 @@ object ImageCodec {
           case 3 => cur - (left + up) / 2
           case 4 => cur - paeth(left, up, ul)
         }
-        raw(y * (w + 1) + 1 + x) = (f & 0xff).toByte
-        x += 1
+        raw(y * (stride + 1) + 1 + b) = (f & 0xff).toByte
+        b += 1
       }
       y += 1
     }
@@ -102,6 +142,7 @@ object ImageCodec {
     val out = new java.io.ByteArrayOutputStream()
     out.write(PngSig)
     out.write(chunk("IHDR", ihdr.toByteArray))
+    plte.foreach(p => out.write(chunk("PLTE", p)))
     out.write(chunk("IDAT", comp.toByteArray))
     out.write(chunk("IEND", Array.emptyByteArray))
     out.toByteArray
@@ -191,212 +232,66 @@ object ImageCodec {
     * pipeline really ships gigapixel scans. */
   val MaxDecodePixels: Long = 64L * 1024 * 1024
 
-  /** FULL PNG decode for 8-bit grayscale, non-interlaced images: chunk
-    * walk (all IDAT segments concatenated), zlib inflate, and per-row
-    * UNFILTERING of all five spec filter types. Returns (w, h,
-    * row-major pixels 0–255); None on anything unsupported/corrupt,
-    * including headers whose claimed dims exceed [[MaxDecodePixels]]. */
-  def decodePngGray(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] = {
-    val meta = decodeMeta(bytes) match {
-      case Some(m) if m.format == "png" && m.bitDepth == 8 && m.channels == 1 => m
-      case _ => return None
-    }
-    if (meta.width * meta.height > MaxDecodePixels) return None
-    val w = meta.width.toInt; val h = meta.height.toInt
-    if ((bytes(26) & 0xff) != 0 || (bytes(28) & 0xff) != 0) return None // compression/interlace
-    // walk chunks, concatenating IDAT payloads
-    val idat = new java.io.ByteArrayOutputStream()
-    var i = 8
-    var done = false
-    while (!done && i + 8 <= bytes.length) {
-      val len = readBe32(bytes, i)
-      if (len < 0 || i + 12 + len > bytes.length) return None
-      val tag = new String(bytes.slice(i + 4, i + 8), "US-ASCII")
-      if (tag == "IDAT") idat.write(bytes, i + 8, len)
-      if (tag == "IEND") done = true
-      i += 12 + len
-    }
-    val inflater = new Inflater()
-    inflater.setInput(idat.toByteArray)
-    val raw = new Array[Byte](h * (w + 1))
-    var got = 0
-    try {
-      while (got < raw.length && !inflater.finished()) {
-        val n = inflater.inflate(raw, got, raw.length - got)
-        // n == 0 on an unfinished stream means no progress is possible:
-        // truncated input OR a preset-dictionary (FDICT) stream we don't
-        // support — either way bail rather than spin the executor thread
-        if (n == 0) return None
-        got += n
-      }
-    } catch { case _: java.util.zip.DataFormatException => return None }
-    finally inflater.end()
-    if (got < raw.length) return None
-    val px = new Array[Int](w * h)
-    var y = 0
-    while (y < h) {
-      val ft = raw(y * (w + 1)) & 0xff
-      var x = 0
-      while (x < w) {
-        val f = raw(y * (w + 1) + 1 + x) & 0xff
-        val left = if (x > 0) px(y * w + x - 1) else 0
-        val up = if (y > 0) px((y - 1) * w + x) else 0
-        val ul = if (x > 0 && y > 0) px((y - 1) * w + x - 1) else 0
-        val v = ft match {
-          case 0 => f
-          case 1 => f + left
-          case 2 => f + up
-          case 3 => f + (left + up) / 2
-          case 4 => f + paeth(left, up, ul)
-          case _ => return None
-        }
-        px(y * w + x) = v & 0xff
-        x += 1
-      }
-      y += 1
-    }
-    Some((w, h, px))
-  }
-
-  /** Encode a packed-RGB (0xRRGGBB row-major) image as a real
-    * TRUECOLOR PNG (color type 2, 8-bit): same chunk layout as the gray
-    * encoder, 3-byte pixels, per-row filters cycling through all five
-    * spec types with the correct bpp = 3 "left" offset. */
-  def encodePngColor(w: Int, h: Int, rgb: Array[Int]): Array[Byte] = {
-    require(w > 0 && h > 0, s"bad dims ${w}x$h")
-    require(rgb.length == w * h, s"pixels ${rgb.length} != ${w * h}")
-    val ihdr = new java.io.ByteArrayOutputStream()
-    ihdr.write(be32(w)); ihdr.write(be32(h))
-    ihdr.write(8)  // bit depth
-    ihdr.write(2)  // color type 2 = truecolor
-    ihdr.write(0); ihdr.write(0); ihdr.write(0)
-    val stride = 3 * w
-    val raw = new Array[Byte](h * (stride + 1))
-    // byte-expanded samples so the filters run over bytes, as the spec
-    // defines them (left = bpp bytes back)
-    val samp = new Array[Int](h * stride)
-    var k = 0
-    while (k < rgb.length) {
-      samp(k * 3) = (rgb(k) >> 16) & 0xff
-      samp(k * 3 + 1) = (rgb(k) >> 8) & 0xff
-      samp(k * 3 + 2) = rgb(k) & 0xff
-      k += 1
-    }
-    var y = 0
-    while (y < h) {
-      val ft = y % 5
-      raw(y * (stride + 1)) = ft.toByte
-      var b = 0
-      while (b < stride) {
-        val cur = samp(y * stride + b)
-        val left = if (b >= 3) samp(y * stride + b - 3) else 0
-        val up = if (y > 0) samp((y - 1) * stride + b) else 0
-        val ul = if (b >= 3 && y > 0) samp((y - 1) * stride + b - 3) else 0
-        val f = ft match {
-          case 0 => cur
-          case 1 => cur - left
-          case 2 => cur - up
-          case 3 => cur - (left + up) / 2
-          case 4 => cur - paeth(left, up, ul)
-        }
-        raw(y * (stride + 1) + 1 + b) = (f & 0xff).toByte
-        b += 1
-      }
-      y += 1
-    }
-    val deflater = new Deflater(Deflater.DEFAULT_COMPRESSION)
-    deflater.setInput(raw); deflater.finish()
-    val comp = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    while (!deflater.finished()) comp.write(buf, 0, deflater.deflate(buf))
-    deflater.end()
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(PngSig)
-    out.write(chunk("IHDR", ihdr.toByteArray))
-    out.write(chunk("IDAT", comp.toByteArray))
-    out.write(chunk("IEND", Array.emptyByteArray))
-    out.toByteArray
-  }
-
-  /** Encode an indexed image as a real PALETTE PNG (color type 3,
-    * 8-bit): PLTE chunk with packed-RGB entries, index scanlines with
-    * the five cycling filters (bpp = 1). `palette` holds ≤ 256 packed
-    * 0xRRGGBB entries; every index must be < palette.length. */
-  def encodePngPal(w: Int, h: Int, palette: Array[Int], idx: Array[Int]): Array[Byte] = {
-    require(w > 0 && h > 0, s"bad dims ${w}x$h")
-    require(palette.nonEmpty && palette.length <= 256, s"bad palette size ${palette.length}")
-    require(idx.length == w * h, s"indices ${idx.length} != ${w * h}")
-    require(idx.forall(i => i >= 0 && i < palette.length), "index out of palette range")
-    val ihdr = new java.io.ByteArrayOutputStream()
-    ihdr.write(be32(w)); ihdr.write(be32(h))
-    ihdr.write(8)  // bit depth
-    ihdr.write(3)  // color type 3 = indexed
-    ihdr.write(0); ihdr.write(0); ihdr.write(0)
-    val plte = new Array[Byte](3 * palette.length)
-    var pi = 0
-    while (pi < palette.length) {
-      plte(pi * 3) = ((palette(pi) >> 16) & 0xff).toByte
-      plte(pi * 3 + 1) = ((palette(pi) >> 8) & 0xff).toByte
-      plte(pi * 3 + 2) = (palette(pi) & 0xff).toByte
-      pi += 1
-    }
-    val raw = new Array[Byte](h * (w + 1))
-    var y = 0
-    while (y < h) {
-      val ft = y % 5
-      raw(y * (w + 1)) = ft.toByte
-      var x = 0
-      while (x < w) {
-        val cur = idx(y * w + x)
-        val left = if (x > 0) idx(y * w + x - 1) else 0
-        val up = if (y > 0) idx((y - 1) * w + x) else 0
-        val ul = if (x > 0 && y > 0) idx((y - 1) * w + x - 1) else 0
-        val f = ft match {
-          case 0 => cur
-          case 1 => cur - left
-          case 2 => cur - up
-          case 3 => cur - (left + up) / 2
-          case 4 => cur - paeth(left, up, ul)
-        }
-        raw(y * (w + 1) + 1 + x) = (f & 0xff).toByte
-        x += 1
-      }
-      y += 1
-    }
-    val deflater = new Deflater(Deflater.DEFAULT_COMPRESSION)
-    deflater.setInput(raw); deflater.finish()
-    val comp = new java.io.ByteArrayOutputStream()
-    val buf = new Array[Byte](8192)
-    while (!deflater.finished()) comp.write(buf, 0, deflater.deflate(buf))
-    deflater.end()
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(PngSig)
-    out.write(chunk("IHDR", ihdr.toByteArray))
-    out.write(chunk("PLTE", plte))
-    out.write(chunk("IDAT", comp.toByteArray))
-    out.write(chunk("IEND", Array.emptyByteArray))
-    out.toByteArray
-  }
+  /** FULL PNG decode of an 8-bit GRAYSCALE (color type 0),
+    * non-interlaced image. Returns (w, h, row-major pixels 0–255); None
+    * for every other color type — indexed included — and on anything
+    * unsupported/corrupt, including headers whose claimed dims exceed
+    * [[MaxDecodePixels]]. */
+  def decodePngGray(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] =
+    decodePng(bytes, _ == 0).map(png => (png.w, png.h, png.samples))
 
   /** FULL COLOR PNG decode for 8-bit, non-interlaced images of color
-    * type 2 (truecolor — byte-level unfilter at bpp = 3) or type 3
-    * (indexed — PLTE lookup after a bpp = 1 unfilter). Returns (w, h,
+    * type 2 (truecolor) or type 3 (indexed — PLTE lookup). Returns (w, h,
     * packed 0xRRGGBB row-major); None on anything unsupported/corrupt,
     * including dims past [[MaxDecodePixels]]. Gray (type 0) payloads
     * belong to [[decodePngGray]] and return None here. */
   def decodePngColor(bytes: Array[Byte]): Option[(Int, Int, Array[Int])] = {
+    val png = decodePng(bytes, ct => ct == 2 || ct == 3) match {
+      case Some(p) => p
+      case None => return None
+    }
+    val samp = png.samples
+    val px = new Array[Int](png.w * png.h)
+    var k = 0
+    if (png.colorType == 2) {
+      while (k < px.length) {
+        px(k) = (samp(k * 3) << 16) | (samp(k * 3 + 1) << 8) | samp(k * 3 + 2)
+        k += 1
+      }
+    } else {
+      if (png.palette == null) return None
+      while (k < px.length) {
+        if (samp(k) >= png.palette.length) return None
+        px(k) = png.palette(samp(k))
+        k += 1
+      }
+    }
+    Some((png.w, png.h, px))
+  }
+
+  /** A decoded PNG before the color-type mapping: the image's bytes
+    * (0–255, row-major, bpp per pixel) and the PLTE entries as packed
+    * 0xRRGGBB (null when the file has none). */
+  private final case class Png(w: Int, h: Int, colorType: Int, samples: Array[Int],
+      palette: Array[Int])
+
+  /** The PNG decoder behind both entry points: IHDR gate (8-bit, no
+    * interlace, a color type the caller `accept`s, dims within
+    * [[MaxDecodePixels]]), chunk walk (all IDAT segments concatenated,
+    * PLTE captured), zlib inflate, and per-row UNFILTERING of all five
+    * spec filter types at the color type's bpp. */
+  private def decodePng(bytes: Array[Byte], accept: Int => Boolean): Option[Png] = {
     val meta = decodeMeta(bytes) match {
       case Some(m) if m.format == "png" && m.bitDepth == 8 => m
       case _ => return None
     }
     val ct = bytes(25) & 0xff
-    if (ct != 2 && ct != 3) return None
+    if (!accept(ct)) return None
     if (meta.width * meta.height > MaxDecodePixels) return None
     val w = meta.width.toInt; val h = meta.height.toInt
-    if ((bytes(26) & 0xff) != 0 || (bytes(28) & 0xff) != 0) return None
-    val bpp = if (ct == 2) 3 else 1
+    if ((bytes(26) & 0xff) != 0 || (bytes(28) & 0xff) != 0) return None // compression/interlace
+    val bpp = meta.channels.toInt // one byte per channel at bit depth 8
     val stride = bpp * w
-    // walk chunks: concatenate IDAT, capture PLTE
     val idat = new java.io.ByteArrayOutputStream()
     var palette: Array[Int] = null
     var i = 8
@@ -415,7 +310,6 @@ object ImageCodec {
       if (tag == "IEND") done = true
       i += 12 + len
     }
-    if (ct == 3 && palette == null) return None
     val inflater = new Inflater()
     inflater.setInput(idat.toByteArray)
     val raw = new Array[Byte](h * (stride + 1))
@@ -423,13 +317,15 @@ object ImageCodec {
     try {
       while (got < raw.length && !inflater.finished()) {
         val n = inflater.inflate(raw, got, raw.length - got)
-        if (n == 0) return None // truncated or FDICT — bail, don't spin
+        // n == 0 on an unfinished stream means no progress is possible:
+        // truncated input OR a preset-dictionary (FDICT) stream we don't
+        // support — either way bail rather than spin the executor thread
+        if (n == 0) return None
         got += n
       }
     } catch { case _: java.util.zip.DataFormatException => return None }
     finally inflater.end()
     if (got < raw.length) return None
-    // byte-level unfilter at the color type's bpp
     val samp = new Array[Int](h * stride)
     var y = 0
     while (y < h) {
@@ -453,22 +349,7 @@ object ImageCodec {
       }
       y += 1
     }
-    val px = new Array[Int](w * h)
-    var k = 0
-    if (ct == 2) {
-      while (k < px.length) {
-        px(k) = (samp(k * 3) << 16) | (samp(k * 3 + 1) << 8) | samp(k * 3 + 2)
-        k += 1
-      }
-    } else {
-      while (k < px.length) {
-        val idx = samp(k)
-        if (idx >= palette.length) return None
-        px(k) = palette(idx)
-        k += 1
-      }
-    }
-    Some((w, h, px))
+    Some(Png(w, h, ct, samp, palette))
   }
 
   // ---------------------------------------------------------------- BMP

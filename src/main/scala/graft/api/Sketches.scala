@@ -242,8 +242,8 @@ object Sketches {
   def cmsEstimates(depth: Int, width: Int, probes: Seq[String]): Column => Column =
     // the native finalizer (graft.functions.SketchExprs.CmsEstimates —
     // empty-sketch→zeros and the shape require live there); callers'
-    // sessions must have SketchExprs.register'd (the VectorExprs
-    // convention — every registered query body does)
+    // sessions must have VectorExprs.register'd (every registered query
+    // body does)
     (c: Column) => F.call_function("graft_cms_estimates",
       c.getField("counts"), c.getField("total"),
       F.lit(depth), F.lit(width), F.array(probes.map(F.lit): _*))

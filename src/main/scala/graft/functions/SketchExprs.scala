@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
@@ -22,7 +21,8 @@ import graft.api.Sketches.{DDSketch, KMVSketch}
   *
   * Static parameters (depth/width, probe list, α, quantile list) arrive
   * as literal children evaluated once; a NULL sketch input yields NULL
-  * (the UDF forms' behavior, made explicit).
+  * (the UDF forms' behavior, made explicit). Registered with every
+  * other graft function by [[VectorExprs.register]].
   */
 object SketchExprs {
 
@@ -146,12 +146,5 @@ object SketchExprs {
   def buildKmvOverlap(es: Seq[Expression]): Expression = {
     require(es.length == 4, s"graft_kmv_overlap expects 4 arguments, got ${es.length}")
     KmvOverlapExpr(es(0), es(1), es(2), es(3))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_cms_estimates", buildCmsEstimates, "internal")
-    reg.createOrReplaceTempFunction("graft_dd_quantiles", buildDdQuantiles, "internal")
-    reg.createOrReplaceTempFunction("graft_kmv_overlap", buildKmvOverlap, "internal")
   }
 }

@@ -537,20 +537,30 @@ object VectorExprs {
       asInt(es(3), "dim"))
   }
 
-  /** Idempotently register graft functions on a session so `expr("...")`
-    * and SQL can call them (vec_dot, graft_simhash, graft_minhash). */
+  /** Every graft SQL function — (name, implementing expression class,
+    * builder) — the one list [[register]] and [[graft.GraftExtensions]]
+    * both loop over. */
+  val functions: Seq[(String, Class[_ <: Expression], Seq[Expression] => Expression)] = Seq(
+    ("vec_dot", classOf[VectorDot], buildVecDot),
+    ("graft_simhash", classOf[SimHash64], buildSimHash),
+    ("graft_minhash", classOf[MinHashSig], buildMinHash),
+    ("graft_hyperplane_keys", classOf[HyperplaneKeys], buildHyperplaneKeys),
+    ("graft_nearest_centroids", classOf[NearestCentroids], buildNearestCentroids),
+    ("graft_adc", classOf[AdcDistance], buildAdc),
+    ("graft_pq_encode", classOf[PqEncodeExpr], buildPqEncode),
+    ("graft_adc_lut", classOf[AdcLutExpr], buildAdcLut),
+    ("graft_might_contain",
+      classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain],
+      buildMightContain),
+    ("graft_jaro_winkler", classOf[TextExprs.JaroWinkler], TextExprs.buildJaroWinkler),
+    ("graft_cms_estimates", classOf[SketchExprs.CmsEstimates], SketchExprs.buildCmsEstimates),
+    ("graft_dd_quantiles", classOf[SketchExprs.DdQuantiles], SketchExprs.buildDdQuantiles),
+    ("graft_kmv_overlap", classOf[SketchExprs.KmvOverlapExpr], SketchExprs.buildKmvOverlap))
+
+  /** Idempotently register every graft function on a session so
+    * `expr("...")` and SQL can call them. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vec_dot", buildVecDot, "internal")
-    reg.createOrReplaceTempFunction("graft_simhash", buildSimHash, "internal")
-    reg.createOrReplaceTempFunction("graft_minhash", buildMinHash, "internal")
-    reg.createOrReplaceTempFunction("graft_hyperplane_keys", buildHyperplaneKeys, "internal")
-    reg.createOrReplaceTempFunction("graft_nearest_centroids", buildNearestCentroids, "internal")
-    reg.createOrReplaceTempFunction("graft_might_contain", buildMightContain, "internal")
-    reg.createOrReplaceTempFunction("graft_adc", buildAdc, "internal")
-    reg.createOrReplaceTempFunction("graft_pq_encode", buildPqEncode, "internal")
-    reg.createOrReplaceTempFunction("graft_adc_lut", buildAdcLut, "internal")
-    reg.createOrReplaceTempFunction("graft_jaro_winkler",
-      TextExprs.buildJaroWinkler, "internal")
+    for ((name, _, build) <- functions) reg.createOrReplaceTempFunction(name, build, "internal")
   }
 }

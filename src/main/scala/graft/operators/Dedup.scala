@@ -693,7 +693,7 @@ object Dedup {
   private val qKmvOverlap = Q(
     "q_kmv_overlap",
     (s, dir) => {
-      graft.functions.SketchExprs.register(s)
+      graft.functions.VectorExprs.register(s)
       val k = 256
       val grams = Tables.documents(s, dir)
         .filter(col("text").isNotNull && col("source").isNotNull)

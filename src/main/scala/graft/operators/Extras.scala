@@ -407,7 +407,7 @@ object Extras {
   private val qApproxPercentile = Q(
     "q_approx_percentile",
     (s, dir) => {
-      graft.functions.SketchExprs.register(s)
+      graft.functions.VectorExprs.register(s)
       val alpha = 0.01
       Tables.lineitem(s, dir)
         .filter(col("l_extendedprice").isNotNull)

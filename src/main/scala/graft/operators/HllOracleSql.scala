@@ -6,8 +6,8 @@ package graft.operators
   * EDBT'13) is an approximate ESTIMATOR but a DETERMINISTIC function of
   * the input set, so the whole computation replays in SQL:
   *
-  *  - registers: hash = XXH64(seed 42) of the long's 8 LE bytes (the
-  *    [[XxhashSqlChain]] primitives — one word round + avalanche),
+  *  - registers: hash = XXH64(seed 42) of the long's 8 LE bytes
+  *    ([[XxhashSqlChain.emitLongHash]] — one word round + avalanche),
   *    idx = hash >>> (64−p), rho = nlz((hash << p) | 2^(p−1)) + 1 via
   *    an exact bit-length CASE chain; per-(group, idx) max — computed
   *    over DISTINCT (group, value), which leaves every register
@@ -31,7 +31,7 @@ package graft.operators
   * `tools/gen_hll_sql.py` against Spark dumps at sf0.001/0.01/0.1.
   */
 object HllOracleSql {
-  import XxhashSqlChain.{M64, P1, P2, P3, P4, P5}
+  import XxhashSqlChain.M64
 
   /** rsd mirrors q_approx_distinct's 0.02 → p = 12. */
   private val rsd = 0.02
@@ -49,38 +49,6 @@ object HllOracleSql {
       H.RAW_ESTIMATE_DATA(p - 4), H.BIAS_DATA(p - 4))
   }
 
-  private final class Chain {
-    val stages = scala.collection.mutable.ArrayBuffer[(String, String)]()
-    private var counter = 0
-    def stage(expr: String, carry: String = "*"): String = {
-      counter += 1
-      val name = s"h$counter"
-      val prev = if (stages.isEmpty) "vals" else stages.last._1
-      val col = s"z$counter"
-      stages += ((name, s"SELECT $carry, $expr AS $col FROM $prev"))
-      col
-    }
-    def mul(a: String, b: String): String = {
-      val M32 = "4294967296::HUGEINT"
-      val lo = stage(s"(($a)%$M32)*(($b)%$M32)")
-      val cross = stage(s"((($a)%$M32)*(($b)//$M32) + (($a)//$M32)*(($b)%$M32))%$M32")
-      stage(s"($lo + $cross*$M32)%$M64")
-    }
-    def rotl(x: String, r: Int): String = {
-      val hi = 1L << r
-      val lo = BigInt(1) << (64 - r)
-      stage(s"((($x)*$hi::HUGEINT)%$M64) + (($x)//$lo::HUGEINT)")
-    }
-    def xor(a: String, b: String): String = {
-      def i64(x: String) =
-        s"(CASE WHEN ($x) >= 9223372036854775808::HUGEINT THEN ($x) - $M64 ELSE ($x) END)::BIGINT"
-      val r = stage(s"xor(${i64(a)}, ${i64(b)})")
-      stage(s"CASE WHEN $r < 0 THEN $r::HUGEINT + $M64 ELSE $r::HUGEINT END")
-    }
-    def shr(x: String, s: Int): String =
-      stage(s"(($x)//${BigInt(1) << s}::HUGEINT)")
-  }
-
   private def dbl(d: Double): String = java.lang.Double.toString(d)
 
   /** The full estimator pipeline over a caller-supplied `vals` CTE body
@@ -91,18 +59,9 @@ object HllOracleSql {
   private def emitFor(valsBody: String, finalSel: String): String = {
     val (p, alphaM2, k, threshold, raw, bias) = helperTables
     val m = 1 << p
-    val c = new Chain
-    import c._
-    // XXH64 of the long's 8 LE bytes: h = seed + P5 + 8, one word round,
-    // avalanche (the <32-byte pipeline collapsed to its n = 8 case)
-    var h = stage(s"(42::HUGEINT + $P5 + 8::HUGEINT)%$M64")
-    val lane = mul(rotl(mul("w", P2), 31), P1)
-    h = stage(s"((${mul(rotl(xor(h, lane), 27), P1)}) + $P4)%$M64")
-    h = mul(xor(h, shr(h, 33)), P2)
-    h = mul(xor(h, shr(h, 29)), P3)
-    val fin = xor(h, shr(h, 32))
-    val ctes = c.stages.map { case (n, b) => s"$n AS ($b)" }.mkString(",\n")
-    val last = c.stages.last._1
+    // Spark's xxhash64 of the long (signed), back to unsigned HUGEINT
+    val (ctes, signed, last) = XxhashSqlChain.emitLongHash(finalCarry = "g", src = "vals")
+    val fin = s"(CASE WHEN $signed < 0 THEN $signed::HUGEINT + $M64 ELSE $signed::HUGEINT END)"
     val blen = (63 to (p - 1) by -1)
       .map(b => s"WHEN w2 >= ${BigInt(1) << b}::HUGEINT THEN ${b + 1}")
       .mkString(" ")

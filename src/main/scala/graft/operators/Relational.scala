@@ -430,7 +430,7 @@ object Relational {
   private val qQuantileRollup = Q(
     "q_quantile_rollup",
     (s, dir) => {
-      graft.functions.SketchExprs.register(s)
+      graft.functions.VectorExprs.register(s)
       val alpha = 0.01
       val qs = Seq(0.5, 0.9)
       val daily = Tables.events(s, dir)
@@ -477,7 +477,7 @@ object Relational {
   private val qFreqRollup = Q(
     "q_freq_rollup",
     (s, dir) => {
-      graft.functions.SketchExprs.register(s)
+      graft.functions.VectorExprs.register(s)
       val depth = 5; val width = 1024
       val tracked = Seq("click", "error", "purchase", "signup", "view", "absent_key")
       val daily = Tables.events(s, dir)

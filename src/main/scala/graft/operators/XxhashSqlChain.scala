@@ -143,9 +143,9 @@ private[operators] object XxhashSqlChain {
 
   /** The <32-byte pipeline collapsed to its n = 8 case: Spark's
     * `xxhash64(<bigint col>)` — XXH64(seed 42) of the long's 8 LE
-    * bytes (one word round + avalanche; the [[HllOracleSql]] register
-    * hash, factored here for the oracles that hash ID columns). Source
-    * CTE must be named `hvals` and carry a `w` column = the long as
+    * bytes (one word round + avalanche): the [[HllOracleSql]] register
+    * hash, and the hash of the oracles that hash ID columns. The source
+    * CTE (`src`, default `hvals`) must carry a `w` column = the long as
     * unsigned HUGEINT (`((CAST(id AS HUGEINT) % 2^64) + 2^64) % 2^64`).
     * Returns (ctes, signedHashCol, lastStageName); the hash column is
     * the SIGNED BIGINT Spark exposes (the orderBy/pmod input). */

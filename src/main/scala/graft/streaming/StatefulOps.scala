@@ -228,6 +228,25 @@ object StatefulOps {
   /** One flagged/scored point: z against the key's trailing window. */
   final case class ZScore(key: Long, id: Long, tsMs: Long, value: Double, z: Double)
 
+  /** A double as the batch operators' decimal(30,10) cast rounds it
+    * (scale 10, HALF_UP) — the rounding the streaming operators replay
+    * to match their batch forms bit for bit. */
+  private def dec(v: Double): BigDecimal =
+    BigDecimal(v).setScale(10, BigDecimal.RoundingMode.HALF_UP)
+
+  /** One windowed-EWMA step over a ring — the batch `TimeSeries.ewma`
+    * formula: each term v·(1−α)^age rounded by [[dec]], the exact sum
+    * over the closed-form weight total. */
+  private def ewmaStep(ring: Vector[Double], alpha: Double): Double = {
+    val beta = 1.0 - alpha
+    val m = ring.size
+    val num = ring.iterator.zipWithIndex
+      .map { case (v, j) => dec(v * math.pow(beta, (m - 1 - j).toDouble)) }
+      .sum
+    val den = (1.0 - math.pow(beta, m.toDouble)) / alpha
+    num.toDouble / den
+  }
+
   /** Streaming rolling z-score — the at-ingest form of
     * `TimeSeries.rollingZscore`: each point scores against its key's
     * trailing `windowRows` values, cross-batch, with state = ONE ring
@@ -250,8 +269,6 @@ object StatefulOps {
     implicit val stateEnc = Encoders.kryo[Vector[Double]]
     implicit val outEnc = Encoders.product[ZScore]
     implicit val keyEnc = Encoders.scalaLong
-    def dec(v: Double): BigDecimal =
-      BigDecimal(v).setScale(10, scala.math.BigDecimal.RoundingMode.HALF_UP)
     rows.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout()) {
         (key: Long, it: Iterator[ValRow], state: GroupState[Vector[Double]]) =>
@@ -297,21 +314,13 @@ object StatefulOps {
     implicit val stateEnc = Encoders.kryo[Vector[Double]]
     implicit val outEnc = Encoders.product[EwmaRow]
     implicit val keyEnc = Encoders.scalaLong
-    val beta = 1.0 - alpha
-    def dec(v: Double): BigDecimal =
-      BigDecimal(v).setScale(10, scala.math.BigDecimal.RoundingMode.HALF_UP)
     rows.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout()) {
         (key: Long, it: Iterator[ValRow], state: GroupState[Vector[Double]]) =>
           var ring = state.getOption.getOrElse(Vector.empty[Double])
           val out = it.toVector.sortBy(r => (r.tsMs, r.id)).map { r =>
             ring = (ring :+ r.value).takeRight(windowRows)
-            val m = ring.size
-            val num = ring.iterator.zipWithIndex
-              .map { case (v, j) => dec(v * math.pow(beta, (m - 1 - j).toDouble)) }
-              .sum
-            val den = (1.0 - math.pow(beta, m.toDouble)) / alpha
-            EwmaRow(key, r.id, r.tsMs, r.value, m.toLong, num.toDouble / den)
+            EwmaRow(key, r.id, r.tsMs, r.value, ring.size.toLong, ewmaStep(ring, alpha))
           }
           state.update(ring)
           out.iterator
@@ -342,18 +351,6 @@ object StatefulOps {
     implicit val stateEnc = Encoders.kryo[(Vector[Double], Vector[Double])]
     implicit val outEnc = Encoders.product[HoltRow]
     implicit val keyEnc = Encoders.scalaLong
-    val beta = 1.0 - alpha
-    def dec(v: Double): BigDecimal =
-      BigDecimal(v).setScale(10, scala.math.BigDecimal.RoundingMode.HALF_UP)
-    // one windowed-EWMA step over a ring — the batch ewma formula
-    def smooth(ring: Vector[Double]): Double = {
-      val m = ring.size
-      val num = ring.iterator.zipWithIndex
-        .map { case (v, j) => dec(v * math.pow(beta, (m - 1 - j).toDouble)) }
-        .sum
-      val den = (1.0 - math.pow(beta, m.toDouble)) / alpha
-      num.toDouble / den
-    }
     rows.groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout()) {
         (key: Long, it: Iterator[ValRow],
@@ -362,9 +359,9 @@ object StatefulOps {
             state.getOption.getOrElse((Vector.empty[Double], Vector.empty[Double]))
           val out = it.toVector.sortBy(r => (r.tsMs, r.id)).map { r =>
             vRing = (vRing :+ r.value).takeRight(windowRows)
-            val sp = smooth(vRing)
+            val sp = ewmaStep(vRing, alpha)
             spRing = (spRing :+ sp).takeRight(windowRows)
-            val sdp = smooth(spRing)
+            val sdp = ewmaStep(spRing, alpha)
             val level = 2.0 * sp - sdp
             val trend = (alpha / (1.0 - alpha)) * (sp - sdp)
             HoltRow(key, r.id, r.tsMs, r.value, level, trend, level + trend)
@@ -668,8 +665,6 @@ object StatefulOps {
     implicit val stateEnc = Encoders.product[SessState]
     implicit val outEnc = Encoders.product[Session]
     implicit val keyEnc = Encoders.scalaLong
-    def quant(v: Double): BigDecimal =
-      BigDecimal(v).setScale(10, BigDecimal.RoundingMode.HALF_UP)
     def finish(key: Long, s: SessState): Session =
       Session(key, s.startMs, s.endMs, s.cnt,
         math.floor(s.sum.toDouble * 10000) / 10000)
@@ -689,12 +684,12 @@ object StatefulOps {
               cur match {
                 case Some(s) if r.tsMs - s.endMs >= gapMs =>
                   out += finish(key, s)
-                  cur = Some(SessState(r.tsMs, r.tsMs, 1L, quant(r.value)))
+                  cur = Some(SessState(r.tsMs, r.tsMs, 1L, dec(r.value)))
                 case Some(s) =>
                   cur = Some(SessState(math.min(s.startMs, r.tsMs),
-                    math.max(s.endMs, r.tsMs), s.cnt + 1, s.sum + quant(r.value)))
+                    math.max(s.endMs, r.tsMs), s.cnt + 1, s.sum + dec(r.value)))
                 case None =>
-                  cur = Some(SessState(r.tsMs, r.tsMs, 1L, quant(r.value)))
+                  cur = Some(SessState(r.tsMs, r.tsMs, 1L, dec(r.value)))
               }
             }
             cur.foreach { s =>

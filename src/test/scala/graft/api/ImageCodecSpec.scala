@@ -354,6 +354,8 @@ class ImageCodecSpec extends AnyFunSuite {
       val Some((dw, dh, out)) = ImageCodec.decodePngColor(bytes)
       assert((dw, dh) == (w, h))
       assert(out.sameElements(idx.map(pal)), s"palette pixel mismatch id=$id")
+      // indices are not gray levels: the gray decoder takes type 0 only
+      assert(ImageCodec.decodePngGray(bytes).isEmpty)
       // ImageIO agrees on the palette-expanded pixels
       val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
       assert(img != null, "ImageIO could not read our palette PNG")

@@ -248,6 +248,28 @@ class JpegCodecSpec extends AnyFunSuite {
     val Some((_, _, g)) = JpegCodec.decodeJpegColor(gray)
     val Some((_, _, g1)) = JpegCodec.decodeJpegGray(gray)
     assert(g.indices.forall(i => g(i) == ((g1(i) << 16) | (g1(i) << 8) | g1(i))))
+    // a 1-component scan is non-interleaved (T.81 A.2.2): sampling
+    // factors of 2×2 in the frame header must not change the block
+    // layout — same pixels as the 0x11 original, and ImageIO agrees
+    for ((w, h) <- Seq((32, 16), (24, 8))) {
+      val px = flatBlocks(w + h, w, h)
+      val patched = JpegCodec.encodeJpegGray(w, h, px).clone()
+      val sof = patched.indices.find(i =>
+        (patched(i) & 0xff) == 0xff && (patched(i + 1) & 0xff) == 0xc0).get
+      assert((patched(sof + 11) & 0xff) == 0x11)
+      patched(sof + 11) = 0x22.toByte
+      JpegCodec.decodeJpegColor(patched) match {
+        case Some((dw, dh, out)) =>
+          assert((dw, dh) == (w, h))
+          assert(out.sameElements(px.map(v => (v << 16) | (v << 8) | v)),
+            s"2x2-sampled gray frame ${w}x$h mis-decoded")
+        case None => fail(s"2x2-sampled gray frame ${w}x$h returned None")
+      }
+      val img = ImageIO.read(new java.io.ByteArrayInputStream(patched))
+      assert(img != null && img.getWidth == w && img.getHeight == h)
+      for (y <- 0 until h; x <- 0 until w)
+        assert(img.getRaster.getSample(x, y, 0) == px(y * w + x), s"ImageIO differs at ($x,$y)")
+    }
     assert(JpegCodec.decodeJpegColor(Array.emptyByteArray).isEmpty)
     assert(JpegCodec.decodeJpegColor("junk".getBytes).isEmpty)
     val good = JpegCodec.encodeJpegColor(16, 16, flatTiles(2L, 16, 16, 16))

@@ -13,7 +13,7 @@ class OperatorPropertiesSpec extends SparkTestBase {
 
   // the sketch finalizers are native registered functions (SketchExprs);
   // direct api.Sketches column-form calls here need them on the session
-  graft.functions.SketchExprs.register(spark)
+  graft.functions.VectorExprs.register(spark)
 
   private def check(p: Prop): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(200), p)

@@ -628,12 +628,14 @@ class StreamingSemanticsSpec extends SparkTestBase {
       .getMethod("registerFunctions",
         classOf[org.apache.spark.sql.catalyst.analysis.FunctionRegistry])
       .invoke(ext, reg)
-    val expected = Seq("vec_dot", "graft_simhash", "graft_minhash",
-      "graft_hyperplane_keys", "graft_nearest_centroids", "graft_adc",
-      "graft_pq_encode", "graft_adc_lut", "graft_might_contain")
+    val expected = graft.functions.VectorExprs.functions.map(_._1)
+    assert(expected.size == 13 && expected.distinct == expected, expected.toString)
     val missing = expected.filterNot(n =>
       reg.functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
     assert(missing.isEmpty, s"extension entry point failed to register: $missing")
+    val unregistered = expected.filterNot(n => spark.sessionState.functionRegistry
+      .functionExists(org.apache.spark.sql.catalyst.FunctionIdentifier(n)))
+    assert(unregistered.isEmpty, s"register() failed to register: $unregistered")
   }
 
   test("vec_dot returns NULL on array length mismatch (not a truncated product)") {
