@@ -40,10 +40,7 @@ object AnnOracleSql {
     s"(CASE WHEN ((($p) * 1000003 + ($d) * 7919 + 12345) * 2654435761 // 131072) % 2 = 0 " +
       "THEN -1.0 ELSE 1.0 END)"
 
-  private def cos(a: String, b: String): String =
-    s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))" +
-      s" / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))" +
-      s" * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"
+  import OracleSql.cos
 
   /** Java's Math.log1p(-0.8) — the banding-curve numerator constant. */
   private val Log1pNeg08 = java.lang.Double.toString(math.log1p(-0.8))

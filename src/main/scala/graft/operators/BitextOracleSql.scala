@@ -27,7 +27,7 @@ object BitextOracleSql {
   val Threshold = 1.02
   private val Th = java.lang.Double.toString(Threshold)
 
-  private def cos(a: String, b: String) = IvfOracleSql.cosSql(a, b)
+  import OracleSql.cos
 
   /** The shared margin tail over CTE `bpr` (a_id, b_id, c). */
   private def tail: String = {

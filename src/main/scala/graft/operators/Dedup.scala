@@ -44,17 +44,7 @@ object Dedup {
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
           round(col("jaccard"), 4).as("jaccard"))
         .orderBy("doc_a", "doc_b"),
-    Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 sh0 AS (SELECT DISTINCT doc_id,
-                          unnest(list_transform(generate_series(1, len(t) - 2),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-                        FROM toks),
-                 hot AS (SELECT s FROM sh0 GROUP BY s HAVING count(*) > 10),
-                 sh AS (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-                 sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-                 inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-                           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                           GROUP BY 1, 2)
+    Some(s"""WITH ${OracleSql.trigramInter()}
             SELECT doc_a, doc_b, round(i * 1.0 / (x.n + y.n - i), 4) AS jaccard
             FROM inter JOIN sz x ON x.doc_id = doc_a JOIN sz y ON y.doc_id = doc_b
             WHERE i * 1.0 / (x.n + y.n - i) >= 0.5
@@ -103,17 +93,7 @@ object Dedup {
         .select(col("id_a").as("doc_a"), col("id_b").as("doc_b"),
           round(col("cont_a"), 4).as("cont_a"), round(col("cont_b"), 4).as("cont_b"))
         .orderBy("doc_a", "doc_b"),
-    Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 sh0 AS (SELECT DISTINCT doc_id,
-                          unnest(list_transform(generate_series(1, len(t) - 2),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-                        FROM toks),
-                 hot AS (SELECT s FROM sh0 GROUP BY s HAVING count(*) > 10),
-                 sh AS (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-                 sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-                 inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-                           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                           GROUP BY 1, 2)
+    Some(s"""WITH ${OracleSql.trigramInter()}
             SELECT doc_a, doc_b, round(i * 1.0 / x.n, 4) AS cont_a,
                    round(i * 1.0 / y.n, 4) AS cont_b
             FROM inter JOIN sz x ON x.doc_id = doc_a JOIN sz y ON y.doc_id = doc_b
@@ -246,31 +226,23 @@ object Dedup {
         .select(col("id").as("doc_id"), col("cluster_id"))
         .orderBy("doc_id")
     },
-    Some("""WITH RECURSIVE
-                 toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 sh0 AS (SELECT DISTINCT doc_id,
-                          unnest(list_transform(generate_series(1, len(t) - 2),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-                        FROM toks),
-                 hot AS (SELECT s FROM sh0 GROUP BY s HAVING count(*) > 10),
-                 sh AS (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-                 sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-                 inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-                           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                           GROUP BY 1, 2),
-                 pairs AS (SELECT doc_a, doc_b
-                           FROM inter JOIN sz x ON x.doc_id = doc_a JOIN sz y ON y.doc_id = doc_b
-                           WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
-                 edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-                           UNION SELECT doc_b, doc_a FROM pairs),
-                 reach AS (SELECT u, v FROM edges
-                           UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-                 comp AS (SELECT u AS doc_id, min(v) AS mn FROM reach GROUP BY u)
+    Some(s"""WITH RECURSIVE
+                 ${OracleSql.trigramPairs()},
+                 ${OracleSql.pairComponents}
             SELECT d.doc_id,
                    coalesce(least(c.mn, d.doc_id), d.doc_id) AS cluster_id
             FROM documents d LEFT JOIN comp c USING (doc_id)
             ORDER BY doc_id""")
   )
+
+  /** The oracle of [[qDecontaminate]] and [[qDecontaminateBloom]]: same
+    * answer, different shapes. */
+  private val decontaminateSql =
+    s"""WITH ${OracleSql.evalFingerprints}
+            SELECT d.doc_id FROM documents d
+            WHERE d.doc_id % 97 <> 0
+              AND ${OracleSql.notInEval("d.text")}
+            ORDER BY d.doc_id"""
 
   /** Eval-set decontamination: drop every training document whose
     * normalized content fingerprint appears in the held-out set — the
@@ -292,13 +264,7 @@ object Dedup {
         .select(col("doc_id"))
         .orderBy("doc_id")
     },
-    Some("""WITH ev AS (SELECT DISTINCT md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fp
-                        FROM documents WHERE doc_id % 97 = 0)
-            SELECT d.doc_id FROM documents d
-            WHERE d.doc_id % 97 <> 0
-              AND NOT EXISTS (SELECT 1 FROM ev
-                    WHERE ev.fp = md5(lower(regexp_replace(d.text, '\s+', ' ', 'g'))))
-            ORDER BY d.doc_id""")
+    Some(decontaminateSql)
   )
 
   /** Bloom-filter decontamination — same answer as [[qDecontaminate]]
@@ -313,13 +279,7 @@ object Dedup {
       TextDedup.decontaminateBloom(Tables.documents(s, dir), "doc_id", "text",
           isEval = col("doc_id") % 97 === 0, expectedEvalItems = 1000L)
         .orderBy("doc_id"),
-    Some("""WITH ev AS (SELECT DISTINCT md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fp
-                        FROM documents WHERE doc_id % 97 = 0)
-            SELECT d.doc_id FROM documents d
-            WHERE d.doc_id % 97 <> 0
-              AND NOT EXISTS (SELECT 1 FROM ev
-                    WHERE ev.fp = md5(lower(regexp_replace(d.text, '\s+', ' ', 'g'))))
-            ORDER BY d.doc_id""")
+    Some(decontaminateSql)
   )
 
   /** Per-source duplication QA (TextDedup.duplicationProfile): exact-dup
@@ -339,6 +299,22 @@ object Dedup {
             ORDER BY source NULLS FIRST""")
   )
 
+  /** The oracle of [[qDecontaminateNgram]] and
+    * [[qDecontaminateNgramBloom]]: any shared eval 4-gram drops the doc. */
+  private val decontaminateNgramSql =
+    """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+             gr AS (SELECT DISTINCT doc_id,
+                      unnest(list_transform(generate_series(1, len(t) - 3),
+                        i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS g
+                    FROM toks WHERE len(t) >= 4),
+             ev AS (SELECT DISTINCT g FROM gr WHERE doc_id % 97 = 0),
+             bad AS (SELECT DISTINCT doc_id FROM gr
+                     WHERE doc_id % 97 <> 0 AND g IN (SELECT g FROM ev))
+          SELECT d.doc_id FROM documents d
+          WHERE d.doc_id % 97 <> 0
+            AND NOT EXISTS (SELECT 1 FROM bad WHERE bad.doc_id = d.doc_id)
+          ORDER BY doc_id"""
+
   /** N-gram overlap decontamination (TextDedup.decontaminateNgram): drop
     * every training doc sharing ANY word n-gram with the eval set — the
     * published 13-gram method, strictly stronger than whole-document
@@ -353,18 +329,7 @@ object Dedup {
       TextDedup.decontaminateNgram(Tables.documents(s, dir), "doc_id", "text",
           isEval = col("doc_id") % 97 === 0, n = 4)
         .orderBy("doc_id"),
-    Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 gr AS (SELECT DISTINCT doc_id,
-                          unnest(list_transform(generate_series(1, len(t) - 3),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS g
-                        FROM toks WHERE len(t) >= 4),
-                 ev AS (SELECT DISTINCT g FROM gr WHERE doc_id % 97 = 0),
-                 bad AS (SELECT DISTINCT doc_id FROM gr
-                         WHERE doc_id % 97 <> 0 AND g IN (SELECT g FROM ev))
-            SELECT d.doc_id FROM documents d
-            WHERE d.doc_id % 97 <> 0
-              AND NOT EXISTS (SELECT 1 FROM bad WHERE bad.doc_id = d.doc_id)
-            ORDER BY doc_id""")
+    Some(decontaminateNgramSql)
   )
 
   /** Cross-source content overlap (TextDedup.groupOverlap at 3-gram
@@ -428,16 +393,7 @@ object Dedup {
     (s, dir) =>
       TextDedup.spanDedup(Tables.documents(s, dir), "doc_id", "text", spanTokens = 10)
         .orderBy("doc_id"),
-    Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-                          FROM documents WHERE text IS NOT NULL),
-                 spans AS (SELECT doc_id,
-                             unnest(list_transform(
-                               generate_series(0, CAST(ceil(len(t) / 10.0) AS INT) - 1),
-                               i -> struct_pack(pos := i,
-                                 span := array_to_string(list_slice(t, i*10 + 1, i*10 + 10), ' '))))
-                             AS s
-                           FROM toks),
-                 sp AS (SELECT doc_id, s.pos AS pos, s.span AS span FROM spans),
+    Some(s"""WITH ${OracleSql.spans10},
                  kept AS (SELECT doc_id, pos, span FROM (
                             SELECT doc_id, pos, span,
                                    row_number() OVER (PARTITION BY span
@@ -467,16 +423,7 @@ object Dedup {
       TextDedup.boilerplateStrip(Tables.documents(s, dir), "doc_id", "text",
         spanTokens = 10, minDocs = 3)
         .orderBy("doc_id"),
-    Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t
-                          FROM documents WHERE text IS NOT NULL),
-                 spans AS (SELECT doc_id,
-                             unnest(list_transform(
-                               generate_series(0, CAST(ceil(len(t) / 10.0) AS INT) - 1),
-                               i -> struct_pack(pos := i,
-                                 span := array_to_string(list_slice(t, i*10 + 1, i*10 + 10), ' '))))
-                             AS s
-                           FROM toks),
-                 sp AS (SELECT doc_id, s.pos AS pos, s.span AS span FROM spans),
+    Some(s"""WITH ${OracleSql.spans10},
                  boiler AS (SELECT span FROM (
                               SELECT span, count(DISTINCT doc_id) AS nd
                               FROM sp GROUP BY span) WHERE nd >= 3),
@@ -600,8 +547,8 @@ object Dedup {
           (floor((col("words").cast("double") / col("n_docs")) * 1e4 + 0.5) / 1e4)
             .as("mean_words"))
         .orderBy("host"),
-    Some("""WITH d AS (SELECT source || '.example.com' AS host,
-              md5(lower(regexp_replace(text, '\s+', ' '))) AS fp,
+    Some(s"""WITH d AS (SELECT source || '.example.com' AS host,
+              ${OracleSql.fingerprint("text")} AS fp,
               len(string_split(text, ' ')) AS w
             FROM documents)
         SELECT host, CAST(count(*) AS BIGINT) AS n_docs,
@@ -729,18 +676,7 @@ object Dedup {
       TextDedup.decontaminateNgramBloom(Tables.documents(s, dir), "doc_id", "text",
           isEval = col("doc_id") % 97 === 0, n = 4, expectedEvalGrams = 10000L)
         .orderBy("doc_id"),
-    Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 gr AS (SELECT DISTINCT doc_id,
-                          unnest(list_transform(generate_series(1, len(t) - 3),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2] || ' ' || t[i+3])) AS g
-                        FROM toks WHERE len(t) >= 4),
-                 ev AS (SELECT DISTINCT g FROM gr WHERE doc_id % 97 = 0),
-                 bad AS (SELECT DISTINCT doc_id FROM gr
-                         WHERE doc_id % 97 <> 0 AND g IN (SELECT g FROM ev))
-            SELECT d.doc_id FROM documents d
-            WHERE d.doc_id % 97 <> 0
-              AND NOT EXISTS (SELECT 1 FROM bad WHERE bad.doc_id = d.doc_id)
-            ORDER BY doc_id""")
+    Some(decontaminateNgramSql)
   )
 
   /** Dedup survivors: the kept corpus after near-dup clustering — one
@@ -758,26 +694,9 @@ object Dedup {
         .select(col("id").as("doc_id"))
         .orderBy("doc_id")
     },
-    Some("""WITH RECURSIVE
-                 toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 sh0 AS (SELECT DISTINCT doc_id,
-                          unnest(list_transform(generate_series(1, len(t) - 2),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-                        FROM toks),
-                 hot AS (SELECT s FROM sh0 GROUP BY s HAVING count(*) > 10),
-                 sh AS (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-                 sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-                 inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-                           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                           GROUP BY 1, 2),
-                 pairs AS (SELECT doc_a, doc_b
-                           FROM inter JOIN sz x ON x.doc_id = doc_a JOIN sz y ON y.doc_id = doc_b
-                           WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
-                 edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-                           UNION SELECT doc_b, doc_a FROM pairs),
-                 reach AS (SELECT u, v FROM edges
-                           UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-                 comp AS (SELECT u AS doc_id, min(v) AS mn FROM reach GROUP BY u)
+    Some(s"""WITH RECURSIVE
+                 ${OracleSql.trigramPairs()},
+                 ${OracleSql.pairComponents}
             SELECT d.doc_id
             FROM documents d LEFT JOIN comp c USING (doc_id)
             WHERE coalesce(least(c.mn, d.doc_id), d.doc_id) = d.doc_id
@@ -799,13 +718,13 @@ object Dedup {
       TextDedup.contaminationReport(Tables.documents(s, dir), "doc_id", "text",
           isEval = col("doc_id") % 97 === 0)
         .orderBy("eval_id"),
-    Some("""WITH ev AS (SELECT doc_id AS eval_id,
-                          md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fp
+    Some(s"""WITH ev AS (SELECT doc_id AS eval_id,
+                          ${OracleSql.fingerprint("text")} AS fp
                         FROM documents WHERE doc_id % 97 = 0)
             SELECT ev.eval_id,
               CAST((SELECT count(*) FROM documents d
                     WHERE d.doc_id % 97 <> 0
-                      AND md5(lower(regexp_replace(d.text, '\s+', ' ', 'g'))) = ev.fp)
+                      AND ${OracleSql.fingerprint("d.text")} = ev.fp)
                    AS BIGINT) AS n_train_dups
             FROM ev ORDER BY ev.eval_id""")
   )
@@ -831,42 +750,14 @@ object Dedup {
           (floor(col("rank") * col("n_nodes") * 1000000) / 1000000.0).as("rank_n"))
         .orderBy("doc_id")
     },
-    Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 sh0 AS (SELECT DISTINCT doc_id,
-                          unnest(list_transform(generate_series(1, len(t) - 2),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-                        FROM toks),
-                 hot AS (SELECT s FROM sh0 GROUP BY s HAVING count(*) > 10),
-                 sh AS MATERIALIZED (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-                 sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-                 inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-                           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                           GROUP BY 1, 2),
-                 pairs AS MATERIALIZED (SELECT doc_a, doc_b
-                           FROM inter JOIN sz x ON x.doc_id = doc_a JOIN sz y ON y.doc_id = doc_b
-                           WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
-                 e AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
-                       UNION ALL SELECT doc_b, doc_a FROM pairs),
+    Some(s"""WITH ${OracleSql.trigramPairs()},
+                 ${OracleSql.pairEdges},
                  deg AS (SELECT u, count(*) AS deg FROM e GROUP BY u),
                  ed AS MATERIALIZED (SELECT e.u, e.v, deg.deg FROM e JOIN deg USING (u)),
                  nn AS (SELECT count(DISTINCT doc_id) AS n FROM documents),
                  r0 AS MATERIALIZED (SELECT doc_id AS id, CAST(1.0 AS DOUBLE) / nn.n AS rank
                         FROM documents, nn),
-                 c1 AS (SELECT ed.v AS id, sum(CAST(r.rank / ed.deg AS DECIMAL(30,10))) AS cs
-                        FROM ed JOIN r0 r ON r.id = ed.u GROUP BY ed.v),
-                 r1 AS MATERIALIZED (SELECT r.id, (1 - CAST(0.85 AS DOUBLE)) / nn.n
-                          + CAST(0.85 AS DOUBLE) * coalesce(CAST(c1.cs AS DOUBLE), CAST(0.0 AS DOUBLE)) AS rank
-                        FROM r0 r CROSS JOIN nn LEFT JOIN c1 ON c1.id = r.id),
-                 c2 AS (SELECT ed.v AS id, sum(CAST(r.rank / ed.deg AS DECIMAL(30,10))) AS cs
-                        FROM ed JOIN r1 r ON r.id = ed.u GROUP BY ed.v),
-                 r2 AS MATERIALIZED (SELECT r.id, (1 - CAST(0.85 AS DOUBLE)) / nn.n
-                          + CAST(0.85 AS DOUBLE) * coalesce(CAST(c2.cs AS DOUBLE), CAST(0.0 AS DOUBLE)) AS rank
-                        FROM r1 r CROSS JOIN nn LEFT JOIN c2 ON c2.id = r.id),
-                 c3 AS (SELECT ed.v AS id, sum(CAST(r.rank / ed.deg AS DECIMAL(30,10))) AS cs
-                        FROM ed JOIN r2 r ON r.id = ed.u GROUP BY ed.v),
-                 r3 AS (SELECT r.id, (1 - CAST(0.85 AS DOUBLE)) / nn.n
-                          + CAST(0.85 AS DOUBLE) * coalesce(CAST(c3.cs AS DOUBLE), CAST(0.0 AS DOUBLE)) AS rank
-                        FROM r2 r CROSS JOIN nn LEFT JOIN c3 ON c3.id = r.id)
+                 ${OracleSql.pageRankRounds(3)}
             SELECT r3.id AS doc_id,
                    floor(r3.rank * nn.n * 1000000) / 1000000 AS rank_n
             FROM r3 CROSS JOIN nn ORDER BY doc_id""")
@@ -895,49 +786,9 @@ object Dedup {
         .select(col("id").as("doc_id"), col("community"))
         .orderBy("doc_id")
     },
-    Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 sh0 AS (SELECT DISTINCT doc_id,
-                          unnest(list_transform(generate_series(1, len(t) - 2),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-                        FROM toks),
-                 hot AS (SELECT s FROM sh0 GROUP BY s HAVING count(*) > 10),
-                 sh AS MATERIALIZED (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-                 sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-                 inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-                           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                           GROUP BY 1, 2),
-                 -- MATERIALIZED is load-bearing (the IvfOracleSql lesson):
-                 -- un-materialized, DuckDB re-inlines pairs/e/l1-l3 per
-                 -- reference, and the 3-round LPA chain compounds the
-                 -- shingle self-join EXPONENTIALLY (measured: >78 GB of
-                 -- spill at a 2x fixture; materialized, sf0.3 passes)
-                 pairs AS MATERIALIZED (SELECT doc_a, doc_b
-                           FROM inter JOIN sz x ON x.doc_id = doc_a JOIN sz y ON y.doc_id = doc_b
-                           WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
-                 e AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
-                       UNION ALL SELECT doc_b, doc_a FROM pairs),
-                 l0 AS (SELECT doc_id AS id, doc_id AS lab FROM documents),
-                 n1 AS (SELECT e.u AS id, l.lab, count(*) AS c
-                        FROM e JOIN l0 l ON l.id = e.v GROUP BY 1, 2),
-                 t1 AS (SELECT id, lab, row_number() OVER (PARTITION BY id
-                          ORDER BY c DESC, lab) AS rn FROM n1),
-                 l1 AS MATERIALIZED (SELECT l.id, coalesce(t.lab, l.lab) AS lab
-                        FROM l0 l LEFT JOIN (SELECT id, lab FROM t1 WHERE rn = 1) t
-                          ON t.id = l.id),
-                 n2 AS (SELECT e.u AS id, l.lab, count(*) AS c
-                        FROM e JOIN l1 l ON l.id = e.v GROUP BY 1, 2),
-                 t2 AS (SELECT id, lab, row_number() OVER (PARTITION BY id
-                          ORDER BY c DESC, lab) AS rn FROM n2),
-                 l2 AS MATERIALIZED (SELECT l.id, coalesce(t.lab, l.lab) AS lab
-                        FROM l1 l LEFT JOIN (SELECT id, lab FROM t2 WHERE rn = 1) t
-                          ON t.id = l.id),
-                 n3 AS (SELECT e.u AS id, l.lab, count(*) AS c
-                        FROM e JOIN l2 l ON l.id = e.v GROUP BY 1, 2),
-                 t3 AS (SELECT id, lab, row_number() OVER (PARTITION BY id
-                          ORDER BY c DESC, lab) AS rn FROM n3),
-                 l3 AS (SELECT l.id, coalesce(t.lab, l.lab) AS lab
-                        FROM l2 l LEFT JOIN (SELECT id, lab FROM t3 WHERE rn = 1) t
-                          ON t.id = l.id)
+    Some(s"""WITH ${OracleSql.trigramPairs()},
+                 ${OracleSql.pairEdges},
+                 ${OracleSql.labelPropRounds(3)}
             SELECT CAST(id AS BIGINT) AS doc_id, CAST(lab AS BIGINT) AS community
             FROM l3 ORDER BY doc_id""")
   )
@@ -963,22 +814,8 @@ object Dedup {
         .select(col("id").as("doc_id"), col("hop"))
         .orderBy("doc_id")
     },
-    Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 sh0 AS (SELECT DISTINCT doc_id,
-                          unnest(list_transform(generate_series(1, len(t) - 2),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-                        FROM toks),
-                 hot AS (SELECT s FROM sh0 GROUP BY s HAVING count(*) > 10),
-                 sh AS MATERIALIZED (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-                 sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-                 inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-                           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                           GROUP BY 1, 2),
-                 pairs AS MATERIALIZED (SELECT doc_a, doc_b
-                           FROM inter JOIN sz x ON x.doc_id = doc_a JOIN sz y ON y.doc_id = doc_b
-                           WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
-                 e AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
-                       UNION ALL SELECT doc_b, doc_a FROM pairs),
+    Some(s"""WITH ${OracleSql.trigramPairs()},
+                 ${OracleSql.pairEdges},
                  dup AS (SELECT text FROM documents GROUP BY text HAVING count(*) > 1),
                  s0 AS (SELECT DISTINCT d.doc_id AS id FROM documents d
                         JOIN dup ON d.text = dup.text),
@@ -1018,49 +855,9 @@ object Dedup {
       graft.api.Graph.modularity(pairs, "id_a", "id_b",
         comm, "id", "community")
     },
-    Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 sh0 AS (SELECT DISTINCT doc_id,
-                          unnest(list_transform(generate_series(1, len(t) - 2),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-                        FROM toks),
-                 hot AS (SELECT s FROM sh0 GROUP BY s HAVING count(*) > 10),
-                 sh AS MATERIALIZED (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-                 sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-                 inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-                           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                           GROUP BY 1, 2),
-                 -- MATERIALIZED is load-bearing (the IvfOracleSql lesson):
-                 -- un-materialized, DuckDB re-inlines pairs/e/l1-l3 per
-                 -- reference, and the 3-round LPA chain compounds the
-                 -- shingle self-join EXPONENTIALLY (measured: >78 GB of
-                 -- spill at a 2x fixture; materialized, sf0.3 passes)
-                 pairs AS MATERIALIZED (SELECT doc_a, doc_b
-                           FROM inter JOIN sz x ON x.doc_id = doc_a JOIN sz y ON y.doc_id = doc_b
-                           WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
-                 e AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
-                       UNION ALL SELECT doc_b, doc_a FROM pairs),
-                 l0 AS (SELECT doc_id AS id, doc_id AS lab FROM documents),
-                 n1 AS (SELECT e.u AS id, l.lab, count(*) AS c
-                        FROM e JOIN l0 l ON l.id = e.v GROUP BY 1, 2),
-                 t1 AS (SELECT id, lab, row_number() OVER (PARTITION BY id
-                          ORDER BY c DESC, lab) AS rn FROM n1),
-                 l1 AS MATERIALIZED (SELECT l.id, coalesce(t.lab, l.lab) AS lab
-                        FROM l0 l LEFT JOIN (SELECT id, lab FROM t1 WHERE rn = 1) t
-                          ON t.id = l.id),
-                 n2 AS (SELECT e.u AS id, l.lab, count(*) AS c
-                        FROM e JOIN l1 l ON l.id = e.v GROUP BY 1, 2),
-                 t2 AS (SELECT id, lab, row_number() OVER (PARTITION BY id
-                          ORDER BY c DESC, lab) AS rn FROM n2),
-                 l2 AS MATERIALIZED (SELECT l.id, coalesce(t.lab, l.lab) AS lab
-                        FROM l1 l LEFT JOIN (SELECT id, lab FROM t2 WHERE rn = 1) t
-                          ON t.id = l.id),
-                 n3 AS (SELECT e.u AS id, l.lab, count(*) AS c
-                        FROM e JOIN l2 l ON l.id = e.v GROUP BY 1, 2),
-                 t3 AS (SELECT id, lab, row_number() OVER (PARTITION BY id
-                          ORDER BY c DESC, lab) AS rn FROM n3),
-                 l3 AS MATERIALIZED (SELECT l.id, coalesce(t.lab, l.lab) AS lab
-                        FROM l2 l LEFT JOIN (SELECT id, lab FROM t3 WHERE rn = 1) t
-                          ON t.id = l.id),
+    Some(s"""WITH ${OracleSql.trigramPairs()},
+                 ${OracleSql.pairEdges},
+                 ${OracleSql.labelPropRounds(3)},
                  ein AS (SELECT la.lab AS c, count(*) AS ec
                          FROM pairs p
                          JOIN l3 la ON la.id = p.doc_a
@@ -1097,20 +894,7 @@ object Dedup {
         n = 3, threshold = 0.5, maxShingleDf = 10L)
       graft.api.Graph.triangleStats(pairs, "id_a", "id_b")
     },
-    Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 sh0 AS (SELECT DISTINCT doc_id,
-                          unnest(list_transform(generate_series(1, len(t) - 2),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-                        FROM toks),
-                 hot AS (SELECT s FROM sh0 GROUP BY s HAVING count(*) > 10),
-                 sh AS MATERIALIZED (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-                 sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-                 inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-                           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                           GROUP BY 1, 2),
-                 pairs AS MATERIALIZED (SELECT doc_a, doc_b
-                           FROM inter JOIN sz x ON x.doc_id = doc_a JOIN sz y ON y.doc_id = doc_b
-                           WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
+    Some(s"""WITH ${OracleSql.trigramPairs()},
                  deg AS MATERIALIZED (SELECT u, count(*) AS deg FROM
                            (SELECT doc_a AS u FROM pairs
                             UNION ALL SELECT doc_b FROM pairs) GROUP BY u),
@@ -1150,16 +934,16 @@ object Dedup {
       TextDedup.corpusDiff(docs, newc, "doc_id", "text", "source")
         .orderBy(asc_nulls_first("source"))
     },
-    Some("""WITH newc AS (
+    Some(s"""WITH newc AS (
               SELECT doc_id,
                      CASE WHEN doc_id % 11 = 0 THEN text || ' v2' ELSE text END AS text,
                      source
               FROM documents WHERE doc_id % 7 <> 0
               UNION ALL
               SELECT doc_id + 1000000, text, source FROM documents WHERE doc_id % 13 = 0),
-                 o AS (SELECT doc_id, md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS ofp,
+                 o AS (SELECT doc_id, ${OracleSql.fingerprint("text")} AS ofp,
                          source AS og FROM documents),
-                 n AS (SELECT doc_id, md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS nfp,
+                 n AS (SELECT doc_id, ${OracleSql.fingerprint("text")} AS nfp,
                          source AS ng FROM newc),
                  j AS (SELECT coalesce(n.ng, o.og) AS src,
                          (o.doc_id IS NOT NULL) AS in_old,
@@ -1229,20 +1013,7 @@ object Dedup {
         .groupBy("degree").agg(count(lit(1)).as("n_nodes"))
         .orderBy(asc_nulls_first("degree"))
     },
-    Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 sh0 AS (SELECT DISTINCT doc_id,
-                          unnest(list_transform(generate_series(1, len(t) - 2),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-                        FROM toks),
-                 hot AS (SELECT s FROM sh0 GROUP BY s HAVING count(*) > 10),
-                 sh AS (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-                 sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-                 inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-                           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                           GROUP BY 1, 2),
-                 pairs AS (SELECT doc_a, doc_b
-                           FROM inter JOIN sz x ON x.doc_id = doc_a JOIN sz y ON y.doc_id = doc_b
-                           WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
+    Some(s"""WITH ${OracleSql.trigramPairs()},
                  e AS (SELECT doc_a AS id FROM pairs
                        UNION ALL SELECT doc_b FROM pairs),
                  d AS (SELECT d0.doc_id, count(e.id) AS degree
@@ -1316,17 +1087,7 @@ object Dedup {
           AS (threshold, n_pairs)""")
         .orderBy("threshold")
     },
-    Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 sh0 AS (SELECT DISTINCT doc_id,
-                          unnest(list_transform(generate_series(1, len(t) - 2),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-                        FROM toks),
-                 hot AS (SELECT s FROM sh0 GROUP BY s HAVING count(*) > 10),
-                 sh AS (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-                 sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-                 inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-                           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                           GROUP BY 1, 2),
+    Some(s"""WITH ${OracleSql.trigramInter()},
                  pj AS (SELECT i * 1.0 / (x.n + y.n - i) AS j
                         FROM inter JOIN sz x ON x.doc_id = doc_a
                                    JOIN sz y ON y.doc_id = doc_b),
@@ -1371,20 +1132,7 @@ object Dedup {
         .agg(count(lit(1)).as("n_pairs"))
         .orderBy("source_a", "source_b")
     },
-    Some("""WITH toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-                 sh0 AS (SELECT DISTINCT doc_id,
-                          unnest(list_transform(generate_series(1, len(t) - 2),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-                        FROM toks),
-                 hot AS (SELECT s FROM sh0 GROUP BY s HAVING count(*) > 10),
-                 sh AS (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-                 sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-                 inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-                           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                           GROUP BY 1, 2),
-                 pairs AS (SELECT doc_a, doc_b
-                           FROM inter JOIN sz x ON x.doc_id = doc_a JOIN sz y ON y.doc_id = doc_b
-                           WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
+    Some(s"""WITH ${OracleSql.trigramPairs()},
                  ds AS (SELECT doc_id, source FROM documents WHERE source IS NOT NULL)
             SELECT least(da.source, db.source) AS source_a,
                    greatest(da.source, db.source) AS source_b,

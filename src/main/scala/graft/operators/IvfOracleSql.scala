@@ -57,11 +57,7 @@ object IvfOracleSql {
                 CAST($e[i+1] AS DOUBLE) * $c[i+1]))
               / sqrt(list_sum(list_transform($c, x -> x*x))) END)"""
 
-  /** Exact cosine over two float/double arrays (the AnnOracleSql form). */
-  private def cos(a: String, b: String): String =
-    s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))" +
-      s" / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))" +
-      s" * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"
+  import OracleSql.cos
 
   /** HALF_UP 6dp mean of a HUGEINT scaled-long sum `s` over `cnt`
     * rows, as a DOUBLE — [[graft.functions.VecSumDecAgg.mean6]]. */
@@ -223,9 +219,6 @@ prnk AS MATERIALIZED (SELECT vec_id, ci,
           row_number() OVER (PARTITION BY vec_id ORDER BY score DESC, ci) AS rn
         FROM psc),
 pprb AS MATERIALIZED (SELECT p.vec_id, p.ci AS cell FROM prnk p WHERE p.rn <= $nProbe)"""
-
-  /** Exact cosine for chain consumers outside this object. */
-  def cosSql(a: String, b: String): String = cos(a, b)
 
   /** q_ann_ivf: [[ivfChain]] + the rank-≤5 projection. */
   lazy val ivfSql: String =

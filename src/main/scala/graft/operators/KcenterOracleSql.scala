@@ -15,10 +15,7 @@ package graft.operators
   */
 object KcenterOracleSql {
 
-  private def cos(a: String, b: String): String =
-    s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))" +
-      s" / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))" +
-      s" * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"
+  import OracleSql.cos
 
   /** q_coreset_kcenter: seed = smallest id, k=8 greedy picks. */
   lazy val coresetSql: String = {

@@ -24,10 +24,7 @@ package graft.operators
   */
 object MmrOracleSql {
 
-  private def cos(a: String, b: String): String =
-    s"list_sum(list_transform(list_zip($a, $b), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))" +
-      s" / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))" +
-      s" * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))"
+  import OracleSql.cos
 
   /** q_mmr_rerank: probe 0, kCand=20, k=8, λ=0.7 / μ=0.3. */
   lazy val rerankSql: String = {

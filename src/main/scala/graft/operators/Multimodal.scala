@@ -182,6 +182,67 @@ object Multimodal {
   private def synthDims(id: Long): (Int, Int) =
     (((id % 31) + 2).toInt, ((id % 17) + 2).toInt)
 
+  /** SQL twin of [[synthDims]] over `doc_id`: (width, height). */
+  private val sqlW = "(doc_id % 31) + 2"
+  private val sqlH = "(doc_id % 17) + 2"
+
+  /** Per-doc near-dup census over 64-bit fingerprints `hashed(doc_id,
+    * phash)` (the per-modality dedup family): SimHash 4×16-bit block
+    * buckets — pigeonhole-complete at hamming ≤ 3, so bucketing only
+    * prunes — distinct candidate pairs, the hamming filter, and per doc
+    * (n_dups, min_dup). `hashed` is read three times (both join sides
+    * and the final census join), so callers checkpoint it; `phash`
+    * leaves as `fpCol`. */
+  private def fingerprintCensus(hashed: org.apache.spark.sql.DataFrame,
+      fpCol: String): org.apache.spark.sql.DataFrame = {
+    val blk = hashed.select(col("doc_id"), col("phash"),
+        explode(expr("sequence(0, 3)")).as("k"))
+      .withColumn("b", expr("shiftrightunsigned(phash, k * 16)")
+        .bitwiseAND(lit(0xffffL)))
+    val pairs = blk.as("a")
+      .join(blk.as("b"),
+        col("a.k") === col("b.k") && col("a.b") === col("b.b") &&
+          col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
+        bit_count(col("a.phash").bitwiseXOR(col("b.phash"))).as("hm"))
+      .distinct()
+      .filter(col("hm") <= 3)
+    val census = pairs.select(col("da").as("doc_id"), col("db").as("nb"))
+      .unionByName(pairs.select(col("db").as("doc_id"), col("da").as("nb")))
+      .groupBy("doc_id")
+      .agg(count(lit(1)).as("n_dups"), min("nb").as("min_dup"))
+    hashed.join(census, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("phash").as(fpCol),
+        coalesce(col("n_dups"), lit(0L)).as("n_dups"),
+        col("min_dup"))
+      .orderBy("doc_id")
+  }
+
+  /** SQL twin of [[fingerprintCensus]] over the oracle's `hs(doc_id,
+    * <fp>)`: the unsigned block keys, candidate pairs, hamming ≤ 3, the
+    * census and the final per-doc projection. */
+  private def fingerprintCensusSql(fp: String): String =
+    s"""blk AS (SELECT doc_id, $fp, k.k,
+                           CAST((CASE WHEN $fp < 0
+                                 THEN CAST($fp AS HUGEINT) + 18446744073709551616::HUGEINT
+                                 ELSE CAST($fp AS HUGEINT) END
+                                // (1::HUGEINT << (16 * k.k))) % 65536 AS BIGINT) AS b
+                         FROM hs CROSS JOIN (SELECT unnest(range(0, 4)) AS k) k),
+                 pairs AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db,
+                             bit_count(xor(a.$fp, b.$fp)) AS hm
+                           FROM blk a JOIN blk b
+                             ON a.k = b.k AND a.b = b.b AND a.doc_id < b.doc_id),
+                 np AS (SELECT da, db FROM pairs WHERE hm <= 3),
+                 census AS (SELECT doc_id, count(*) AS n_dups, min(nb) AS min_dup FROM (
+                              SELECT da AS doc_id, db AS nb FROM np
+                              UNION ALL SELECT db, da FROM np)
+                            GROUP BY doc_id)
+            SELECT h.doc_id, h.$fp,
+                   CAST(coalesce(c.n_dups, 0) AS BIGINT) AS n_dups,
+                   CAST(c.min_dup AS BIGINT) AS min_dup
+            FROM hs h LEFT JOIN census c USING (doc_id)
+            ORDER BY h.doc_id"""
+
   private def synthPixels(id: Long, w: Int, h: Int): Array[Int] =
     Array.tabulate(w * h) { k =>
       val i = k / w; val j = k % w
@@ -210,9 +271,9 @@ object Multimodal {
         .toDF()
         .orderBy("doc_id")
     },
-    Some("""SELECT doc_id, 'png' AS format,
-              CAST((doc_id % 31) + 2 AS BIGINT) AS width,
-              CAST((doc_id % 17) + 2 AS BIGINT) AS height,
+    Some(s"""SELECT doc_id, 'png' AS format,
+              CAST($sqlW AS BIGINT) AS width,
+              CAST($sqlH AS BIGINT) AS height,
               CAST(8 AS BIGINT) AS bit_depth, CAST(1 AS BIGINT) AS channels
             FROM documents ORDER BY doc_id""")
   )
@@ -240,7 +301,7 @@ object Multimodal {
         .toDF()
         .orderBy("doc_id")
     },
-    Some("""WITH d AS (SELECT doc_id, (doc_id % 31) + 2 AS w, (doc_id % 17) + 2 AS h
+    Some(s"""WITH d AS (SELECT doc_id, $sqlW AS w, $sqlH AS h
                        FROM documents),
                  p AS (SELECT doc_id, w, h,
                          flatten(list_transform(generate_series(0, h - 1), i ->
@@ -492,7 +553,7 @@ object Multimodal {
         .toDF()
         .orderBy("doc_id")
     },
-    Some("""WITH d AS (SELECT doc_id, (doc_id % 31) + 2 AS w, (doc_id % 17) + 2 AS h
+    Some(s"""WITH d AS (SELECT doc_id, $sqlW AS w, $sqlH AS h
                        FROM documents),
                  p AS (SELECT doc_id, w, h,
                          flatten(list_transform(generate_series(0, h - 1), i ->
@@ -532,7 +593,7 @@ object Multimodal {
         .toDF()
         .orderBy("doc_id")
     },
-    Some("""WITH d AS (SELECT doc_id, (doc_id % 31) + 2 AS w, (doc_id % 17) + 2 AS h
+    Some(s"""WITH d AS (SELECT doc_id, $sqlW AS w, $sqlH AS h
                        FROM documents),
                  p AS (SELECT doc_id, w, h,
                          flatten(list_transform(generate_series(0, h - 1), i ->
@@ -589,31 +650,11 @@ object Multimodal {
         // consumed by the band self-join (twice) AND the final census
         // join — without truncation the codec pass re-executes 2-3x
         .transform(graft.api.Ckpt.apply)
-      val blk = hashed.select(col("doc_id"), col("phash"),
-          explode(expr("sequence(0, 3)")).as("k"))
-        .withColumn("b", expr("shiftrightunsigned(phash, k * 16)")
-          .bitwiseAND(lit(0xffffL)))
-      val pairs = blk.as("a")
-        .join(blk.as("b"),
-          col("a.k") === col("b.k") && col("a.b") === col("b.b") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
-          bit_count(col("a.phash").bitwiseXOR(col("b.phash"))).as("hm"))
-        .distinct()
-        .filter(col("hm") <= 3)
-      val census = pairs.select(col("da").as("doc_id"), col("db").as("nb"))
-        .unionByName(pairs.select(col("db").as("doc_id"), col("da").as("nb")))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_dups"), min("nb").as("min_dup"))
-      hashed.join(census, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("phash"),
-          coalesce(col("n_dups"), lit(0L)).as("n_dups"),
-          col("min_dup"))
-        .orderBy("doc_id")
+      fingerprintCensus(hashed, "phash")
     },
-    Some("""WITH d AS (SELECT doc_id, (doc_id % 31) + 2 AS w, (doc_id % 17) + 2 AS h,
-                   doc_id % 41 AS g, doc_id % ((doc_id % 17) + 2) AS pi,
-                   (doc_id // 7) % ((doc_id % 31) + 2) AS pj
+    Some(s"""WITH d AS (SELECT doc_id, $sqlW AS w, $sqlH AS h,
+                   doc_id % 41 AS g, doc_id % ($sqlH) AS pi,
+                   (doc_id // 7) % ($sqlW) AS pj
                  FROM documents),
                  -- the decoded image replayed arithmetically, then the 8x8
                  -- nearest resample: r(y,x) = px(y*h//8, x*w//8)
@@ -635,26 +676,7 @@ object Multimodal {
                                       ELSE (1::BIGINT << j) END
                                  ELSE 0::BIGINT END))::BIGINT AS phash
                         FROM hb),
-                 blk AS (SELECT doc_id, phash, k.k,
-                           CAST((CASE WHEN phash < 0
-                                 THEN CAST(phash AS HUGEINT) + 18446744073709551616::HUGEINT
-                                 ELSE CAST(phash AS HUGEINT) END
-                                // (1::HUGEINT << (16 * k.k))) % 65536 AS BIGINT) AS b
-                         FROM hs CROSS JOIN (SELECT unnest(range(0, 4)) AS k) k),
-                 pairs AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db,
-                             bit_count(xor(a.phash, b.phash)) AS hm
-                           FROM blk a JOIN blk b
-                             ON a.k = b.k AND a.b = b.b AND a.doc_id < b.doc_id),
-                 np AS (SELECT da, db FROM pairs WHERE hm <= 3),
-                 census AS (SELECT doc_id, count(*) AS n_dups, min(nb) AS min_dup FROM (
-                              SELECT da AS doc_id, db AS nb FROM np
-                              UNION ALL SELECT db, da FROM np)
-                            GROUP BY doc_id)
-            SELECT h.doc_id, h.phash,
-                   CAST(coalesce(c.n_dups, 0) AS BIGINT) AS n_dups,
-                   CAST(c.min_dup AS BIGINT) AS min_dup
-            FROM hs h LEFT JOIN census c USING (doc_id)
-            ORDER BY h.doc_id""")
+                 ${fingerprintCensusSql("phash")}""")
   )
 
   /** Real resize output statistics. */
@@ -680,7 +702,7 @@ object Multimodal {
         .toDF()
         .orderBy("doc_id")
     },
-    Some("""WITH d AS (SELECT doc_id, (doc_id % 31) + 2 AS w, (doc_id % 17) + 2 AS h
+    Some(s"""WITH d AS (SELECT doc_id, $sqlW AS w, $sqlH AS h
                        FROM documents),
                  r AS (SELECT doc_id,
                          flatten(list_transform(generate_series(0, 7), y ->
@@ -777,29 +799,9 @@ object Multimodal {
         .toDF()
         // same shape as q_image_phash_dedup: one codec pass, not three
         .transform(graft.api.Ckpt.apply)
-      val blk = hashed.select(col("doc_id"), col("phash"),
-          explode(expr("sequence(0, 3)")).as("k"))
-        .withColumn("b", expr("shiftrightunsigned(phash, k * 16)")
-          .bitwiseAND(lit(0xffffL)))
-      val pairs = blk.as("a")
-        .join(blk.as("b"),
-          col("a.k") === col("b.k") && col("a.b") === col("b.b") &&
-            col("a.doc_id") < col("b.doc_id"))
-        .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"),
-          bit_count(col("a.phash").bitwiseXOR(col("b.phash"))).as("hm"))
-        .distinct()
-        .filter(col("hm") <= 3)
-      val census = pairs.select(col("da").as("doc_id"), col("db").as("nb"))
-        .unionByName(pairs.select(col("db").as("doc_id"), col("da").as("nb")))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_dups"), min("nb").as("min_dup"))
-      hashed.join(census, Seq("doc_id"), "left")
-        .select(col("doc_id"), col("phash").as("fp"),
-          coalesce(col("n_dups"), lit(0L)).as("n_dups"),
-          col("min_dup"))
-        .orderBy("doc_id")
+      fingerprintCensus(hashed, "fp")
     },
-    Some("""WITH d AS (SELECT doc_id, (doc_id % 441) + 100 AS n,
+    Some(s"""WITH d AS (SELECT doc_id, (doc_id % 441) + 100 AS n,
                    doc_id % 37 AS g, doc_id % ((doc_id % 441) + 100) AS k0
                  FROM documents),
                  -- per (doc, window) energies: one flat explode + hash
@@ -822,26 +824,7 @@ object Multimodal {
                                ELSE 0::BIGINT END)::BIGINT AS fp
                         FROM sm s JOIN tot t USING (doc_id)
                         GROUP BY s.doc_id),
-                 blk AS (SELECT doc_id, fp, k.k,
-                           CAST((CASE WHEN fp < 0
-                                 THEN CAST(fp AS HUGEINT) + 18446744073709551616::HUGEINT
-                                 ELSE CAST(fp AS HUGEINT) END
-                                // (1::HUGEINT << (16 * k.k))) % 65536 AS BIGINT) AS b
-                         FROM hs CROSS JOIN (SELECT unnest(range(0, 4)) AS k) k),
-                 pairs AS (SELECT DISTINCT a.doc_id AS da, b.doc_id AS db,
-                             bit_count(xor(a.fp, b.fp)) AS hm
-                           FROM blk a JOIN blk b
-                             ON a.k = b.k AND a.b = b.b AND a.doc_id < b.doc_id),
-                 np AS (SELECT da, db FROM pairs WHERE hm <= 3),
-                 census AS (SELECT doc_id, count(*) AS n_dups, min(nb) AS min_dup FROM (
-                              SELECT da AS doc_id, db AS nb FROM np
-                              UNION ALL SELECT db, da FROM np)
-                            GROUP BY doc_id)
-            SELECT h.doc_id, h.fp,
-                   CAST(coalesce(c.n_dups, 0) AS BIGINT) AS n_dups,
-                   CAST(c.min_dup AS BIGINT) AS min_dup
-            FROM hs h LEFT JOIN census c USING (doc_id)
-            ORDER BY h.doc_id""")
+                 ${fingerprintCensusSql("fp")}""")
   )
 
   /** Real decoded video-container metadata. */
@@ -905,9 +888,9 @@ object Multimodal {
           max("max_w").as("max_w"), min("min_h").as("min_h"))
         .orderBy(asc_nulls_first("source"))
     },
-    Some("""WITH f AS (SELECT doc_id, source FROM documents
+    Some(s"""WITH f AS (SELECT doc_id, source FROM documents
                        WHERE octet_length(encode(text)) >= 200),
-                 d AS (SELECT source, (doc_id % 31) + 2 AS w, (doc_id % 17) + 2 AS h
+                 d AS (SELECT source, $sqlW AS w, $sqlH AS h
                        FROM f)
             SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
                    CAST(sum(w * h) AS BIGINT) AS total_px,

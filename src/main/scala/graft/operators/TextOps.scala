@@ -113,7 +113,7 @@ object TextOps {
       Tables.documents(s, dir)
         .select(col("doc_id"), graft.api.TextDedup.fingerprint(col("text")).as("fp"))
         .orderBy("doc_id"),
-    Some("""SELECT doc_id, md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fp
+    Some(s"""SELECT doc_id, ${OracleSql.fingerprint("text")} AS fp
             FROM documents ORDER BY doc_id""")
   )
 
@@ -191,28 +191,12 @@ object TextOps {
           col("n_tok").between(20, 80))
         .select(col("doc_id"), col("pred_lang"), col("n_tok"), col("ttr"), col("quality"))
         .orderBy("doc_id"),
-    Some("""WITH m AS (SELECT doc_id, text,
-              len(string_split(text,' ')) AS n_tok,
-              CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE) / len(string_split(text,' ')) AS ttr,
-              (CAST(length(text) AS DOUBLE) - (len(string_split(text,' ')) - 1)) / len(string_split(text,' ')) AS avg_tok_len
-            FROM documents),
+    Some(s"""WITH ${OracleSql.tokenStats("documents")},
                  q AS (SELECT doc_id, text, n_tok, round(ttr, 4) AS ttr,
               round(least(1.0, n_tok / 50.0) * 0.4 + ttr * 0.4
                     + least(1.0, avg_tok_len / 8.0) * 0.2, 4) AS quality
             FROM m),
-                 sc AS (SELECT doc_id,
-              len(list_intersect(list_distinct(string_split(text,' ')), ['the','a','of','and','to'])) AS s_en,
-              len(list_intersect(list_distinct(string_split(text,' ')), ['el','la','de','que','y'])) AS s_es,
-              len(list_intersect(list_distinct(string_split(text,' ')), ['der','die','und','das','ist'])) AS s_de,
-              len(list_intersect(list_distinct(string_split(text,' ')), ['le','la','et','les','un'])) AS s_fr
-            FROM documents),
-                 lid AS (SELECT doc_id,
-              CASE WHEN s_en = 0 AND s_es = 0 AND s_de = 0 AND s_fr = 0 THEN 'und'
-                   WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-                   WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-                   WHEN s_de >= s_fr THEN 'de'
-                   ELSE 'fr' END AS pred_lang
-            FROM sc)
+                 ${OracleSql.langId("documents")}
             SELECT q.doc_id, lid.pred_lang, q.n_tok, q.ttr, q.quality
             FROM q JOIN lid ON q.doc_id = lid.doc_id
             WHERE lid.pred_lang <> 'und' AND q.quality >= 0.5
@@ -339,11 +323,7 @@ object TextOps {
         .select(col("doc_id"), col("quality"))
         .orderBy(asc_nulls_first("doc_id"))
     },
-    Some("""WITH m AS (SELECT doc_id, text,
-                   len(string_split(text,' ')) AS n_tok,
-                   CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE) / len(string_split(text,' ')) AS ttr,
-                   (CAST(length(text) AS DOUBLE) - (len(string_split(text,' ')) - 1)) / len(string_split(text,' ')) AS avg_tok_len
-                 FROM documents),
+    Some(s"""WITH ${OracleSql.tokenStats("documents")},
                  q AS (SELECT doc_id, text,
                    round(least(1.0, n_tok / 50.0) * 0.4 + ttr * 0.4
                          + least(1.0, avg_tok_len / 8.0) * 0.2, 4) AS quality
@@ -457,16 +437,12 @@ object TextOps {
         .select(col("id").as("doc_id"), round(col("score"), 4).as("score"))
         .orderBy(desc("score"), asc("doc_id"))
         .limit(20),
-    Some("""WITH lens AS (SELECT doc_id, len(string_split(text, ' ')) AS len FROM documents),
-                 stats AS (SELECT count(*) AS n, avg(len) AS avgdl FROM lens),
-                 toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
+    Some(s"""WITH ${OracleSql.bm25Corpus},
                  qt AS (SELECT doc_id, term, count(*) AS tf FROM toks
                         WHERE term IN ('join', 'window', 'spark') GROUP BY 1, 2),
                  dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM qt GROUP BY 1),
                  w AS (SELECT qt.doc_id,
-                         ln(1 + (stats.n - dfq.df + 0.5) / (dfq.df + 0.5))
-                           * (qt.tf * 2.2)
-                           / (qt.tf + 1.2 * (1 - 0.75 + 0.75 * lens.len / stats.avgdl)) AS w
+                         ${OracleSql.bm25Weight} AS w
                        FROM qt JOIN dfq USING (term)
                          JOIN lens ON lens.doc_id = qt.doc_id
                          CROSS JOIN stats)
@@ -493,24 +469,8 @@ object TextOps {
         .select(col("qid"), col("rank"), col("id").as("doc_id"),
           round(col("score"), 4).as("score"))
         .orderBy(asc_nulls_first("qid"), asc_nulls_first("rank")),
-    Some("""WITH lens AS (SELECT doc_id, len(string_split(text, ' ')) AS len FROM documents),
-                 stats AS (SELECT count(*) AS n, avg(len) AS avgdl FROM lens),
-                 toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-                 qterms(qid, term) AS (VALUES
-                   ('spark_join', 'spark'), ('spark_join', 'join'),
-                   ('window_agg', 'window'), ('window_agg', 'agg'),
-                   ('stream_data', 'stream'), ('stream_data', 'data')),
-                 qt AS (SELECT doc_id, term, count(*) AS tf FROM toks
-                        WHERE term IN (SELECT term FROM qterms) GROUP BY 1, 2),
-                 dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM qt GROUP BY 1),
-                 w AS (SELECT q.qid, qt.doc_id,
-                         ln(1 + (stats.n - dfq.df + 0.5) / (dfq.df + 0.5))
-                           * (qt.tf * 2.2)
-                           / (qt.tf + 1.2 * (1 - 0.75 + 0.75 * lens.len / stats.avgdl)) AS w
-                       FROM qt JOIN dfq USING (term)
-                         JOIN qterms q USING (term)
-                         JOIN lens ON lens.doc_id = qt.doc_id
-                         CROSS JOIN stats),
+    Some(s"""WITH ${OracleSql.bm25Corpus},
+                 ${OracleSql.bm25Batch},
                  s AS (SELECT qid, doc_id, sum(w) AS score FROM w GROUP BY 1, 2),
                  r AS (SELECT qid, doc_id, score,
                               row_number() OVER (PARTITION BY qid
@@ -542,24 +502,8 @@ object TextOps {
             ("stream_data", Seq("stream", "data"), 2L)),
           kLex = 20, kDense = 20, k = 10)
         .orderBy(asc_nulls_first("qid"), asc_nulls_first("rank")),
-    Some("""WITH lens AS (SELECT doc_id, len(string_split(text, ' ')) AS len FROM documents),
-                 stats AS (SELECT count(*) AS n, avg(len) AS avgdl FROM lens),
-                 toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents),
-                 qterms(qid, term) AS (VALUES
-                   ('spark_join', 'spark'), ('spark_join', 'join'),
-                   ('window_agg', 'window'), ('window_agg', 'agg'),
-                   ('stream_data', 'stream'), ('stream_data', 'data')),
-                 qt AS (SELECT doc_id, term, count(*) AS tf FROM toks
-                        WHERE term IN (SELECT term FROM qterms) GROUP BY 1, 2),
-                 dfq AS (SELECT term, count(DISTINCT doc_id) AS df FROM qt GROUP BY 1),
-                 w AS (SELECT q.qid, qt.doc_id,
-                         ln(1 + (stats.n - dfq.df + 0.5) / (dfq.df + 0.5))
-                           * (qt.tf * 2.2)
-                           / (qt.tf + 1.2 * (1 - 0.75 + 0.75 * lens.len / stats.avgdl)) AS w
-                       FROM qt JOIN dfq USING (term)
-                         JOIN qterms q USING (term)
-                         JOIN lens ON lens.doc_id = qt.doc_id
-                         CROSS JOIN stats),
+    Some(s"""WITH ${OracleSql.bm25Corpus},
+                 ${OracleSql.bm25Batch},
                  sl AS (SELECT qid, doc_id, sum(w) AS score FROM w GROUP BY 1, 2),
                  lexr AS (SELECT qid, doc_id,
                             row_number() OVER (PARTITION BY qid
@@ -570,12 +514,7 @@ object TextOps {
                  pe AS (SELECT pv.qid, pv.pid, e.embedding AS pemb
                         FROM pv JOIN embeddings e ON e.vec_id = pv.pid),
                  dsc AS (SELECT p.qid, v.vec_id AS doc_id,
-                           round(list_sum(list_transform(list_zip(v.embedding, p.pemb),
-                               x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                             / (sqrt(list_sum(list_transform(v.embedding,
-                                  x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                                * sqrt(list_sum(list_transform(p.pemb,
-                                    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS sim
+                           round(${OracleSql.cos("v.embedding", "p.pemb")}, 4) AS sim
                          FROM embeddings v CROSS JOIN pe p
                          WHERE v.vec_id <> p.pid
                            AND v.embedding IS NOT NULL AND len(v.embedding) > 0),
@@ -637,6 +576,25 @@ object TextOps {
     val stopwords = Seq("the", "a", "of", "and", "to")
     def sqlList: String = stopwords.mkString("['", "','", "']")
   }
+
+  /** The Gopher scoring CTEs of q_gopher_rules / q_gopher_ablation:
+    * `base` token lists, `tc`/`tp` top-token counts, and `m(doc_id,
+    * n_tok, mean_wlen, top_frac, stop_hits)`. */
+  private val gopherScores =
+    s"""base AS (SELECT doc_id, string_split(text, ' ') AS toks,
+                      length(text) AS nch
+                    FROM documents WHERE text IS NOT NULL),
+           tc AS (SELECT doc_id, tok, count(*) AS c FROM (
+                    SELECT doc_id, unnest(toks) AS tok FROM base)
+                  GROUP BY doc_id, tok),
+           tp AS (SELECT doc_id, max(c) AS topc FROM tc GROUP BY doc_id),
+           m AS (SELECT b.doc_id, CAST(len(toks) AS BIGINT) AS n_tok,
+                   round(CAST(nch - (len(toks) - 1) AS DOUBLE) / len(toks), 4) AS mean_wlen,
+                   round(CAST(topc AS DOUBLE) / len(toks), 4) AS top_frac,
+                   CAST(len(list_intersect(list_distinct(toks),
+                     ${GopherParams.sqlList})) AS BIGINT) AS stop_hits
+                 FROM base b JOIN tp USING (doc_id))"""
+
   /** In-engine quality-classifier training
     * ([[graft.api.Classifier.logisticFit]]): 3 full-batch GD iterations
     * of logistic regression predicting `lang = 'en'` from two cheap
@@ -658,38 +616,7 @@ object TextOps {
           size(split(col("text"), " ")).cast("double") / lit(100.0)),
         iterations = 3, lr = 0.1)
     },
-    Some("""WITH b AS (SELECT CAST(lang = 'en' AS DOUBLE) AS y,
-                   ln(CAST(n_chars AS DOUBLE) + 1.0) AS x0,
-                   CAST(len(string_split(text, ' ')) AS DOUBLE) / 100.0 AS x1
-                 FROM documents),
-                 w0c AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2),
-                 g1c AS (SELECT count(*) AS n,
-                   sum(CAST(1.0 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g0,
-                   sum(CAST(x0 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g1,
-                   sum(CAST(x1 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g2,
-                   max(w0) AS pw0, max(w1) AS pw1, max(w2) AS pw2
-                 FROM b CROSS JOIN w0c),
-                 w1c AS (SELECT pw0 - 0.1*(CAST(g0 AS DOUBLE)/n) AS w0,
-                                pw1 - 0.1*(CAST(g1 AS DOUBLE)/n) AS w1,
-                                pw2 - 0.1*(CAST(g2 AS DOUBLE)/n) AS w2 FROM g1c),
-                 g2cc AS (SELECT count(*) AS n,
-                   sum(CAST(1.0 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g0,
-                   sum(CAST(x0 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g1,
-                   sum(CAST(x1 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g2,
-                   max(w0) AS pw0, max(w1) AS pw1, max(w2) AS pw2
-                 FROM b CROSS JOIN w1c),
-                 w2c AS (SELECT pw0 - 0.1*(CAST(g0 AS DOUBLE)/n) AS w0,
-                                pw1 - 0.1*(CAST(g1 AS DOUBLE)/n) AS w1,
-                                pw2 - 0.1*(CAST(g2 AS DOUBLE)/n) AS w2 FROM g2cc),
-                 g3c AS (SELECT count(*) AS n,
-                   sum(CAST(1.0 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g0,
-                   sum(CAST(x0 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g1,
-                   sum(CAST(x1 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g2,
-                   max(w0) AS pw0, max(w1) AS pw1, max(w2) AS pw2
-                 FROM b CROSS JOIN w2c),
-                 w3c AS (SELECT pw0 - 0.1*(CAST(g0 AS DOUBLE)/n) AS w0,
-                                pw1 - 0.1*(CAST(g1 AS DOUBLE)/n) AS w1,
-                                pw2 - 0.1*(CAST(g2 AS DOUBLE)/n) AS w2 FROM g3c),
+    Some(s"""WITH ${OracleSql.logisticRounds(3)},
                  fin AS (SELECT count(*) AS n,
                    sum(CAST(-(y * ln(1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))))
                         + (1.0 - y) * ln(1.0 - 1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1)))))
@@ -722,38 +649,7 @@ object TextOps {
           size(split(col("text"), " ")).cast("double") / lit(100.0)),
         iterations = 3, lr = 0.1)
     },
-    Some("""WITH b AS (SELECT CAST(lang = 'en' AS DOUBLE) AS y,
-                   ln(CAST(n_chars AS DOUBLE) + 1.0) AS x0,
-                   CAST(len(string_split(text, ' ')) AS DOUBLE) / 100.0 AS x1
-                 FROM documents),
-                 w0c AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2),
-                 g1c AS (SELECT count(*) AS n,
-                   sum(CAST(1.0 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g0,
-                   sum(CAST(x0 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g1,
-                   sum(CAST(x1 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g2,
-                   max(w0) AS pw0, max(w1) AS pw1, max(w2) AS pw2
-                 FROM b CROSS JOIN w0c),
-                 w1c AS (SELECT pw0 - 0.1*(CAST(g0 AS DOUBLE)/n) AS w0,
-                                pw1 - 0.1*(CAST(g1 AS DOUBLE)/n) AS w1,
-                                pw2 - 0.1*(CAST(g2 AS DOUBLE)/n) AS w2 FROM g1c),
-                 g2cc AS (SELECT count(*) AS n,
-                   sum(CAST(1.0 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g0,
-                   sum(CAST(x0 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g1,
-                   sum(CAST(x1 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g2,
-                   max(w0) AS pw0, max(w1) AS pw1, max(w2) AS pw2
-                 FROM b CROSS JOIN w1c),
-                 w2c AS (SELECT pw0 - 0.1*(CAST(g0 AS DOUBLE)/n) AS w0,
-                                pw1 - 0.1*(CAST(g1 AS DOUBLE)/n) AS w1,
-                                pw2 - 0.1*(CAST(g2 AS DOUBLE)/n) AS w2 FROM g2cc),
-                 g3c AS (SELECT count(*) AS n,
-                   sum(CAST(1.0 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g0,
-                   sum(CAST(x0 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g1,
-                   sum(CAST(x1 * (1.0/(1.0+exp(-(w0 + w1*x0 + w2*x1))) - y) AS DECIMAL(30,10))) AS g2,
-                   max(w0) AS pw0, max(w1) AS pw1, max(w2) AS pw2
-                 FROM b CROSS JOIN w2c),
-                 w3c AS (SELECT pw0 - 0.1*(CAST(g0 AS DOUBLE)/n) AS w0,
-                                pw1 - 0.1*(CAST(g1 AS DOUBLE)/n) AS w1,
-                                pw2 - 0.1*(CAST(g2 AS DOUBLE)/n) AS w2 FROM g3c),
+    Some(s"""WITH ${OracleSql.logisticRounds(3)},
                  sc AS (SELECT CAST(y AS INT) AS lab,
                           CAST(w0 + w1*x0 + w2*x1 AS DECIMAL(30,10)) AS s
                         FROM b CROSS JOIN w3c),
@@ -783,19 +679,7 @@ object TextOps {
           stopwords = GopherParams.stopwords)
         .withColumnRenamed("id", "doc_id")
         .orderBy("doc_id"),
-    Some(s"""WITH base AS (SELECT doc_id, string_split(text, ' ') AS toks,
-                            length(text) AS nch
-                          FROM documents WHERE text IS NOT NULL),
-                 tc AS (SELECT doc_id, tok, count(*) AS c FROM (
-                          SELECT doc_id, unnest(toks) AS tok FROM base)
-                        GROUP BY doc_id, tok),
-                 tp AS (SELECT doc_id, max(c) AS topc FROM tc GROUP BY doc_id),
-                 m AS (SELECT b.doc_id, CAST(len(toks) AS BIGINT) AS n_tok,
-                         round(CAST(nch - (len(toks) - 1) AS DOUBLE) / len(toks), 4) AS mean_wlen,
-                         round(CAST(topc AS DOUBLE) / len(toks), 4) AS top_frac,
-                         CAST(len(list_intersect(list_distinct(toks),
-                           ${GopherParams.sqlList})) AS BIGINT) AS stop_hits
-                       FROM base b JOIN tp USING (doc_id))
+    Some(s"""WITH $gopherScores
             SELECT doc_id, n_tok, mean_wlen, top_frac, stop_hits,
               n_tok BETWEEN ${GopherParams.minTok} AND ${GopherParams.maxTok} AS rule_len,
               mean_wlen BETWEEN ${GopherParams.minWlen} AND ${GopherParams.maxWlen} AS rule_wlen,
@@ -847,19 +731,7 @@ object TextOps {
           AS (rule, n_docs_failing, n_tokens_failing, n_docs_failing_only)""")
         .orderBy("rule")
     },
-    Some(s"""WITH base AS (SELECT doc_id, string_split(text, ' ') AS toks,
-                            length(text) AS nch
-                          FROM documents WHERE text IS NOT NULL),
-                 tc AS (SELECT doc_id, tok, count(*) AS c FROM (
-                          SELECT doc_id, unnest(toks) AS tok FROM base)
-                        GROUP BY doc_id, tok),
-                 tp AS (SELECT doc_id, max(c) AS topc FROM tc GROUP BY doc_id),
-                 m AS (SELECT b.doc_id, CAST(len(toks) AS BIGINT) AS n_tok,
-                         round(CAST(nch - (len(toks) - 1) AS DOUBLE) / len(toks), 4) AS mean_wlen,
-                         round(CAST(topc AS DOUBLE) / len(toks), 4) AS top_frac,
-                         CAST(len(list_intersect(list_distinct(toks),
-                           ${GopherParams.sqlList})) AS BIGINT) AS stop_hits
-                       FROM base b JOIN tp USING (doc_id)),
+    Some(s"""WITH $gopherScores,
                  fl AS (SELECT n_tok,
                           n_tok BETWEEN ${GopherParams.minTok} AND ${GopherParams.maxTok} AS rule_len,
                           mean_wlen BETWEEN ${GopherParams.minWlen} AND ${GopherParams.maxWlen} AS rule_wlen,
@@ -982,42 +854,11 @@ object TextOps {
           isEval = col("doc_id") % 97 === 0, samplePct = 50)
         .select(col("doc_id"), col("pred_lang"), col("n_tok"), col("quality"))
         .orderBy("doc_id"),
-    Some("""WITH base AS (SELECT * FROM documents WHERE doc_id % 97 <> 0),
-                 m AS (SELECT doc_id, text,
-                   len(string_split(text,' ')) AS n_tok,
-                   CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE) / len(string_split(text,' ')) AS ttr,
-                   (CAST(length(text) AS DOUBLE) - (len(string_split(text,' ')) - 1)) / len(string_split(text,' ')) AS avg_tok_len
-                 FROM base),
-                 q AS (SELECT doc_id, text, n_tok,
-                   round(least(1.0, n_tok / 50.0) * 0.4 + ttr * 0.4
-                         + least(1.0, avg_tok_len / 8.0) * 0.2, 4) AS quality
-                 FROM m),
-                 sc AS (SELECT doc_id,
-                   len(list_intersect(list_distinct(string_split(text,' ')), ['the','a','of','and','to'])) AS s_en,
-                   len(list_intersect(list_distinct(string_split(text,' ')), ['el','la','de','que','y'])) AS s_es,
-                   len(list_intersect(list_distinct(string_split(text,' ')), ['der','die','und','das','ist'])) AS s_de,
-                   len(list_intersect(list_distinct(string_split(text,' ')), ['le','la','et','les','un'])) AS s_fr
-                 FROM base),
-                 lid AS (SELECT doc_id,
-                   CASE WHEN s_en = 0 AND s_es = 0 AND s_de = 0 AND s_fr = 0 THEN 'und'
-                        WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-                        WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-                        WHEN s_de >= s_fr THEN 'de'
-                        ELSE 'fr' END AS pred_lang
-                 FROM sc),
-                 filt AS (SELECT q.doc_id, lid.pred_lang, q.n_tok, q.quality, q.text
-                          FROM q JOIN lid USING (doc_id)
-                          WHERE lid.pred_lang <> 'und' AND q.quality >= 0.5
-                            AND q.n_tok BETWEEN 20 AND 80),
-                 ded AS (SELECT * FROM (SELECT f.*,
-                           min(doc_id) OVER (PARTITION BY md5(lower(regexp_replace(text, '\s+', ' ', 'g')))) AS keep
-                         FROM filt f) WHERE doc_id = keep),
-                 ev AS (SELECT DISTINCT md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fp
-                        FROM documents WHERE doc_id % 97 = 0)
+    Some(s"""WITH ${OracleSql.prepareDedup},
+                 ${OracleSql.evalFingerprints}
             SELECT doc_id, pred_lang, n_tok, quality
             FROM ded
-            WHERE NOT EXISTS (SELECT 1 FROM ev
-                    WHERE ev.fp = md5(lower(regexp_replace(ded.text, '\s+', ' ', 'g'))))
+            WHERE ${OracleSql.notInEval("ded.text")}
               AND CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT) % 100 < 50
             ORDER BY doc_id""")
   )
@@ -1034,41 +875,10 @@ object TextOps {
     (s, dir) =>
       graft.api.Pipeline.stageReport(Tables.documents(s, dir), "doc_id", "text",
         isEval = col("doc_id") % 97 === 0, samplePct = 50),
-    Some("""WITH base AS (SELECT * FROM documents WHERE doc_id % 97 <> 0),
-                 m AS (SELECT doc_id, text,
-                   len(string_split(text,' ')) AS n_tok,
-                   CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE) / len(string_split(text,' ')) AS ttr,
-                   (CAST(length(text) AS DOUBLE) - (len(string_split(text,' ')) - 1)) / len(string_split(text,' ')) AS avg_tok_len
-                 FROM base),
-                 q AS (SELECT doc_id, text, n_tok,
-                   round(least(1.0, n_tok / 50.0) * 0.4 + ttr * 0.4
-                         + least(1.0, avg_tok_len / 8.0) * 0.2, 4) AS quality
-                 FROM m),
-                 sc AS (SELECT doc_id,
-                   len(list_intersect(list_distinct(string_split(text,' ')), ['the','a','of','and','to'])) AS s_en,
-                   len(list_intersect(list_distinct(string_split(text,' ')), ['el','la','de','que','y'])) AS s_es,
-                   len(list_intersect(list_distinct(string_split(text,' ')), ['der','die','und','das','ist'])) AS s_de,
-                   len(list_intersect(list_distinct(string_split(text,' ')), ['le','la','et','les','un'])) AS s_fr
-                 FROM base),
-                 lid AS (SELECT doc_id,
-                   CASE WHEN s_en = 0 AND s_es = 0 AND s_de = 0 AND s_fr = 0 THEN 'und'
-                        WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-                        WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-                        WHEN s_de >= s_fr THEN 'de'
-                        ELSE 'fr' END AS pred_lang
-                 FROM sc),
-                 filt AS (SELECT q.doc_id, q.text
-                          FROM q JOIN lid USING (doc_id)
-                          WHERE lid.pred_lang <> 'und' AND q.quality >= 0.5
-                            AND q.n_tok BETWEEN 20 AND 80),
-                 ded AS (SELECT * FROM (SELECT f.*,
-                           min(doc_id) OVER (PARTITION BY md5(lower(regexp_replace(text, '\s+', ' ', 'g')))) AS keep
-                         FROM filt f) WHERE doc_id = keep),
-                 ev AS (SELECT DISTINCT md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fp
-                        FROM documents WHERE doc_id % 97 = 0),
+    Some(s"""WITH ${OracleSql.prepareDedup},
+                 ${OracleSql.evalFingerprints},
                  clean AS (SELECT * FROM ded
-                           WHERE NOT EXISTS (SELECT 1 FROM ev
-                             WHERE ev.fp = md5(lower(regexp_replace(ded.text, '\s+', ' ', 'g'))))),
+                           WHERE ${OracleSql.notInEval("ded.text")}),
                  samp AS (SELECT * FROM clean
                           WHERE CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT) % 100 < 50)
             SELECT stage_no, stage, CAST(n_in AS BIGINT) AS n_in,
@@ -1102,64 +912,16 @@ object TextOps {
           maxShingleDf = 10L)
         .select(col("doc_id"), col("pred_lang"), col("n_tok"), col("quality"))
         .orderBy("doc_id"),
-    Some("""WITH RECURSIVE
-                 base AS (SELECT * FROM documents WHERE doc_id % 97 <> 0),
-                 m AS (SELECT doc_id, text,
-                   len(string_split(text,' ')) AS n_tok,
-                   CAST(len(list_distinct(string_split(text,' '))) AS DOUBLE) / len(string_split(text,' ')) AS ttr,
-                   (CAST(length(text) AS DOUBLE) - (len(string_split(text,' ')) - 1)) / len(string_split(text,' ')) AS avg_tok_len
-                 FROM base),
-                 q AS (SELECT doc_id, text, n_tok,
-                   round(least(1.0, n_tok / 50.0) * 0.4 + ttr * 0.4
-                         + least(1.0, avg_tok_len / 8.0) * 0.2, 4) AS quality
-                 FROM m),
-                 sc AS (SELECT doc_id,
-                   len(list_intersect(list_distinct(string_split(text,' ')), ['the','a','of','and','to'])) AS s_en,
-                   len(list_intersect(list_distinct(string_split(text,' ')), ['el','la','de','que','y'])) AS s_es,
-                   len(list_intersect(list_distinct(string_split(text,' ')), ['der','die','und','das','ist'])) AS s_de,
-                   len(list_intersect(list_distinct(string_split(text,' ')), ['le','la','et','les','un'])) AS s_fr
-                 FROM base),
-                 lid AS (SELECT doc_id,
-                   CASE WHEN s_en = 0 AND s_es = 0 AND s_de = 0 AND s_fr = 0 THEN 'und'
-                        WHEN s_en >= s_es AND s_en >= s_de AND s_en >= s_fr THEN 'en'
-                        WHEN s_es >= s_de AND s_es >= s_fr THEN 'es'
-                        WHEN s_de >= s_fr THEN 'de'
-                        ELSE 'fr' END AS pred_lang
-                 FROM sc),
-                 filt AS (SELECT q.doc_id, lid.pred_lang, q.n_tok, q.quality, q.text
-                          FROM q JOIN lid USING (doc_id)
-                          WHERE lid.pred_lang <> 'und' AND q.quality >= 0.5
-                            AND q.n_tok BETWEEN 20 AND 80),
-                 ded AS (SELECT * FROM (SELECT f.*,
-                           min(doc_id) OVER (PARTITION BY md5(lower(regexp_replace(text, '\s+', ' ', 'g')))) AS keep
-                         FROM filt f) WHERE doc_id = keep),
-                 toks AS (SELECT doc_id, string_split(text, ' ') AS t FROM ded),
-                 sh0 AS (SELECT DISTINCT doc_id,
-                          unnest(list_transform(generate_series(1, len(t) - 2),
-                            i -> t[i] || ' ' || t[i+1] || ' ' || t[i+2])) AS s
-                        FROM toks),
-                 hot AS (SELECT s FROM sh0 GROUP BY s HAVING count(*) > 10),
-                 sh AS (SELECT * FROM sh0 WHERE s NOT IN (SELECT s FROM hot)),
-                 sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-                 inter AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, count(*) AS i
-                           FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-                           GROUP BY 1, 2),
-                 prs AS (SELECT doc_a, doc_b
-                         FROM inter JOIN sz x ON x.doc_id = doc_a JOIN sz y ON y.doc_id = doc_b
-                         WHERE i * 1.0 / (x.n + y.n - i) >= 0.5),
-                 edges AS (SELECT doc_a AS u, doc_b AS v FROM prs
-                           UNION SELECT doc_b, doc_a FROM prs),
-                 reach AS (SELECT u, v FROM edges
-                           UNION SELECT r.u, e.v FROM reach r JOIN edges e ON r.v = e.u),
-                 comp AS (SELECT u AS doc_id, min(v) AS mn FROM reach GROUP BY u),
+    Some(s"""WITH RECURSIVE
+                 ${OracleSql.prepareDedup},
+                 ${OracleSql.trigramPairs("ded")},
+                 ${OracleSql.pairComponents},
                  nd AS (SELECT d.* FROM ded d LEFT JOIN comp c USING (doc_id)
                         WHERE coalesce(least(c.mn, d.doc_id), d.doc_id) = d.doc_id),
-                 ev AS (SELECT DISTINCT md5(lower(regexp_replace(text, '\s+', ' ', 'g'))) AS fp
-                        FROM documents WHERE doc_id % 97 = 0)
+                 ${OracleSql.evalFingerprints}
             SELECT doc_id, pred_lang, n_tok, quality
             FROM nd
-            WHERE NOT EXISTS (SELECT 1 FROM ev
-                    WHERE ev.fp = md5(lower(regexp_replace(nd.text, '\s+', ' ', 'g'))))
+            WHERE ${OracleSql.notInEval("nd.text")}
               AND CAST(('0x' || substr(md5(text), 1, 8)) AS BIGINT) % 100 < 50
             ORDER BY doc_id""")
   )
@@ -2178,7 +1940,7 @@ object TextOps {
         .orderBy(desc("rank_n"), asc("token"))
         .limit(25)
     },
-    Some("""WITH toks0 AS (SELECT doc_id, string_split(text, ' ') AS t
+    Some(s"""WITH toks0 AS (SELECT doc_id, string_split(text, ' ') AS t
                            FROM documents WHERE lang = 'en' AND text IS NOT NULL),
                  pp AS (SELECT doc_id, unnest(generate_series(1, len(t) - 1)) AS i, t
                         FROM toks0),
@@ -2194,21 +1956,7 @@ object TextOps {
                  nn AS (SELECT count(*) AS n FROM vocab),
                  r0 AS (SELECT tok AS id, CAST(1.0 AS DOUBLE) / nn.n AS rank
                         FROM vocab, nn),
-                 c1 AS (SELECT ed.v AS id, sum(CAST(r.rank / ed.deg AS DECIMAL(30,10))) AS cs
-                        FROM ed JOIN r0 r ON r.id = ed.u GROUP BY ed.v),
-                 r1 AS (SELECT r.id, (1 - CAST(0.85 AS DOUBLE)) / nn.n
-                          + CAST(0.85 AS DOUBLE) * coalesce(CAST(c1.cs AS DOUBLE), CAST(0.0 AS DOUBLE)) AS rank
-                        FROM r0 r CROSS JOIN nn LEFT JOIN c1 ON c1.id = r.id),
-                 c2 AS (SELECT ed.v AS id, sum(CAST(r.rank / ed.deg AS DECIMAL(30,10))) AS cs
-                        FROM ed JOIN r1 r ON r.id = ed.u GROUP BY ed.v),
-                 r2 AS (SELECT r.id, (1 - CAST(0.85 AS DOUBLE)) / nn.n
-                          + CAST(0.85 AS DOUBLE) * coalesce(CAST(c2.cs AS DOUBLE), CAST(0.0 AS DOUBLE)) AS rank
-                        FROM r1 r CROSS JOIN nn LEFT JOIN c2 ON c2.id = r.id),
-                 c3 AS (SELECT ed.v AS id, sum(CAST(r.rank / ed.deg AS DECIMAL(30,10))) AS cs
-                        FROM ed JOIN r2 r ON r.id = ed.u GROUP BY ed.v),
-                 r3 AS (SELECT r.id, (1 - CAST(0.85 AS DOUBLE)) / nn.n
-                          + CAST(0.85 AS DOUBLE) * coalesce(CAST(c3.cs AS DOUBLE), CAST(0.0 AS DOUBLE)) AS rank
-                        FROM r2 r CROSS JOIN nn LEFT JOIN c3 ON c3.id = r.id)
+                 ${OracleSql.pageRankRounds(3)}
             SELECT r3.id AS token,
                    floor(r3.rank * nn.n * 1000000) / 1000000 AS rank_n
             FROM r3 CROSS JOIN nn

@@ -469,17 +469,12 @@ object VectorOps {
         .select(col("label").cast("bigint").as("label"),
           col("predicted").cast("bigint").as("predicted"), col("n_vecs"))
         .orderBy(asc_nulls_first("label"), asc_nulls_first("predicted")),
-    Some("""WITH e AS (SELECT vec_id, embedding, label FROM embeddings
+    Some(s"""WITH e AS (SELECT vec_id, embedding, label FROM embeddings
                        WHERE vec_id IS NOT NULL AND embedding IS NOT NULL
                          AND label IS NOT NULL),
                  pr AS (SELECT a.vec_id AS ia, a.label AS la,
                           b.vec_id AS ib, b.label AS lb,
-                          round(list_sum(list_transform(list_zip(a.embedding, b.embedding),
-                              x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                            / (sqrt(list_sum(list_transform(a.embedding,
-                                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                               * sqrt(list_sum(list_transform(b.embedding,
-                                   x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS sim
+                          round(${OracleSql.cos("a.embedding", "b.embedding")}, 4) AS sim
                         FROM e a JOIN e b ON a.vec_id <> b.vec_id),
                  top AS (SELECT ia, la, lb,
                            row_number() OVER (PARTITION BY ia
@@ -531,7 +526,7 @@ object VectorOps {
       Similarity.labelNoise(Tables.embeddings(s, dir), "vec_id", "embedding",
           "label", kWorst = 3)
         .orderBy(asc_nulls_first("label"), asc_nulls_first("rank")),
-    Some("""WITH em AS (SELECT CAST(vec_id AS BIGINT) AS id, CAST(label AS BIGINT) AS label, embedding AS e
+    Some(s"""WITH em AS (SELECT CAST(vec_id AS BIGINT) AS id, CAST(label AS BIGINT) AS label, embedding AS e
                         FROM embeddings
                         WHERE embedding IS NOT NULL AND len(embedding) > 0
                           AND label IS NOT NULL),
@@ -548,12 +543,7 @@ object VectorOps {
                  cent AS MATERIALIZED (SELECT label AS clabel, list(cval ORDER BY pos) AS c
                         FROM cm GROUP BY label),
                  sc AS (SELECT v.id, v.label, t.clabel,
-                          round(list_sum(list_transform(list_zip(v.e, t.c),
-                              x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                            / (sqrt(list_sum(list_transform(v.e,
-                                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                               * sqrt(list_sum(list_transform(t.c,
-                                   x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS sim
+                          round(${OracleSql.cos("v.e", "t.c")}, 4) AS sim
                         FROM em v CROSS JOIN cent t),
                  own AS (SELECT id, label, sim AS self_sim FROM sc WHERE label = clabel),
                  oth AS (SELECT id, clabel AS best_other_label, sim AS best_other_sim FROM (
@@ -620,25 +610,15 @@ object VectorOps {
       Similarity.matryoshkaEval(Tables.embeddings(s, dir), "vec_id", "embedding",
           probeIds = (0L to 9L).toSeq, dims = Seq(16, 32), k = 10)
         .orderBy(asc_nulls_first("probe_id"), asc_nulls_first("dim")),
-    Some("""WITH em AS (SELECT vec_id AS id, embedding AS e FROM embeddings
+    Some(s"""WITH em AS (SELECT vec_id AS id, embedding AS e FROM embeddings
                         WHERE embedding IS NOT NULL AND len(embedding) > 0),
                  pr AS (SELECT id AS pid, e AS pe FROM em
                         WHERE id IN (0,1,2,3,4,5,6,7,8,9)),
                  dd(dim) AS (VALUES (16), (32)),
                  sc AS (SELECT p.pid, v.id, d.dim,
-                          round(list_sum(list_transform(list_zip(v.e, p.pe),
-                              x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                            / (sqrt(list_sum(list_transform(v.e,
-                                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                               * sqrt(list_sum(list_transform(p.pe,
-                                   x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS sim_full,
-                          round(list_sum(list_transform(list_zip(
-                                list_slice(v.e, 1, d.dim), list_slice(p.pe, 1, d.dim)),
-                              x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))
-                            / (sqrt(list_sum(list_transform(list_slice(v.e, 1, d.dim),
-                                 x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-                               * sqrt(list_sum(list_transform(list_slice(p.pe, 1, d.dim),
-                                   x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 4) AS sim_d
+                          round(${OracleSql.cos("v.e", "p.pe")}, 4) AS sim_full,
+                          round(${OracleSql.cos("list_slice(v.e, 1, d.dim)",
+                            "list_slice(p.pe, 1, d.dim)")}, 4) AS sim_d
                         FROM em v CROSS JOIN pr p CROSS JOIN dd d
                         WHERE v.id <> p.pid),
                  g AS (SELECT pid, dim, id, row_number() OVER (PARTITION BY pid, dim

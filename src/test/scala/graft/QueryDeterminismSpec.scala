@@ -18,7 +18,7 @@ class QueryDeterminismSpec extends SparkTestBase {
     }
   }
 
-  test("oracleSql keys ⊆ queries keys and column-name contract holds") {
+  test("oracleSql keys ⊆ queries keys") {
     val qk = SparkEntry.queries.keySet
     val ok = SparkEntry.oracleSql.keySet
     assert(ok.subsetOf(qk), s"oracle without query: ${ok -- qk}")

@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
   * hand-written builder is a second place for the cores, shuffle width
   * and UTC zone to drift apart. Every checkpoint goes through
   * [[graft.api.Ckpt]], so a tracking scope sees it and its pin can be
-  * dropped. */
+  * dropped. Each shared DuckDB oracle fragment is spelled once, in
+  * graft/operators/OracleSql.scala, so the oracles cannot drift apart. */
 class SessionSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -33,6 +34,14 @@ class SessionSpec extends AnyFunSuite {
     val hits = sitesOf(".localCheckpoint(")
     assert(hits.nonEmpty && hits.forall(_._1 == root.resolve("graft/api/Ckpt.scala")),
       hits.map { case (f, n) => s"$f:$n" }.mkString("localCheckpoint sites: ", ", ", ""))
+  }
+
+  test("oracle fragments: the hot-shingle CTE and the text fingerprint are spelled once, in OracleSql") {
+    for (needle <- Seq("HAVING count(*) > 10)", "md5(lower(regexp_replace(")) {
+      val hits = sitesOf(needle).filter(_._1.startsWith(root.resolve("graft/operators")))
+      assert(hits.map(_._1) == Seq(root.resolve("graft/operators/OracleSql.scala")),
+        hits.map { case (f, n) => s"$f:$n" }.mkString(s"'$needle' sites: ", ", ", ""))
+    }
   }
 
   test("Session.local() sizes the generated-code cache above Spark's default of 100") {
