@@ -2,8 +2,8 @@ package graft.api
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Pins the exact bytes the PNG and JPEG encoders write for fixed
-  * inputs, as SHA-256 digests. The round-trip specs accept any output
+/** Pins the exact bytes the PNG, JPEG, MP4 and WAV encoders write for
+  * fixed inputs, as SHA-256 digests. The round-trip specs accept any output
   * that decodes to the right pixels; these digests catch a change to
   * headers, table layout, filter choice, block order or rounding.
   * PNG digests cover every chunk's tag and payload with IDAT INFLATED,
@@ -69,7 +69,20 @@ class CodecBytesSpec extends AnyFunSuite {
       "png pal 9x6" -> ImageCodec.encodePngPal(9, 6, pal,
         Array.tabulate(54)(k => (k * k + k / 9) % pal.length)))
       .map { case (name, bytes) => name -> sha256(canonicalPng(bytes)) }
-    jpegGray ++ jpegColor ++ png
+    val frames = (0 until 7).map(f =>
+      Array.tabulate(30 + f * 13)(k => ((f * 31 + k * 7) % 256).toByte))
+    val media = Seq(
+      "mp4 header 320x240" -> MediaCodec.encodeMp4Header(320, 240, 600, 1234),
+      "mp4 samples 64x48" -> MediaCodec.encodeMp4WithSamples(64, 48, 90000,
+        Seq(100, 2000, 35, 70000, 5), 3003, 2),
+      "mp4 mjpeg 24x16 1 chunk" -> MediaCodec.encodeMp4Mjpeg(24, 16, 1000, 40, 3, frames, 1),
+      "mp4 mjpeg 24x16 3 chunks" -> MediaCodec.encodeMp4Mjpeg(24, 16, 1000, 40, 3, frames, 3),
+      "wav mono" -> MediaCodec.encodeWavPcm16(16000, 1,
+        Array.tabulate(50)(k => (k * 1311 - 30000).toShort)),
+      "wav stereo" -> MediaCodec.encodeWavPcm16(22050, 2,
+        Array.tabulate(60)(k => (k * k * 17 - 20000).toShort)))
+      .map { case (name, bytes) => name -> sha256(bytes) }
+    jpegGray ++ jpegColor ++ png ++ media
   }
 
   test("encoder output bytes match the pinned digests") {
@@ -91,7 +104,19 @@ class CodecBytesSpec extends AnyFunSuite {
       "png color 6x7" ->
         "f8df6d22cf7251bd93964e8019eb31b16cc06d67d0a0b5103b2bd1e8abe15a49",
       "png pal 9x6" ->
-        "cc0d99d3d98217251df57e66f1eb3025f5dba045bb11245236c2228a1574d99d")
+        "cc0d99d3d98217251df57e66f1eb3025f5dba045bb11245236c2228a1574d99d",
+      "mp4 header 320x240" ->
+        "07c1c0ef4cab554c726176266da8573c832731ab8465b6a6376177a1c629c402",
+      "mp4 samples 64x48" ->
+        "6c39b057d2fc1f65eb5c65d64f93d81d2caa7e3f6534cffbd0a59d635d74bdff",
+      "mp4 mjpeg 24x16 1 chunk" ->
+        "87cf5c92d4e61651e91ddd5f7a69a5c93b69be8378aff9e342a51f082801e59d",
+      "mp4 mjpeg 24x16 3 chunks" ->
+        "746f0c895bef6858ff5bf89058c2df9342269b51f026c935380753ad89d8b817",
+      "wav mono" ->
+        "e404335dc20569c07959f2a689b710d88d249e31c0b99125e52ea90af00ce5b6",
+      "wav stereo" ->
+        "f9d417b06b4812553b3f63739b972f9e52a3945637464aa21ecbde2ca84244f0")
     val got = digests
     assert(got == expected, got.map { case (n, d) => s"\"$n\" -> \"$d\"" }.mkString("\n", ",\n", ""))
   }
