@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -57,6 +57,49 @@ object Drift {
     math.min(4096L, math.max(2L, math.max(forSize, forParallelism))).toInt
   }
 
+  /** The front half of the [[ks]] / [[emd]] / [[mannWhitney]] prefix
+    * scans: the distinct-value count frame `(x, ca, cb)` of the `labelA`
+    * and `labelB` rows (checkpointed — two consumers), `buckets - 1`
+    * approx-percentile cuts over its DISTINCT values (0 = derive the
+    * bucket count from the frame size, [[scanBuckets]]), and each value's
+    * bucket: the checkpointed frame `(x, ca, cb, bucket)`.
+    *
+    * The cuts only PARTITION the prefix scan, so neither their positions
+    * nor their count can move any of the three statistics; approx cuts
+    * because exact `percentile` buffers the whole distinct-value frame
+    * on one task (the single-task sort the Spearman rewrite measured at
+    * 10 s → 2 s). */
+  private def bucketedCounts(df: DataFrame, valueCol: String, labelCol: String,
+      labelA: String, labelB: String, buckets: Int): DataFrame = {
+    require(buckets == 0 || buckets >= 2,
+      s"buckets must be ≥2 (or 0 = occupancy-derived), got $buckets")
+    val counts = df
+      .filter(col(labelCol).isin(labelA, labelB) && col(valueCol).isNotNull)
+      .groupBy(col(valueCol).cast("double").as("x"))
+      .agg(
+        sum(when(col(labelCol) === labelA, 1L).otherwise(0L)).as("ca"),
+        sum(when(col(labelCol) === labelB, 1L).otherwise(0L)).as("cb"))
+      .transform(Ckpt.apply)
+    val b = if (buckets > 0) buckets else scanBuckets(counts.count())
+    val fracs = (1 until b).map(i => i.toDouble / b)
+    val cuts = counts.agg(
+      expr(s"approx_percentile(x, array(${fracs.mkString(", ")}), 1000)").as("cuts"))
+    // strict `>` against each cut: ties land in the lower bucket —
+    // irrelevant to the statistics, but keeps the assignment deterministic
+    counts.crossJoin(broadcast(cuts))
+      .select(col("x"), col("ca"), col("cb"),
+        (expr("aggregate(cuts, 0, (a, c) -> a + CASE WHEN x > c THEN 1 ELSE 0 END)")
+          + 1).cast("long").as("bucket"))
+      .transform(Ckpt.apply)
+  }
+
+  /** The cumulative count at a row: its in-bucket window sum `within`
+    * plus the `total` field of every lower bucket's entry in the
+    * bucket-totals broadcast `bt`. */
+  private def belowBucket(within: String, total: String): Column =
+    col(within) +
+      expr(s"aggregate(filter(bt, e -> e.bucket < bucket), 0L, (a, e) -> a + e.$total)")
+
   /** Exact two-sample Kolmogorov–Smirnov distance between the
     * `valueCol` distributions of `labelA` and `labelB` rows:
     * `D = max_x |F_A(x) − F_B(x)|` evaluated at every observed value
@@ -77,33 +120,7 @@ object Drift {
     */
   def ks(df: DataFrame, valueCol: String, labelCol: String,
       labelA: String, labelB: String, buckets: Int = 0): DataFrame = {
-    require(buckets == 0 || buckets >= 2,
-      s"buckets must be ≥2 (or 0 = occupancy-derived), got $buckets")
-    val counts = df
-      .filter(col(labelCol).isin(labelA, labelB) && col(valueCol).isNotNull)
-      .groupBy(col(valueCol).cast("double").as("x"))
-      .agg(
-        sum(when(col(labelCol) === labelA, 1L).otherwise(0L)).as("ca"),
-        sum(when(col(labelCol) === labelB, 1L).otherwise(0L)).as("cb"))
-      .transform(Ckpt.apply)
-    // 0 = derive from the distinct-frame size ([[scanBuckets]]) so
-    // per-window rows stay bounded at any corpus size; bucket count
-    // cannot move D (boundaries only partition the prefix scan)
-    val b = if (buckets > 0) buckets else scanBuckets(counts.count())
-    val fracs = (1 until b).map(i => i.toDouble / b)
-    // approx cuts, exact statistic: cut positions only PARTITION the
-    // prefix scan, so they cannot move D — and exact `percentile`
-    // buffers the whole distinct-value frame on one task (the
-    // single-task sort the Spearman rewrite measured at 10 s → 2 s)
-    val cuts = counts.agg(
-      expr(s"approx_percentile(x, array(${fracs.mkString(", ")}), 1000)").as("cuts"))
-    // strict `>` against each cut: ties land in the lower bucket —
-    // irrelevant to D, but keeps the assignment deterministic
-    val bucketed = counts.crossJoin(broadcast(cuts))
-      .select(col("x"), col("ca"), col("cb"),
-        (expr("aggregate(cuts, 0, (a, c) -> a + CASE WHEN x > c THEN 1 ELSE 0 END)")
-          + 1).cast("long").as("bucket"))
-      .transform(Ckpt.apply)
+    val bucketed = bucketedCounts(df, valueCol, labelCol, labelA, labelB, buckets)
     val w = Window.partitionBy("bucket").orderBy("x")
     val within = bucketed.select(col("bucket"),
       sum("ca").over(w).as("wa"), sum("cb").over(w).as("wb"))
@@ -113,12 +130,8 @@ object Drift {
         .as("bt"))
     within.crossJoin(broadcast(bt))
       .select(
-        (col("wa") + expr(
-          "aggregate(filter(bt, e -> e.bucket < bucket), 0L, (a, e) -> a + e.sa)"))
-          .as("cum_a"),
-        (col("wb") + expr(
-          "aggregate(filter(bt, e -> e.bucket < bucket), 0L, (a, e) -> a + e.sb)"))
-          .as("cum_b"),
+        belowBucket("wa", "sa").as("cum_a"),
+        belowBucket("wb", "sb").as("cum_b"),
         expr("aggregate(bt, 0L, (a, e) -> a + e.sa)").as("na"),
         expr("aggregate(bt, 0L, (a, e) -> a + e.sb)").as("nb"))
       .agg(
@@ -148,24 +161,7 @@ object Drift {
     * divergence), floored to 4dp. */
   def emd(df: DataFrame, valueCol: String, labelCol: String,
       labelA: String, labelB: String, buckets: Int = 0): DataFrame = {
-    require(buckets == 0 || buckets >= 2,
-      s"buckets must be ≥2 (or 0 = occupancy-derived), got $buckets")
-    val counts = df
-      .filter(col(labelCol).isin(labelA, labelB) && col(valueCol).isNotNull)
-      .groupBy(col(valueCol).cast("double").as("x"))
-      .agg(
-        sum(when(col(labelCol) === labelA, 1L).otherwise(0L)).as("ca"),
-        sum(when(col(labelCol) === labelB, 1L).otherwise(0L)).as("cb"))
-      .transform(Ckpt.apply)
-    val b = if (buckets > 0) buckets else scanBuckets(counts.count())
-    val fracs = (1 until b).map(i => i.toDouble / b)
-    val cuts = counts.agg(
-      expr(s"approx_percentile(x, array(${fracs.mkString(", ")}), 1000)").as("cuts"))
-    val bucketed = counts.crossJoin(broadcast(cuts))
-      .select(col("x"), col("ca"), col("cb"),
-        (expr("aggregate(cuts, 0, (a, c) -> a + CASE WHEN x > c THEN 1 ELSE 0 END)")
-          + 1).cast("long").as("bucket"))
-      .transform(Ckpt.apply)
+    val bucketed = bucketedCounts(df, valueCol, labelCol, labelA, labelB, buckets)
     val w = Window.partitionBy("bucket").orderBy("x")
     val within = bucketed.select(col("bucket"), col("x"),
       sum("ca").over(w).as("wa"), sum("cb").over(w).as("wb"),
@@ -176,12 +172,8 @@ object Drift {
         col("mnx")))).as("bt"))
     within.crossJoin(broadcast(bt))
       .select(col("x"),
-        (col("wa") + expr(
-          "aggregate(filter(bt, e -> e.bucket < bucket), 0L, (a, e) -> a + e.sa)"))
-          .as("cum_a"),
-        (col("wb") + expr(
-          "aggregate(filter(bt, e -> e.bucket < bucket), 0L, (a, e) -> a + e.sb)"))
-          .as("cum_b"),
+        belowBucket("wa", "sa").as("cum_a"),
+        belowBucket("wb", "sb").as("cum_b"),
         // bt is sorted by bucket: the first entry past this bucket holds
         // the next value across the boundary; null at the global max
         coalesce(col("nx_in"),
@@ -217,27 +209,7 @@ object Drift {
     * no global single-partition window. */
   def mannWhitney(df: DataFrame, valueCol: String, labelCol: String,
       labelA: String, labelB: String, buckets: Int = 0): DataFrame = {
-    require(buckets == 0 || buckets >= 2,
-      s"buckets must be ≥2 (or 0 = occupancy-derived), got $buckets")
-    val counts = df
-      .filter(col(labelCol).isin(labelA, labelB) && col(valueCol).isNotNull)
-      .groupBy(col(valueCol).cast("double").as("x"))
-      .agg(
-        sum(when(col(labelCol) === labelA, 1L).otherwise(0L)).as("ca"),
-        sum(when(col(labelCol) === labelB, 1L).otherwise(0L)).as("cb"))
-      .transform(Ckpt.apply)
-    val b = if (buckets > 0) buckets else scanBuckets(counts.count())
-    val fracs = (1 until b).map(i => i.toDouble / b)
-    // approx cuts for the same reason as [[ks]]: positions only
-    // partition the prefix scan and cannot change U or z (r8 ADVICE —
-    // exact percentile buffered the whole distinct frame on one task)
-    val cuts = counts.agg(
-      expr(s"approx_percentile(x, array(${fracs.mkString(", ")}), 1000)").as("cuts"))
-    val bucketed = counts.crossJoin(broadcast(cuts))
-      .select(col("x"), col("ca"), col("cb"),
-        (expr("aggregate(cuts, 0, (a, c) -> a + CASE WHEN x > c THEN 1 ELSE 0 END)")
-          + 1).cast("long").as("bucket"))
-      .transform(Ckpt.apply)
+    val bucketed = bucketedCounts(df, valueCol, labelCol, labelA, labelB, buckets)
     val w = Window.partitionBy("bucket").orderBy("x")
     val within = bucketed.select(col("bucket"), col("ca"), col("cb"),
       sum("cb").over(w).as("wb"))
@@ -245,9 +217,7 @@ object Drift {
       .agg(sort_array(collect_list(struct(col("bucket"), col("sb")))).as("bt"))
     val m = within.crossJoin(broadcast(bt))
       .select(col("ca"), col("cb"),
-        (col("wb") + expr(
-          "aggregate(filter(bt, e -> e.bucket < bucket), 0L, (a, e) -> a + e.sb)"))
-          .as("cumb"))
+        belowBucket("wb", "sb").as("cumb"))
       .agg(
         sum("ca").as("na"), sum("cb").as("nb"),
         // decimal BEFORE the products: per-value factors are counts

@@ -298,7 +298,7 @@ object ImageCodec {
     var done = false
     while (!done && i + 8 <= bytes.length) {
       val len = readBe32(bytes, i)
-      if (len < 0 || i + 12 + len > bytes.length) return None
+      if (len < 0 || len > bytes.length - i - 12) return None
       val tag = new String(bytes.slice(i + 4, i + 8), "US-ASCII")
       if (tag == "IDAT") idat.write(bytes, i + 8, len)
       else if (tag == "PLTE") {
@@ -403,7 +403,7 @@ object ImageCodec {
         ((bytes(off + 2) & 0xff) << 16) | ((bytes(off + 3) & 0xff) << 24)
     val dataOff = le32r(10)
     val hdrSize = le32r(14)
-    if (hdrSize < 40) return None
+    if (hdrSize < 40 || hdrSize > bytes.length) return None
     val w = le32r(18)
     val rawH = le32r(22)
     val topDown = rawH < 0
@@ -417,7 +417,7 @@ object ImageCodec {
       // palette: colorsUsed (0 → 256) BGRx entries right after the header
       val colors = { val c = le32r(46); if (c == 0) 256 else c }
       val palOff = 14 + hdrSize
-      if (palOff + colors * 4 > bytes.length) return None
+      if (colors < 0 || palOff + colors * 4L > bytes.length) return None
       val pal = new Array[Int](colors)
       var i = 0
       while (i < colors) {
@@ -429,7 +429,7 @@ object ImageCodec {
         i += 1
       }
       val stride = (w + 3) & ~3
-      if (dataOff + stride.toLong * h > bytes.length) return None
+      if (dataOff < 0 || dataOff + stride.toLong * h > bytes.length) return None
       var y = 0
       while (y < h) {
         val srcRow = if (topDown) y else h - 1 - y
@@ -444,7 +444,7 @@ object ImageCodec {
       }
     } else if (bpp == 24) {
       val stride = (w * 3 + 3) & ~3
-      if (dataOff + stride.toLong * h > bytes.length) return None
+      if (dataOff < 0 || dataOff + stride.toLong * h > bytes.length) return None
       var y = 0
       while (y < h) {
         val srcRow = if (topDown) y else h - 1 - y

@@ -65,7 +65,21 @@ object MediaCodec {
   /** Parse RIFF/WAVE metadata: chunk walk to `fmt ` and `data` (extra
     * chunks in between are skipped per spec, incl. odd-length padding).
     * nFrames = data bytes / block align. None on non-WAV/truncated. */
-  def decodeWavMeta(bytes: Array[Byte]): Option[AudioMeta] = {
+  def decodeWavMeta(bytes: Array[Byte]): Option[AudioMeta] = wavData(bytes).map(_._1)
+
+  /** Full PCM16 sample decode (interleaved, little-endian). None on
+    * anything [[decodeWavMeta]] rejects or a non-16-bit stream. */
+  def decodeWavPcm16(bytes: Array[Byte]): Option[(AudioMeta, Array[Short])] =
+    wavData(bytes).collect { case (meta, off, len) if meta.bitsPerSample == 16 =>
+      val out = new Array[Short](len / 2)
+      var k = 0
+      while (k < out.length) { out(k) = le16(bytes, off + k * 2).toShort; k += 1 }
+      (meta, out)
+    }
+
+  /** The RIFF chunk walk behind [[decodeWavMeta]]: the metadata plus the
+    * `data` chunk's payload offset and length, which fits the payload. */
+  private def wavData(bytes: Array[Byte]): Option[(AudioMeta, Int, Int)] = {
     if (bytes == null || bytes.length < 44) return None
     if (tag(bytes, 0) != "RIFF" || tag(bytes, 8) != "WAVE") return None
     var i = 12
@@ -73,7 +87,7 @@ object MediaCodec {
     while (i + 8 <= bytes.length) {
       val ct = tag(bytes, i)
       val len = le32(bytes, i + 4)
-      if (len < 0 || i + 8 + len > bytes.length) return None
+      if (len < 0 || len > bytes.length - i - 8) return None
       if (ct == "fmt ") {
         if (len < 16) return None
         val fmt = le16(bytes, i + 8)
@@ -84,34 +98,10 @@ object MediaCodec {
         if (ch <= 0 || bits <= 0) return None
         val blockAlign = ch * (bits / 8)
         if (blockAlign <= 0) return None
-        return Some(AudioMeta("wav", rate.toLong, ch.toLong, bits.toLong,
-          (len / blockAlign).toLong))
+        return Some((AudioMeta("wav", rate.toLong, ch.toLong, bits.toLong,
+          (len / blockAlign).toLong), i + 8, len))
       }
       i += 8 + len + (len & 1) // RIFF chunks pad to even length
-    }
-    None
-  }
-
-  /** Full PCM16 sample decode (interleaved, little-endian). None on
-    * anything [[decodeWavMeta]] rejects or a non-16-bit stream. */
-  def decodeWavPcm16(bytes: Array[Byte]): Option[(AudioMeta, Array[Short])] = {
-    val meta = decodeWavMeta(bytes) match {
-      case Some(m) if m.bitsPerSample == 16 => m
-      case _ => return None
-    }
-    // re-walk to the data chunk (decodeMeta proved it exists and fits)
-    var i = 12
-    while (i + 8 <= bytes.length) {
-      val ct = tag(bytes, i)
-      val len = le32(bytes, i + 4)
-      if (ct == "data") {
-        val n = len / 2
-        val out = new Array[Short](n)
-        var k = 0
-        while (k < n) { out(k) = le16(bytes, i + 8 + k * 2).toShort; k += 1 }
-        return Some((meta, out))
-      }
-      i += 8 + len + (len & 1)
     }
     None
   }
@@ -121,12 +111,75 @@ object MediaCodec {
   private def beBytes(v: Int): Array[Byte] =
     Array[Byte]((v >>> 24).toByte, (v >>> 16).toByte, (v >>> 8).toByte, v.toByte)
 
+  private def ascii(s: String): Array[Byte] = s.getBytes("US-ASCII")
+
   private def box(tp: String, payload: Array[Byte]*): Array[Byte] = {
     val len = 8 + payload.map(_.length).sum
     val out = new java.io.ByteArrayOutputStream()
-    out.write(beBytes(len)); out.write(tp.getBytes("US-ASCII"))
+    out.write(beBytes(len)); out.write(ascii(tp))
     payload.foreach(out.write)
     out.toByteArray
+  }
+
+  private def zeros32(n: Int): Array[Byte] = new Array[Byte](4 * n)
+
+  private val ftyp = box("ftyp", ascii("isom"), beBytes(512), ascii("isom"), ascii("iso2"))
+
+  /** `moov` of a one-track movie: a version-0 `mvhd` (timescale,
+    * duration) and a `trak` holding `tkhd` (width × height as the
+    * spec's 16.16 fixed point) followed by `trakTail` (the `mdia` box,
+    * if any). */
+  private def moov(width: Int, height: Int, timescale: Int, duration: Int,
+      trakTail: Array[Byte]*): Array[Byte] = {
+    // mvhd v0: ver/flags, ctime, mtime, timescale, duration, rate,
+    // volume+reserved, 2×reserved, 9×matrix, 6×predefined, next_track_id
+    val mvhd = box("mvhd", zeros32(3), beBytes(timescale), beBytes(duration),
+      beBytes(0x00010000), beBytes(0x01000000), zeros32(2), zeros32(9), zeros32(6),
+      beBytes(2))
+    // tkhd v0: ver/flags(enabled), ctime, mtime, track_id, reserved,
+    // duration, 2×reserved, layer+group, volume+reserved, 9×matrix,
+    // width 16.16, height 16.16
+    val tkhd = box("tkhd", beBytes(0x00000007), zeros32(2), beBytes(1), zeros32(1),
+      beBytes(duration), zeros32(4), zeros32(9), beBytes(width << 16), beBytes(height << 16))
+    box("moov", mvhd, box("trak", (tkhd +: trakTail): _*))
+  }
+
+  /** `mdia` of a video track: `mdhd`, `hdlr` (vide) and `minf/stbl`
+    * with one minimal 86-byte VisualSampleEntry of codec `fourcc` in
+    * `stsd` (all-zero codec fields — the table walk reads structure,
+    * not pixel payloads), then `stts` (one run of `sampleDelta`),
+    * `stss` (samples 1, 1+k, 1+2k, … for k = `syncEvery`), `stsz` and
+    * the caller's chunk boxes. */
+  private def videoMdia(fourcc: String, width: Int, height: Int, timescale: Int,
+      sampleSizes: Seq[Int], sampleDelta: Int, syncEvery: Int,
+      chunkBoxes: Array[Byte]*): Array[Byte] = {
+    val n = sampleSizes.length
+    val mdhd = box("mdhd", zeros32(3), beBytes(timescale), beBytes(n * sampleDelta),
+      Array[Byte](0x55, 0xc4.toByte, 0, 0)) // language 'und' + predefined
+    val hdlr = box("hdlr", zeros32(2), ascii("vide"), zeros32(3),
+      Array[Byte](0)) // empty null-terminated name
+    val entry = {
+      val b = new java.io.ByteArrayOutputStream()
+      b.write(beBytes(86)); b.write(ascii(fourcc))
+      b.write(new Array[Byte](6)); b.write(Array[Byte](0, 1)) // data_ref_index 1
+      b.write(new Array[Byte](16)) // predefined/reserved
+      b.write(Array[Byte]((width >> 8).toByte, width.toByte,
+        (height >> 8).toByte, height.toByte))
+      b.write(beBytes(0x00480000)); b.write(beBytes(0x00480000)) // 72 dpi
+      b.write(beBytes(0)); b.write(Array[Byte](0, 1)) // frame_count 1
+      b.write(new Array[Byte](32)) // compressorname
+      b.write(Array[Byte](0, 24)); b.write(Array[Byte](0xff.toByte, 0xff.toByte))
+      b.toByteArray
+    }
+    val stsd = box("stsd", beBytes(0), beBytes(1), entry)
+    val stts = box("stts", beBytes(0), beBytes(1), beBytes(n), beBytes(sampleDelta))
+    val syncSamples = (1 to n by syncEvery).toArray
+    val stss = box("stss", beBytes(0), beBytes(syncSamples.length),
+      syncSamples.flatMap(beBytes))
+    val stsz = box("stsz", beBytes(0), beBytes(0), beBytes(n),
+      sampleSizes.toArray.flatMap(beBytes))
+    val stbl = box("stbl", (Seq(stsd, stts, stss, stsz) ++ chunkBoxes): _*)
+    box("mdia", mdhd, hdlr, box("minf", stbl))
   }
 
   /** Encode a minimal REAL ISO-BMFF (MP4) header: `ftyp` (isom) +
@@ -138,70 +191,92 @@ object MediaCodec {
       duration: Int): Array[Byte] = {
     require(width > 0 && height > 0 && timescale > 0 && duration >= 0,
       s"bad mp4 params ${width}x$height $timescale/$duration")
-    val ftyp = box("ftyp", "isom".getBytes("US-ASCII"), beBytes(512),
-      "isom".getBytes("US-ASCII"), "iso2".getBytes("US-ASCII"))
-    // mvhd v0: ver/flags, ctime, mtime, timescale, duration, rate,
-    // volume+reserved, 2×reserved, 9×matrix, 6×predefined, next_track_id
-    val mvhd = box("mvhd", beBytes(0), beBytes(0), beBytes(0),
-      beBytes(timescale), beBytes(duration), beBytes(0x00010000),
-      beBytes(0x01000000), beBytes(0), beBytes(0),
-      Array.fill(9)(beBytes(0)).flatten.toArray,
-      Array.fill(6)(beBytes(0)).flatten.toArray, beBytes(2))
-    // tkhd v0: ver/flags(enabled), ctime, mtime, track_id, reserved,
-    // duration, 2×reserved, layer+group, volume+reserved, 9×matrix,
-    // width 16.16, height 16.16
-    val tkhd = box("tkhd", beBytes(0x00000007), beBytes(0), beBytes(0),
-      beBytes(1), beBytes(0), beBytes(duration), beBytes(0), beBytes(0),
-      beBytes(0), beBytes(0),
-      Array.fill(9)(beBytes(0)).flatten.toArray,
-      beBytes(width << 16), beBytes(height << 16))
-    val moov = box("moov", mvhd, box("trak", tkhd))
-    ftyp ++ moov
+    ftyp ++ moov(width, height, timescale, duration)
   }
+
+  /** The BMFF preamble check and depth-first box walk every MP4 decoder
+    * runs: false unless the first box is a well-formed ftyp/styp/moov.
+    * Each box found is either descended into (a type in `containers`,
+    * below `maxDepth`) or handed to `visit(type, boxStart, boxLen)`,
+    * whose false stops the walk of that box's siblings. A box whose
+    * size is below 8 or leaves its parent stops its level the same way. */
+  private def walkBmff(bytes: Array[Byte], containers: Set[String], maxDepth: Int)(
+      visit: (String, Int, Int) => Boolean): Boolean = {
+    if (bytes == null || bytes.length < 16) return false
+    val first = tag(bytes, 4)
+    if (first != "ftyp" && first != "styp" && first != "moov") return false
+    def walk(start: Int, end: Int, depth: Int): Unit = {
+      var i = start
+      while (i + 8 <= end) {
+        val len = be32(bytes, i)
+        if (len < 8 || len > end - i) return
+        val tp = tag(bytes, i + 4)
+        if (containers(tp) && depth < maxDepth) walk(i + 8, i + len, depth + 1)
+        else if (!visit(tp, i, len)) return
+        i += len
+      }
+    }
+    walk(0, bytes.length, 0)
+    true
+  }
+
+  private def u32(b: Array[Byte], off: Int): Long = be32(b, off).toLong & 0xffffffffL
+
+  /** A full box's counted table (count at payload+4, entries of
+    * `stride` bytes from payload+8), read with `entry(offset)`; None
+    * when the count is negative or the entries leave the box. */
+  private def table[T](b: Array[Byte], p: Int, boxEnd: Int, stride: Int)(
+      entry: Int => T): Option[Seq[T]] = {
+    val cnt = be32(b, p + 4)
+    if (cnt < 0 || p + 8 + stride.toLong * cnt > boxEnd) None
+    else Some((0 until cnt).map(k => entry(p + 8 + stride * k)))
+  }
+
+  /** `stsz` sample sizes — the uniform `sample_size` repeated, or the
+    * per-sample list; None on a forged count. */
+  private def stszSizes(b: Array[Byte], p: Int, boxEnd: Int): Option[Seq[Long]] = {
+    val uniform = u32(b, p + 4)
+    val cnt = be32(b, p + 8)
+    // uniform-size tables carry no per-sample list to bound the
+    // count against — cap it so a forged header cannot OOM
+    if (cnt < 0 || cnt > (1 << 24)) None
+    else if (uniform != 0) Some(Seq.fill(cnt)(uniform))
+    else if (p + 12 + 4L * cnt > boxEnd) None
+    else Some((0 until cnt).map(k => u32(b, p + 12 + 4 * k)))
+  }
+
+  private val stblPath = Set("moov", "trak", "mdia", "minf", "stbl")
 
   /** ISO-BMFF box walk: find `moov`, read `mvhd` timescale/duration
     * (version 0 or 1) and the first `trak`→`tkhd` width/height (16.16
     * fixed → integer part). duration_ms = duration · 1000 / timescale
     * in integer math. None for non-BMFF/truncated payloads. */
   def decodeMp4Meta(bytes: Array[Byte]): Option[VideoMeta] = {
-    if (bytes == null || bytes.length < 16) return None
-    // the first box must be a well-formed ftyp/styp/moov per BMFF
-    val first = tag(bytes, 4)
-    if (first != "ftyp" && first != "styp" && first != "moov") return None
     var ts = 0L; var dur = -1L; var w = -1L; var h = -1L
-    def walk(start: Int, end: Int, depth: Int): Unit = {
-      var i = start
-      while (i + 8 <= end) {
-        val len = be32(bytes, i)
-        if (len < 8 || i + len > end) return
-        val tp = tag(bytes, i + 4)
-        tp match {
-          case "moov" | "trak" if depth < 4 => walk(i + 8, i + len, depth + 1)
-          case "mvhd" if len >= 32 =>
-            val ver = bytes(i + 8) & 0xff
-            if (ver == 1 && len >= 40) {
-              // v1 payload: ver/flags(4) ctime(8) mtime(8) timescale(4)
-              // duration(8) — timescale at i+28, 64-bit duration at i+32
-              ts = be32(bytes, i + 28).toLong & 0xffffffffL
-              dur = ((be32(bytes, i + 32).toLong & 0xffffffffL) << 32) |
-                (be32(bytes, i + 36).toLong & 0xffffffffL)
-            } else {
-              ts = be32(bytes, i + 20).toLong & 0xffffffffL
-              dur = be32(bytes, i + 24).toLong & 0xffffffffL
-            }
-          case "tkhd" if w < 0 && len >= 92 =>
-            // width/height are the LAST 8 bytes of tkhd in both v0 and
-            // v1 layouts (the v1 deltas are all before the matrix)
-            val off = i + len - 8
-            w = (be32(bytes, off).toLong & 0xffffffffL) >> 16
-            h = (be32(bytes, off + 4).toLong & 0xffffffffL) >> 16
-          case _ => ()
-        }
-        i += len
+    val bmff = walkBmff(bytes, Set("moov", "trak"), 4) { (tp, i, len) =>
+      tp match {
+        case "mvhd" if len >= 32 =>
+          val ver = bytes(i + 8) & 0xff
+          if (ver == 1 && len >= 40) {
+            // v1 payload: ver/flags(4) ctime(8) mtime(8) timescale(4)
+            // duration(8) — timescale at i+28, 64-bit duration at i+32
+            ts = u32(bytes, i + 28)
+            dur = (u32(bytes, i + 32) << 32) | u32(bytes, i + 36)
+          } else {
+            ts = u32(bytes, i + 20)
+            dur = u32(bytes, i + 24)
+          }
+        case "tkhd" if w < 0 && len >= 92 =>
+          // width/height are the LAST 8 bytes of tkhd in both v0 and
+          // v1 layouts (the v1 deltas are all before the matrix)
+          val off = i + len - 8
+          w = u32(bytes, off) >> 16
+          h = u32(bytes, off + 4) >> 16
+        case _ => ()
       }
+      true
     }
-    walk(0, bytes.length, 0)
-    if (ts <= 0 || dur < 0 || w <= 0 || h <= 0) None
+    if (!bmff || ts <= 0 || dur < 0 || w <= 0 || h <= 0) None
     else Some(VideoMeta("mp4", w, h, dur * 1000L / ts, ts))
   }
 
@@ -244,55 +319,9 @@ object MediaCodec {
       sampleSizes: Seq[Int], sampleDelta: Int, syncEvery: Int): Array[Byte] = {
     require(width > 0 && height > 0 && timescale > 0, "bad dims/timescale")
     require(sampleSizes.nonEmpty && sampleDelta > 0 && syncEvery > 0, "bad sample params")
-    val n = sampleSizes.length
-    val duration = n * sampleDelta
-    val ftyp = box("ftyp", "isom".getBytes("US-ASCII"), beBytes(512),
-      "isom".getBytes("US-ASCII"), "iso2".getBytes("US-ASCII"))
-    val mvhd = box("mvhd", beBytes(0), beBytes(0), beBytes(0),
-      beBytes(timescale), beBytes(duration), beBytes(0x00010000),
-      beBytes(0x01000000), beBytes(0), beBytes(0),
-      Array.fill(9)(beBytes(0)).flatten.toArray,
-      Array.fill(6)(beBytes(0)).flatten.toArray, beBytes(2))
-    val tkhd = box("tkhd", beBytes(0x00000007), beBytes(0), beBytes(0),
-      beBytes(1), beBytes(0), beBytes(duration), beBytes(0), beBytes(0),
-      beBytes(0), beBytes(0),
-      Array.fill(9)(beBytes(0)).flatten.toArray,
-      beBytes(width << 16), beBytes(height << 16))
-    val mdhd = box("mdhd", beBytes(0), beBytes(0), beBytes(0),
-      beBytes(timescale), beBytes(duration),
-      Array[Byte](0x55, 0xc4.toByte, 0, 0)) // language 'und' + predefined
-    val hdlr = box("hdlr", beBytes(0), beBytes(0),
-      "vide".getBytes("US-ASCII"), beBytes(0), beBytes(0), beBytes(0),
-      Array[Byte](0)) // empty null-terminated name
-    // stsd: one minimal VisualSampleEntry (86 bytes: all-zero codec
-    // fields — the table walk reads structure, not pixel payloads)
-    val entry = {
-      val b = new java.io.ByteArrayOutputStream()
-      b.write(beBytes(86)); b.write("mp4v".getBytes("US-ASCII"))
-      b.write(new Array[Byte](6)); b.write(Array[Byte](0, 1)) // data_ref_index 1
-      b.write(new Array[Byte](16)) // predefined/reserved
-      b.write(Array[Byte]((width >> 8).toByte, width.toByte,
-        (height >> 8).toByte, height.toByte))
-      b.write(beBytes(0x00480000)); b.write(beBytes(0x00480000)) // 72 dpi
-      b.write(beBytes(0)); b.write(Array[Byte](0, 1)) // frame_count 1
-      b.write(new Array[Byte](32)) // compressorname
-      b.write(Array[Byte](0, 24)); b.write(Array[Byte](0xff.toByte, 0xff.toByte))
-      b.toByteArray
-    }
-    val stsd = box("stsd", beBytes(0), beBytes(1), entry)
-    val stts = box("stts", beBytes(0), beBytes(1),
-      beBytes(n), beBytes(sampleDelta))
-    val syncSamples = (1 to n by syncEvery).toArray
-    val stss = box("stss", beBytes(0), beBytes(syncSamples.length),
-      syncSamples.flatMap(beBytes))
-    val stsz = box("stsz", beBytes(0), beBytes(0), beBytes(n),
-      sampleSizes.toArray.flatMap(beBytes))
     val stco = box("stco", beBytes(0), beBytes(0))
-    val stbl = box("stbl", stsd, stts, stss, stsz, stco)
-    val minf = box("minf", stbl)
-    val mdia = box("mdia", mdhd, hdlr, minf)
-    val moov = box("moov", mvhd, box("trak", tkhd, mdia))
-    ftyp ++ moov
+    ftyp ++ moov(width, height, timescale, sampleSizes.length * sampleDelta,
+      videoMdia("mp4v", width, height, timescale, sampleSizes, sampleDelta, syncEvery, stco))
   }
 
   /** Walk `moov/trak/mdia` of a BMFF payload and read the FIRST video
@@ -303,57 +332,30 @@ object MediaCodec {
     * bounded against the payload length BEFORE any allocation — a
     * forged header cannot OOM an executor). */
   def decodeMp4Samples(bytes: Array[Byte]): Option[Mp4SampleTable] = {
-    if (bytes == null || bytes.length < 16) return None
-    val first = tag(bytes, 4)
-    if (first != "ftyp" && first != "styp" && first != "moov") return None
     var timescale = 0L
     var sizes: Seq[Long] = null
     var stts: Seq[(Long, Long)] = null
     var sync: Seq[Long] = null
-    def walk(start: Int, end: Int, depth: Int): Unit = {
-      var i = start
-      while (i + 8 <= end) {
-        val len = be32(bytes, i)
-        if (len < 8 || i + len > end) return
-        val tp = tag(bytes, i + 4)
-        val p = i + 8
-        tp match {
-          case "moov" | "trak" | "mdia" | "minf" | "stbl" if depth < 8 =>
-            walk(p, i + len, depth + 1)
-          case "mdhd" if timescale == 0 && len >= 32 =>
-            val ver = bytes(p) & 0xff
-            timescale =
-              if (ver == 1 && len >= 36) be32(bytes, p + 20).toLong & 0xffffffffL
-              else be32(bytes, p + 12).toLong & 0xffffffffL
-          case "stts" if stts == null && len >= 16 =>
-            val cnt = be32(bytes, p + 4)
-            if (cnt < 0 || p + 8 + 8L * cnt > i + len) return
-            stts = (0 until cnt).map { k =>
-              (be32(bytes, p + 8 + 8 * k).toLong & 0xffffffffL,
-                be32(bytes, p + 12 + 8 * k).toLong & 0xffffffffL)
-            }
-          case "stss" if sync == null && len >= 16 =>
-            val cnt = be32(bytes, p + 4)
-            if (cnt < 0 || p + 8 + 4L * cnt > i + len) return
-            sync = (0 until cnt).map(k => be32(bytes, p + 8 + 4 * k).toLong & 0xffffffffL)
-          case "stsz" if sizes == null && len >= 20 =>
-            val uniform = be32(bytes, p + 4).toLong & 0xffffffffL
-            val cnt = be32(bytes, p + 8)
-            // uniform-size tables carry no per-sample list to bound the
-            // count against — cap it so a forged header cannot OOM
-            if (cnt < 0 || cnt > (1 << 24)) return
-            if (uniform != 0) sizes = Seq.fill(cnt)(uniform)
-            else {
-              if (p + 12 + 4L * cnt > i + len) return
-              sizes = (0 until cnt).map(k => be32(bytes, p + 12 + 4 * k).toLong & 0xffffffffL)
-            }
-          case _ => ()
-        }
-        i += len
+    val bmff = walkBmff(bytes, stblPath, 8) { (tp, i, len) =>
+      val p = i + 8
+      tp match {
+        case "mdhd" if timescale == 0 && len >= 32 =>
+          val ver = bytes(p) & 0xff
+          timescale = if (ver == 1 && len >= 36) u32(bytes, p + 20) else u32(bytes, p + 12)
+          true
+        case "stts" if stts == null && len >= 16 =>
+          stts = table(bytes, p, i + len, 8)(o => (u32(bytes, o), u32(bytes, o + 4))).orNull
+          stts != null
+        case "stss" if sync == null && len >= 16 =>
+          sync = table(bytes, p, i + len, 4)(u32(bytes, _)).orNull
+          sync != null
+        case "stsz" if sizes == null && len >= 20 =>
+          sizes = stszSizes(bytes, p, i + len).orNull
+          sizes != null
+        case _ => true
       }
     }
-    walk(0, bytes.length, 0)
-    if (timescale <= 0 || sizes == null || stts == null) None
+    if (!bmff || timescale <= 0 || sizes == null || stts == null) None
     else {
       // absent stss = every sample is a sync sample (ISO 14496-12 §8.6.2)
       val sy = if (sync == null) (1L to sizes.length.toLong) else sync
@@ -378,21 +380,16 @@ object MediaCodec {
     require(frames.nonEmpty && sampleDelta > 0 && syncEvery > 0, "bad sample params")
     require(nChunks >= 1 && nChunks <= frames.length, s"bad nChunks $nChunks")
     val n = frames.length
-    val duration = n * sampleDelta
-    val ftyp = box("ftyp", "isom".getBytes("US-ASCII"), beBytes(512),
-      "isom".getBytes("US-ASCII"), "iso2".getBytes("US-ASCII"))
-    val mdatPayload = frames.toArray.flatten
-    val mdat = box("mdat", mdatPayload)
+    val mdat = box("mdat", frames.toArray.flatten)
     // consecutive chunk sizing: the first (n % nChunks) chunks carry one
     // extra sample
     val base = n / nChunks; val extra = n % nChunks
     val chunkCounts = Array.tabulate(nChunks)(c => base + (if (c < extra) 1 else 0))
     // absolute chunk offsets into the file (mdat payload starts after
     // ftyp + the mdat box header)
-    val mdatStart = ftyp.length + 8
     val sampleSizes = frames.map(_.length)
     val chunkOffsets = new Array[Int](nChunks)
-    var si = 0; var off = mdatStart
+    var si = 0; var off = ftyp.length + 8
     var c = 0
     while (c < nChunks) {
       chunkOffsets(c) = off
@@ -411,50 +408,12 @@ object MediaCodec {
       }
       runs.result()
     }
-    val mvhd = box("mvhd", beBytes(0), beBytes(0), beBytes(0),
-      beBytes(timescale), beBytes(duration), beBytes(0x00010000),
-      beBytes(0x01000000), beBytes(0), beBytes(0),
-      Array.fill(9)(beBytes(0)).flatten.toArray,
-      Array.fill(6)(beBytes(0)).flatten.toArray, beBytes(2))
-    val tkhd = box("tkhd", beBytes(0x00000007), beBytes(0), beBytes(0),
-      beBytes(1), beBytes(0), beBytes(duration), beBytes(0), beBytes(0),
-      beBytes(0), beBytes(0),
-      Array.fill(9)(beBytes(0)).flatten.toArray,
-      beBytes(width << 16), beBytes(height << 16))
-    val mdhd = box("mdhd", beBytes(0), beBytes(0), beBytes(0),
-      beBytes(timescale), beBytes(duration),
-      Array[Byte](0x55, 0xc4.toByte, 0, 0))
-    val hdlr = box("hdlr", beBytes(0), beBytes(0),
-      "vide".getBytes("US-ASCII"), beBytes(0), beBytes(0), beBytes(0),
-      Array[Byte](0))
-    val entry = {
-      val b = new java.io.ByteArrayOutputStream()
-      b.write(beBytes(86)); b.write("jpeg".getBytes("US-ASCII"))
-      b.write(new Array[Byte](6)); b.write(Array[Byte](0, 1))
-      b.write(new Array[Byte](16))
-      b.write(Array[Byte]((width >> 8).toByte, width.toByte,
-        (height >> 8).toByte, height.toByte))
-      b.write(beBytes(0x00480000)); b.write(beBytes(0x00480000))
-      b.write(beBytes(0)); b.write(Array[Byte](0, 1))
-      b.write(new Array[Byte](32))
-      b.write(Array[Byte](0, 24)); b.write(Array[Byte](0xff.toByte, 0xff.toByte))
-      b.toByteArray
-    }
-    val stsd = box("stsd", beBytes(0), beBytes(1), entry)
-    val stts = box("stts", beBytes(0), beBytes(1), beBytes(n), beBytes(sampleDelta))
-    val syncSamples = (1 to n by syncEvery).toArray
-    val stss = box("stss", beBytes(0), beBytes(syncSamples.length),
-      syncSamples.flatMap(beBytes))
-    val stsz = box("stsz", beBytes(0), beBytes(0), beBytes(n),
-      sampleSizes.toArray.flatMap(beBytes))
     val stsc = box("stsc", beBytes(0), beBytes(stscRuns.length),
       stscRuns.flatMap { case (fc, spc) => beBytes(fc) ++ beBytes(spc) ++ beBytes(1) })
     val stco = box("stco", beBytes(0), beBytes(nChunks), chunkOffsets.flatMap(beBytes))
-    val stbl = box("stbl", stsd, stts, stss, stsz, stsc, stco)
-    val minf = box("minf", stbl)
-    val mdia = box("mdia", mdhd, hdlr, minf)
-    val moov = box("moov", mvhd, box("trak", tkhd, mdia))
-    ftyp ++ mdat ++ moov
+    ftyp ++ mdat ++ moov(width, height, timescale, n * sampleDelta,
+      videoMdia("jpeg", width, height, timescale, sampleSizes, sampleDelta, syncEvery,
+        stsc, stco))
   }
 
   /** Resolve every sample's ABSOLUTE byte range — (offset, size), in
@@ -467,49 +426,25 @@ object MediaCodec {
     * absent tables, or any range that leaves the payload (a forged
     * table cannot trigger an out-of-bounds slice). */
   def decodeMp4SampleRanges(bytes: Array[Byte]): Option[Seq[(Long, Long)]] = {
-    if (bytes == null || bytes.length < 16) return None
-    val first = tag(bytes, 4)
-    if (first != "ftyp" && first != "styp" && first != "moov") return None
     var sizes: Seq[Long] = null
     var stsc: Seq[(Long, Long)] = null // (first_chunk, samples_per_chunk)
     var stco: Seq[Long] = null
-    def walk(start: Int, end: Int, depth: Int): Unit = {
-      var i = start
-      while (i + 8 <= end) {
-        val len = be32(bytes, i)
-        if (len < 8 || i + len > end) return
-        val tp = tag(bytes, i + 4)
-        val p = i + 8
-        tp match {
-          case "moov" | "trak" | "mdia" | "minf" | "stbl" if depth < 8 =>
-            walk(p, i + len, depth + 1)
-          case "stsz" if sizes == null && len >= 20 =>
-            val uniform = be32(bytes, p + 4).toLong & 0xffffffffL
-            val cnt = be32(bytes, p + 8)
-            if (cnt < 0 || cnt > (1 << 24)) return
-            if (uniform != 0) sizes = Seq.fill(cnt)(uniform)
-            else {
-              if (p + 12 + 4L * cnt > i + len) return
-              sizes = (0 until cnt).map(k => be32(bytes, p + 12 + 4 * k).toLong & 0xffffffffL)
-            }
-          case "stsc" if stsc == null && len >= 16 =>
-            val cnt = be32(bytes, p + 4)
-            if (cnt < 0 || p + 8 + 12L * cnt > i + len) return
-            stsc = (0 until cnt).map { k =>
-              (be32(bytes, p + 8 + 12 * k).toLong & 0xffffffffL,
-                be32(bytes, p + 12 + 12 * k).toLong & 0xffffffffL)
-            }
-          case "stco" if stco == null && len >= 16 =>
-            val cnt = be32(bytes, p + 4)
-            if (cnt < 0 || p + 8 + 4L * cnt > i + len) return
-            stco = (0 until cnt).map(k => be32(bytes, p + 8 + 4 * k).toLong & 0xffffffffL)
-          case _ => ()
-        }
-        i += len
+    val bmff = walkBmff(bytes, stblPath, 8) { (tp, i, len) =>
+      val p = i + 8
+      tp match {
+        case "stsz" if sizes == null && len >= 20 =>
+          sizes = stszSizes(bytes, p, i + len).orNull
+          sizes != null
+        case "stsc" if stsc == null && len >= 16 =>
+          stsc = table(bytes, p, i + len, 12)(o => (u32(bytes, o), u32(bytes, o + 4))).orNull
+          stsc != null
+        case "stco" if stco == null && len >= 16 =>
+          stco = table(bytes, p, i + len, 4)(u32(bytes, _)).orNull
+          stco != null
+        case _ => true
       }
     }
-    walk(0, bytes.length, 0)
-    if (sizes == null || stsc == null || stco == null) return None
+    if (!bmff || sizes == null || stsc == null || stco == null) return None
     if (stsc.isEmpty || stco.isEmpty) return None
     val n = sizes.length
     val out = new Array[(Long, Long)](n)

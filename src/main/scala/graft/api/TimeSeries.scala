@@ -209,6 +209,18 @@ object TimeSeries {
       (col("asof_ts_ms") - col("__ts")).as("lag_ms"))
   }
 
+  /** The quantized series the seasonal and correlation operators run
+    * on: rows with a non-null value whose key passes `keep`, summed per
+    * (key, `widthMs` bucket) as DECIMAL(30,10) and floored to the exact
+    * integer `x = floor(sum · 1e4)` — `(g, bucket, x)`. */
+  private def quantizedSeries(df: DataFrame, keyCol: String, tsMsCol: String,
+      valueCol: String, widthMs: Long, keep: Column): DataFrame =
+    df.filter(col(valueCol).isNotNull && keep)
+      .groupBy(col(keyCol).as("g"), expr(floorDivSql(tsMsCol, widthMs)).as("bucket"))
+      .agg(sum(col(valueCol).cast("decimal(30,10)")).as("sd"))
+      .select(col("g"), col("bucket"),
+        floor(col("sd").cast("double") * 10000).cast("decimal(38,0)").as("x"))
+
   /** Classical seasonal decomposition of each key's bucketed series
     * (period `period` buckets): trend = centered moving average over
     * ±period/2 buckets (full windows only — a RANGE frame, so gaps
@@ -235,12 +247,8 @@ object TimeSeries {
     import org.apache.spark.sql.expressions.Window
     val half = period / 2
     val win = period + 1 // centered: ±half inclusive
-    val series = df
-      .filter(col(valueCol).isNotNull && col(keyCol).isNotNull)
-      .groupBy(col(keyCol).as("g"), expr(floorDivSql(tsMsCol, widthMs)).as("bucket"))
-      .agg(sum(col(valueCol).cast("decimal(30,10)")).as("sd"))
-      .select(col("g"), col("bucket"),
-        floor(col("sd").cast("double") * 10000).cast("decimal(38,0)").as("x"))
+    val series = quantizedSeries(df, keyCol, tsMsCol, valueCol, widthMs,
+      col(keyCol).isNotNull)
     val w = Window.partitionBy("g").orderBy(col("bucket").asc)
       .rangeBetween(-half, half)
     val detrended = series
@@ -689,13 +697,8 @@ object TimeSeries {
   def autocorr(df: DataFrame, keyCol: String, tsMsCol: String,
       valueCol: String, widthMs: Long, maxLag: Int): DataFrame = {
     require(maxLag >= 1, s"maxLag must be ≥1, got $maxLag")
-    val series = df
-      .filter(col(valueCol).isNotNull && col(keyCol).isNotNull)
-      .groupBy(col(keyCol).as("g"),
-        expr(floorDivSql(tsMsCol, widthMs)).as("bucket"))
-      .agg(sum(col(valueCol).cast("decimal(30,10)")).as("sd"))
-      .select(col("g"), col("bucket"),
-        floor(col("sd").cast("double") * 10000).cast("decimal(38,0)").as("x"))
+    val series = quantizedSeries(df, keyCol, tsMsCol, valueCol, widthMs,
+      col(keyCol).isNotNull)
       .transform(Ckpt.apply) // two consumers: probe and build of the lag join
     val probes = series.select(col("g"), col("x"),
         explode(array((1 to maxLag).map(lit): _*)).as("lag"),
@@ -705,7 +708,16 @@ object TimeSeries {
       col("bucket").as("bucket2"), col("x").as("y"))
     val pairs = probes.join(build,
       col("g") === col("g2") && col("probe_bucket") === col("bucket2"))
-    val moments = pairs.groupBy("g", "lag").agg(
+    pearson(pairs, Seq("g", "lag"), Seq(col("g"), col("lag").cast("bigint").as("lag")), "acf")
+  }
+
+  /** Pearson r of the aligned pairs `(x, y)` per `by`: five exact
+    * DECIMAL(38,0) moment sums, then one fixed double expression,
+    * floor-4dp, 0 on zero variance — selected as `keys`, `n_pairs`,
+    * `name`. */
+  private def pearson(pairs: DataFrame, by: Seq[String], keys: Seq[Column],
+      name: String): DataFrame = {
+    val moments = pairs.groupBy(by.map(col): _*).agg(
       count(lit(1)).as("n_pairs"),
       sum(col("x")).as("sx"), sum(col("y")).as("sy"),
       sum(col("x") * col("y")).as("sxy"),
@@ -715,11 +727,10 @@ object TimeSeries {
     val num = (n * col("sxy") - col("sx") * col("sy")).cast("double")
     val dx = (n * col("sxx") - col("sx") * col("sx")).cast("double")
     val dy = (n * col("syy") - col("sy") * col("sy")).cast("double")
-    moments.select(col("g"), col("lag").cast("bigint").as("lag"),
-      col("n_pairs"),
+    moments.select(keys ++ Seq(col("n_pairs"),
       when(dx > 0 && dy > 0,
         floor(num / sqrt(dx * dy) * 10000) / 10000)
-        .otherwise(lit(0.0)).as("acf"))
+        .otherwise(lit(0.0)).as(name)): _*)
   }
 
   /** Lead-lag CROSS-correlation between two keys' resampled series —
@@ -741,14 +752,8 @@ object TimeSeries {
       valueCol: String, keyA: String, keyB: String,
       widthMs: Long, maxLag: Int): DataFrame = {
     require(maxLag >= 1, s"maxLag must be ≥1, got $maxLag")
-    val series = df
-      .filter(col(valueCol).isNotNull &&
-        (col(keyCol) === keyA || col(keyCol) === keyB))
-      .groupBy(col(keyCol).as("g"),
-        expr(floorDivSql(tsMsCol, widthMs)).as("bucket"))
-      .agg(sum(col(valueCol).cast("decimal(30,10)")).as("sd"))
-      .select(col("g"), col("bucket"),
-        floor(col("sd").cast("double") * 10000).cast("decimal(38,0)").as("x"))
+    val series = quantizedSeries(df, keyCol, tsMsCol, valueCol, widthMs,
+      col(keyCol) === keyA || col(keyCol) === keyB)
       .transform(Ckpt.apply) // two consumers: the A probe and B build side
     val probes = series.filter(col("g") === keyA)
       .select(col("x"),
@@ -758,21 +763,7 @@ object TimeSeries {
     val build = series.filter(col("g") === keyB)
       .select(col("bucket").as("bucket2"), col("x").as("y"))
     val pairs = probes.join(build, col("probe_bucket") === col("bucket2"))
-    val moments = pairs.groupBy("lag").agg(
-      count(lit(1)).as("n_pairs"),
-      sum(col("x")).as("sx"), sum(col("y")).as("sy"),
-      sum(col("x") * col("y")).as("sxy"),
-      sum(col("x") * col("x")).as("sxx"),
-      sum(col("y") * col("y")).as("syy"))
-    val n = col("n_pairs").cast("decimal(38,0)")
-    val num = (n * col("sxy") - col("sx") * col("sy")).cast("double")
-    val dx = (n * col("sxx") - col("sx") * col("sx")).cast("double")
-    val dy = (n * col("syy") - col("sy") * col("sy")).cast("double")
-    moments.select(col("lag").cast("bigint").as("lag"),
-      col("n_pairs"),
-      when(dx > 0 && dy > 0,
-        floor(num / sqrt(dx * dy) * 10000) / 10000)
-        .otherwise(lit(0.0)).as("xcf"))
+    pearson(pairs, Seq("lag"), Seq(col("lag").cast("bigint").as("lag")), "xcf")
   }
 
   /** Per-key OLS trend fit of the resampled value-sum series against its
@@ -800,13 +791,8 @@ object TimeSeries {
     * the first aggregate is corpus-sized. */
   def linearFit(df: DataFrame, keyCol: String, tsMsCol: String,
       valueCol: String, widthMs: Long): DataFrame = {
-    val series = df
-      .filter(col(valueCol).isNotNull && col(keyCol).isNotNull)
-      .groupBy(col(keyCol).as("g"),
-        expr(floorDivSql(tsMsCol, widthMs)).as("bucket"))
-      .agg(sum(col(valueCol).cast("decimal(30,10)")).as("sd"))
-      .select(col("g"), col("bucket"),
-        floor(col("sd").cast("double") * 10000).cast("decimal(38,0)").as("x"))
+    val series = quantizedSeries(df, keyCol, tsMsCol, valueCol, widthMs,
+      col(keyCol).isNotNull)
       .transform(Ckpt.apply) // two consumers: the min frame and the fit
     val base = series.groupBy(col("g").as("g2"))
       .agg(min(col("bucket")).as("b0"))
@@ -851,13 +837,8 @@ object TimeSeries {
   def seasonalNaiveError(df: DataFrame, keyCol: String, tsMsCol: String,
       valueCol: String, widthMs: Long, season: Int): DataFrame = {
     require(season >= 1, s"season must be ≥1, got $season")
-    val series = df
-      .filter(col(valueCol).isNotNull && col(keyCol).isNotNull)
-      .groupBy(col(keyCol).as("g"),
-        expr(floorDivSql(tsMsCol, widthMs)).as("bucket"))
-      .agg(sum(col(valueCol).cast("decimal(30,10)")).as("sd"))
-      .select(col("g"), col("bucket"),
-        floor(col("sd").cast("double") * 10000).cast("decimal(38,0)").as("x"))
+    val series = quantizedSeries(df, keyCol, tsMsCol, valueCol, widthMs,
+      col(keyCol).isNotNull)
       .transform(Ckpt.apply) // probe and build of the season join
     val fc = series.select(col("g").as("g2"),
       (col("bucket") + lit(season.toLong)).as("bucket2"), col("x").as("yhat"))

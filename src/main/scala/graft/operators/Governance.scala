@@ -25,12 +25,7 @@ object Governance {
       Drift.ks(Tables.events(s, dir), "value", "event_type",
           labelA = "click", labelB = "purchase")
         .select(round(col("ks"), 4).as("ks"), col("n_a"), col("n_b")),
-    Some("""WITH c AS (SELECT value AS x,
-                         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
-                         sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS cb
-                       FROM events WHERE event_type IN ('click', 'purchase')
-                         AND value IS NOT NULL
-                       GROUP BY value),
+    Some(s"""WITH ${OracleSql.driftCounts},
                  cum AS (SELECT sum(ca) OVER (ORDER BY x) AS cum_a,
                                 sum(cb) OVER (ORDER BY x) AS cum_b FROM c),
                  t AS (SELECT sum(ca) AS na, sum(cb) AS nb FROM c)
@@ -53,12 +48,7 @@ object Governance {
     (s, dir) =>
       Drift.emd(Tables.events(s, dir), "value", "event_type",
         labelA = "click", labelB = "purchase"),
-    Some("""WITH c AS (SELECT value AS x,
-                         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
-                         sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS cb
-                       FROM events WHERE event_type IN ('click', 'purchase')
-                         AND value IS NOT NULL
-                       GROUP BY value),
+    Some(s"""WITH ${OracleSql.driftCounts},
                  cum AS (SELECT x,
                            sum(ca) OVER (ORDER BY x) AS cum_a,
                            sum(cb) OVER (ORDER BY x) AS cum_b,
@@ -300,19 +290,12 @@ object Governance {
       Privacy.dpCounts(Tables.events(s, dir), Seq("event_type"),
           epsilon = 1.0, seed = "graft-dp-1")
         .orderBy(asc_nulls_first("event_type")),
-    Some("""WITH g AS (SELECT event_type, count(*) AS n FROM events GROUP BY 1),
+    Some(s"""WITH g AS (SELECT event_type, count(*) AS n FROM events GROUP BY 1),
                  h AS (SELECT event_type, n,
                               md5(concat(event_type, ':', 'graft-dp-1')) AS hh
                        FROM g),
                  v AS (SELECT event_type, n,
-                              (strpos('0123456789abcdef', substring(hh, 1, 1)) - 1) * 1
-                            + (strpos('0123456789abcdef', substring(hh, 2, 1)) - 1) * 16
-                            + (strpos('0123456789abcdef', substring(hh, 3, 1)) - 1) * 256
-                            + (strpos('0123456789abcdef', substring(hh, 4, 1)) - 1) * 4096
-                            + (strpos('0123456789abcdef', substring(hh, 5, 1)) - 1) * 65536
-                            + (strpos('0123456789abcdef', substring(hh, 6, 1)) - 1) * 1048576
-                            + (strpos('0123456789abcdef', substring(hh, 7, 1)) - 1) * 16777216
-                            + (strpos('0123456789abcdef', substring(hh, 8, 1)) - 1) * 268435456
+                              ${OracleSql.md5Nibbles8}
                               AS vv
                        FROM h),
                  u AS (SELECT event_type, n,
@@ -519,12 +502,7 @@ object Governance {
     (s, dir) =>
       Drift.mannWhitney(Tables.events(s, dir), "value", "event_type",
           labelA = "click", labelB = "purchase"),
-    Some("""WITH c AS (SELECT value AS x,
-                         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
-                         sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS cb
-                       FROM events
-                       WHERE event_type IN ('click', 'purchase') AND value IS NOT NULL
-                       GROUP BY value),
+    Some(s"""WITH ${OracleSql.driftCounts},
                  cum AS (SELECT ca, cb, sum(cb) OVER (ORDER BY x) AS cumb FROM c),
                  m AS (SELECT sum(ca) AS na, sum(cb) AS nb,
                               sum(CAST(ca AS HUGEINT)

@@ -1,7 +1,10 @@
 package graft.operators
 
 import graft.{Q, Tables}
+import graft.api.{ImageCodec, JpegCodec, MediaCodec}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Multimodal-column plumbing: opaque binary content + typed metadata,
   * decoded per-partition through the typed Dataset API (the Scala analog
@@ -22,12 +25,40 @@ object Multimodal {
     * single-row-group fixture scan would otherwise run every one of
     * them on a single task. [[graft.Par.spread]] is a no-op whenever
     * the scan is already parallel (real-scale inputs). */
-  private def docIds(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.Dataset[Long] = {
+  private def docIds(s: SparkSession, dir: String): org.apache.spark.sql.Dataset[Long] = {
     import s.implicits._
     graft.Par.spread(Tables.documents(s, dir).select(col("doc_id")),
       col("doc_id")).as[Long]
   }
+
+  /** One codec pass per document: `row(doc_id)` over the [[docIds]]
+    * scan, inside mapPartitions. */
+  private def perDoc[T <: Product : TypeTag](s: SparkSession, dir: String)(
+      row: Long => T): DataFrame = {
+    import s.implicits._
+    docIds(s, dir).mapPartitions(_.map(row)).toDF()
+  }
+
+  /** A query whose result is [[perDoc]]`(row)` ordered by doc_id. */
+  private def perDocQ[T <: Product : TypeTag](name: String, oracle: String)(
+      row: Long => T): Q =
+    Q(name, (s, dir) => perDoc(s, dir)(row).orderBy("doc_id"), Some(oracle))
+
+  /** A query that runs `row(doc_id, payload)` over every document's text
+    * bytes inside mapPartitions, ordered by doc_id. */
+  private def payloadQ[T <: Product : TypeTag](name: String, oracle: String)(
+      row: (Long, Array[Byte]) => T): Q =
+    Q(name, (s, dir) => {
+      import s.implicits._
+      Tables.documents(s, dir)
+        .select(col("doc_id"), col("text").cast("binary").as("payload"))
+        .as[(Long, Array[Byte])]
+        // one (stub) decoder per partition — where a real native decoder
+        // would be initialized once and reused across the batch
+        .mapPartitions(_.map(row.tupled))
+        .toDF()
+        .orderBy("doc_id")
+    }, Some(oracle))
 
   /** Decoded media metadata (what a real decoder would return). */
   final case class MediaMeta(doc_id: Long, width: Long, height: Long, n_frames: Long)
@@ -44,27 +75,12 @@ object Multimodal {
     * The fake is arithmetic on byte length, so a SQL oracle still exists —
     * it checks the whole typed round-trip (encoder → partition iterator →
     * encoder), not just the stub. */
-  private val qMultimodalDecode = Q(
-    "q_multimodal_decode",
-    (s, dir) => {
-      import s.implicits._
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions { it =>
-          // one (stub) decoder per partition — where a real native decoder
-          // would be initialized once and reused across the batch
-          it.map { case (id, bytes) => stubDecode(id, bytes) }
-        }
-        .toDF()
-        .orderBy("doc_id")
-    },
-    Some("""SELECT doc_id,
+  private val qMultimodalDecode = payloadQ("q_multimodal_decode",
+    """SELECT doc_id,
               octet_length(encode(text)) % 640 AS width,
               (octet_length(encode(text)) * 7) % 480 AS height,
               octet_length(encode(text)) % 16 + 1 AS n_frames
-            FROM documents ORDER BY doc_id""")
-  )
+            FROM documents ORDER BY doc_id""")(stubDecode)
 
   /** Frame sampling: one row per (stub-)decoded frame — the Generator
     * form a video pipeline uses to fan a clip out into per-frame rows for
@@ -108,23 +124,12 @@ object Multimodal {
 
   /** Feature extraction over the typed partition pipeline: payload →
     * per-partition (stub) encoder → scalar feature summary. */
-  private val qMultimodalFeatures = Q(
-    "q_multimodal_features",
-    (s, dir) => {
-      import s.implicits._
-      Tables.documents(s, dir)
-        .select(col("doc_id"), col("text").cast("binary").as("payload"))
-        .as[(Long, Array[Byte])]
-        .mapPartitions(_.map { case (id, bytes) => stubFeatures(id, bytes) })
-        .toDF()
-        .orderBy("doc_id")
-    },
-    Some("""SELECT doc_id, CAST(8 AS BIGINT) AS feat_dim,
+  private val qMultimodalFeatures = payloadQ("q_multimodal_features",
+    """SELECT doc_id, CAST(8 AS BIGINT) AS feat_dim,
               round(sqrt(list_sum(list_transform(generate_series(0, 7),
                 i -> pow(((octet_length(encode(text)) * (i + 3)) % 97) / 97.0, 2)))), 4) AS feat_norm,
               round(((octet_length(encode(text)) * 3) % 97) / 97.0, 4) AS f0
-            FROM documents ORDER BY doc_id""")
-  )
+            FROM documents ORDER BY doc_id""")(stubFeatures)
 
   /** Resized (stub) payload metadata. */
   final case class ResizeRow(doc_id: Long, dst_w: Long, dst_h: Long,
@@ -243,10 +248,12 @@ object Multimodal {
             FROM hs h LEFT JOIN census c USING (doc_id)
             ORDER BY h.doc_id"""
 
-  private def synthPixels(id: Long, w: Int, h: Int): Array[Int] =
+  /** Gray pixel (i, j) = (id·a + i·bi + j·bj) mod 256. */
+  private def synthPixels(id: Long, w: Int, h: Int,
+      a: Int = 31, bi: Int = 7, bj: Int = 13): Array[Int] =
     Array.tabulate(w * h) { k =>
       val i = k / w; val j = k % w
-      ((id * 31 + i * 7 + j * 13) % 256).toInt
+      ((id * a + i * bi + j * bj) % 256).toInt
     }
 
   /** Real decoded header metadata. */
@@ -257,64 +264,55 @@ object Multimodal {
     * (encoder) and its IHDR parsed back (decoder) inside one
     * mapPartitions pass — the oracle predicts the parsed dims from the
     * same fixture arithmetic, pinning the full byte round trip. */
-  private val qImageMeta = Q(
-    "q_image_meta",
-    (s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions(_.map { id =>
-          val (w, h) = synthDims(id)
-          val bytes = graft.api.ImageCodec.encodePngGray(w, h, synthPixels(id, w, h))
-          val m = graft.api.ImageCodec.decodeMeta(bytes).get
-          ImgMetaRow(id, m.format, m.width, m.height, m.bitDepth, m.channels)
-        })
-        .toDF()
-        .orderBy("doc_id")
-    },
-    Some(s"""SELECT doc_id, 'png' AS format,
+  private val qImageMeta = perDocQ("q_image_meta",
+    s"""SELECT doc_id, 'png' AS format,
               CAST($sqlW AS BIGINT) AS width,
               CAST($sqlH AS BIGINT) AS height,
               CAST(8 AS BIGINT) AS bit_depth, CAST(1 AS BIGINT) AS channels
-            FROM documents ORDER BY doc_id""")
-  )
+            FROM documents ORDER BY doc_id""") { id =>
+    val (w, h) = synthDims(id)
+    val m = ImageCodec.decodeMeta(ImageCodec.encodePngGray(w, h, synthPixels(id, w, h))).get
+    ImgMetaRow(id, m.format, m.width, m.height, m.bitDepth, m.channels)
+  }
 
   /** Real decoded pixel statistics. */
   final case class ImgDecodeRow(doc_id: Long, width: Long, height: Long,
       n_px: Long, px_sum: Long, px_min: Long, px_max: Long)
 
-  /** REAL full PNG decode (chunk walk → inflate → unfilter of all five
-    * spec filter types) — the pixel stats can only match the oracle if
-    * every decoded sample is exact, so this is a value-level proof of
-    * the codec, not a header check. */
-  private val qImageDecode = Q(
-    "q_image_decode",
-    (s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions(_.map { id =>
-          val (w, h) = synthDims(id)
-          val bytes = graft.api.ImageCodec.encodePngGray(w, h, synthPixels(id, w, h))
-          val (dw, dh, px) = graft.api.ImageCodec.decodePngGray(bytes).get
-          ImgDecodeRow(id, dw.toLong, dh.toLong, px.length.toLong,
-            px.map(_.toLong).sum, px.min.toLong, px.max.toLong)
-        })
-        .toDF()
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH d AS (SELECT doc_id, $sqlW AS w, $sqlH AS h
+  /** [[ImgDecodeRow]] of a decoded gray image `(w, h, px)`. */
+  private def imgDecodeRow(id: Long, img: (Int, Int, Array[Int])): ImgDecodeRow = {
+    val (w, h, px) = img
+    ImgDecodeRow(id, w.toLong, h.toLong, px.length.toLong,
+      px.map(_.toLong).sum, px.min.toLong, px.max.toLong)
+  }
+
+  /** Oracle of [[imgDecodeRow]] for a `w` × `h` gray image whose pixel
+    * (i, j) is the SQL expression `px` over doc_id, i and j. */
+  private def grayStatsSql(w: String, h: String, px: String): String =
+    s"""WITH d AS (SELECT doc_id, $w AS w, $h AS h
                        FROM documents),
                  p AS (SELECT doc_id, w, h,
                          flatten(list_transform(generate_series(0, h - 1), i ->
                            list_transform(generate_series(0, w - 1), j ->
-                             (doc_id * 31 + i * 7 + j * 13) % 256))) AS px
+                             $px))) AS px
                        FROM d)
             SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
                    CAST(len(px) AS BIGINT) AS n_px,
                    CAST(list_sum(px) AS BIGINT) AS px_sum,
                    CAST(list_min(px) AS BIGINT) AS px_min,
                    CAST(list_max(px) AS BIGINT) AS px_max
-            FROM p ORDER BY doc_id""")
-  )
+            FROM p ORDER BY doc_id"""
+
+  /** REAL full PNG decode (chunk walk → inflate → unfilter of all five
+    * spec filter types) — the pixel stats can only match the oracle if
+    * every decoded sample is exact, so this is a value-level proof of
+    * the codec, not a header check. */
+  private val qImageDecode = perDocQ("q_image_decode",
+      grayStatsSql(sqlW, sqlH, "(doc_id * 31 + i * 7 + j * 13) % 256")) { id =>
+    val (w, h) = synthDims(id)
+    imgDecodeRow(id, ImageCodec.decodePngGray(
+      ImageCodec.encodePngGray(w, h, synthPixels(id, w, h))).get)
+  }
 
   /** REAL baseline JPEG decode (graft.api.JpegCodec — entropy decode,
     * dequant, IDCT): per doc a real JFIF JPEG is built whose 8×8 blocks
@@ -336,41 +334,62 @@ object Multimodal {
       ((id * 37 + by * 11 + bx * 5) % 256).toInt
     }
 
-  private val qImageDecodeJpeg = Q(
-    "q_image_decode_jpeg",
-    (s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions(_.map { id =>
-          val (w, h) = synthJpegDims(id)
-          val ri = if (id % 3 == 0) 2 else 0 // a third of the corpus restarts
-          val bytes = graft.api.JpegCodec.encodeJpegGray(
-            w, h, synthFlatBlocks(id, w, h), quant = 1, restartInterval = ri)
-          val (dw, dh, px) = graft.api.JpegCodec.decodeJpegGray(bytes).get
-          ImgDecodeRow(id, dw.toLong, dh.toLong, px.length.toLong,
-            px.map(_.toLong).sum, px.min.toLong, px.max.toLong)
-        })
-        .toDF()
-        .orderBy("doc_id")
-    },
-    Some("""WITH d AS (SELECT doc_id, (doc_id % 25) + 8 AS w, (doc_id % 17) + 8 AS h
-                       FROM documents),
-                 p AS (SELECT doc_id, w, h,
-                         flatten(list_transform(generate_series(0, h - 1), i ->
-                           list_transform(generate_series(0, w - 1), j ->
-                             (doc_id * 37 + (i // 8) * 11 + (j // 8) * 5) % 256))) AS px
-                       FROM d)
-            SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-                   CAST(len(px) AS BIGINT) AS n_px,
-                   CAST(list_sum(px) AS BIGINT) AS px_sum,
-                   CAST(list_min(px) AS BIGINT) AS px_min,
-                   CAST(list_max(px) AS BIGINT) AS px_max
-            FROM p ORDER BY doc_id""")
-  )
+  private val qImageDecodeJpeg = perDocQ("q_image_decode_jpeg",
+      grayStatsSql("(doc_id % 25) + 8", "(doc_id % 17) + 8",
+        "(doc_id * 37 + (i // 8) * 11 + (j // 8) * 5) % 256")) { id =>
+    val (w, h) = synthJpegDims(id)
+    val ri = if (id % 3 == 0) 2 else 0 // a third of the corpus restarts
+    imgDecodeRow(id, JpegCodec.decodeJpegGray(JpegCodec.encodeJpegGray(
+      w, h, synthFlatBlocks(id, w, h), quant = 1, restartInterval = ri)).get)
+  }
 
   /** Decoded color-pixel statistics (packed-RGB channel sums). */
   final case class RgbDecodeRow(doc_id: Long, width: Long, height: Long, n_px: Long,
       r_sum: Long, g_sum: Long, b_sum: Long, r_min: Long, b_max: Long)
+
+  /** One 8-bit channel of packed-RGB pixels: `shift` 16 = r, 8 = g, 0 = b. */
+  private def channel(px: Array[Int], shift: Int): Array[Long] =
+    px.map(p => ((p >> shift) & 0xff).toLong)
+
+  /** [[RgbDecodeRow]] of a decoded packed-RGB image `(w, h, px)`. */
+  private def rgbDecodeRow(id: Long, img: (Int, Int, Array[Int])): RgbDecodeRow = {
+    val (w, h, px) = img
+    val r = channel(px, 16); val b = channel(px, 0)
+    RgbDecodeRow(id, w.toLong, h.toLong, px.length.toLong,
+      r.sum, channel(px, 8).sum, b.sum, r.min, b.max)
+  }
+
+  /** Oracle tail of [[rgbDecodeRow]] over per-pixel rows `o(doc_id, w,
+    * h, r, g, b)`. */
+  private val rgbStatsSql: String =
+    """SELECT doc_id, CAST(max(w) AS BIGINT) AS width, CAST(max(h) AS BIGINT) AS height,
+                   CAST(count(*) AS BIGINT) AS n_px,
+                   CAST(sum(r) AS BIGINT) AS r_sum, CAST(sum(g) AS BIGINT) AS g_sum,
+                   CAST(sum(b) AS BIGINT) AS b_sum,
+                   CAST(min(r) AS BIGINT) AS r_min, CAST(max(b) AS BIGINT) AS b_max
+            FROM o GROUP BY doc_id ORDER BY doc_id"""
+
+  /** The JFIF round trip of tile colors `c(carry…, r0, g0, b0)`: forward
+    * RGB → YCbCr and the inverse matrix, each floor(x+0.5) and clamped,
+    * giving the decoded `o(carry…, r, g, b)`. */
+  private def jfifRoundTripSql(carry: String): String =
+    s"""-- forward JFIF RGB -> YCbCr, floor(x+0.5), clamped: the
+                 -- integer component samples every DC-only decoder recovers.
+                 -- Every fractional literal is cast to DOUBLE: DuckDB parses
+                 -- bare decimals as exact DECIMAL, whose floor() crosses
+                 -- half-integer boundaries differently from the codec's
+                 -- IEEE-double matrix (3/500 docs flipped at sf0.01)
+                 ycc AS (SELECT $carry,
+                           least(255, greatest(0, floor(0.299::DOUBLE * r0 + 0.587::DOUBLE * g0 + 0.114::DOUBLE * b0 + 0.5::DOUBLE))) AS yq,
+                           least(255, greatest(0, floor(128.0::DOUBLE - 0.168736::DOUBLE * r0 - 0.331264::DOUBLE * g0 + 0.5::DOUBLE * b0 + 0.5::DOUBLE))) AS cb,
+                           least(255, greatest(0, floor(128.0::DOUBLE + 0.5::DOUBLE * r0 - 0.418688::DOUBLE * g0 - 0.081312::DOUBLE * b0 + 0.5::DOUBLE))) AS cr
+                         FROM c),
+                 -- inverse matrix, floor(x+0.5), clamped: the decoded RGB
+                 o AS (SELECT $carry,
+                         least(255, greatest(0, floor(yq + 1.402::DOUBLE * (cr - 128) + 0.5::DOUBLE))) AS r,
+                         least(255, greatest(0, floor(yq - 0.344136::DOUBLE * (cb - 128) - 0.714136::DOUBLE * (cr - 128) + 0.5::DOUBLE))) AS g,
+                         least(255, greatest(0, floor(yq + 1.772::DOUBLE * (cb - 128) + 0.5::DOUBLE))) AS b
+                       FROM ycc)"""
 
   /** REAL baseline COLOR JPEG decode (graft.api.JpegCodec 3-component
     * YCbCr): per doc a real color JFIF is built whose RGB is CONSTANT
@@ -386,40 +405,19 @@ object Multimodal {
   private def synthColorDims(id: Long): (Int, Int) =
     (((id % 29) + 8).toInt, ((id % 19) + 8).toInt)
 
-  private def synthColorTiles(id: Long, w: Int, h: Int, tile: Int): Array[Int] =
+  /** Frame `f`'s packed-RGB pixels, constant per `tile` × `tile` tile. */
+  private def synthColorFrameTiles(id: Long, f: Int, w: Int, h: Int,
+      tile: Int): Array[Int] =
     Array.tabulate(w * h) { k =>
       val tx = (k % w) / tile; val ty = (k / w) / tile
-      val r = ((id * 7 + ty * 13 + tx * 29) % 256).toInt
-      val g = ((id * 11 + ty * 17 + tx * 5) % 256).toInt
-      val b = ((id * 13 + ty * 3 + tx * 23) % 256).toInt
+      val r = ((id * 7 + f * 31 + ty * 13 + tx * 29) % 256).toInt
+      val g = ((id * 11 + f * 41 + ty * 17 + tx * 5) % 256).toInt
+      val b = ((id * 13 + f * 59 + ty * 3 + tx * 23) % 256).toInt
       (r << 16) | (g << 8) | b
     }
 
-  private val qImageDecodeJpegColor = Q(
-    "q_image_decode_jpeg_color",
-    (s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions(_.map { id =>
-          val (w, h) = synthColorDims(id)
-          val sub = id % 3 != 0
-          val tile = if (sub) 16 else 8
-          val ri = if (id % 4 == 0) 2 else 0 // a quarter restarts
-          val bytes = graft.api.JpegCodec.encodeJpegColor(
-            w, h, synthColorTiles(id, w, h, tile), quant = 1,
-            chromaSubsample = sub, restartInterval = ri)
-          val (dw, dh, px) = graft.api.JpegCodec.decodeJpegColor(bytes).get
-          RgbDecodeRow(id, dw.toLong, dh.toLong, px.length.toLong,
-            px.map(p => ((p >> 16) & 0xff).toLong).sum,
-            px.map(p => ((p >> 8) & 0xff).toLong).sum,
-            px.map(p => (p & 0xff).toLong).sum,
-            px.map(p => ((p >> 16) & 0xff).toLong).min,
-            px.map(p => (p & 0xff).toLong).max)
-        })
-        .toDF()
-        .orderBy("doc_id")
-    },
-    Some("""WITH d AS (SELECT doc_id, (doc_id % 29) + 8 AS w, (doc_id % 19) + 8 AS h,
+  private val qImageDecodeJpegColor = perDocQ("q_image_decode_jpeg_color",
+    s"""WITH d AS (SELECT doc_id, (doc_id % 29) + 8 AS w, (doc_id % 19) + 8 AS h,
                    CASE WHEN doc_id % 3 = 0 THEN 8 ELSE 16 END AS tile
                  FROM documents),
                  g AS (SELECT doc_id, w, h, tile,
@@ -430,30 +428,16 @@ object Multimodal {
                          (doc_id * 11 + ((k // w) // tile) * 17 + ((k % w) // tile) * 5) % 256 AS g0,
                          (doc_id * 13 + ((k // w) // tile) * 3 + ((k % w) // tile) * 23) % 256 AS b0
                        FROM g),
-                 -- forward JFIF RGB -> YCbCr, floor(x+0.5), clamped: the
-                 -- integer component samples every DC-only decoder recovers.
-                 -- Every fractional literal is cast to DOUBLE: DuckDB parses
-                 -- bare decimals as exact DECIMAL, whose floor() crosses
-                 -- half-integer boundaries differently from the codec's
-                 -- IEEE-double matrix (3/500 docs flipped at sf0.01)
-                 ycc AS (SELECT doc_id, w, h,
-                           least(255, greatest(0, floor(0.299::DOUBLE * r0 + 0.587::DOUBLE * g0 + 0.114::DOUBLE * b0 + 0.5::DOUBLE))) AS yq,
-                           least(255, greatest(0, floor(128.0::DOUBLE - 0.168736::DOUBLE * r0 - 0.331264::DOUBLE * g0 + 0.5::DOUBLE * b0 + 0.5::DOUBLE))) AS cb,
-                           least(255, greatest(0, floor(128.0::DOUBLE + 0.5::DOUBLE * r0 - 0.418688::DOUBLE * g0 - 0.081312::DOUBLE * b0 + 0.5::DOUBLE))) AS cr
-                         FROM c),
-                 -- inverse matrix, floor(x+0.5), clamped: the decoded RGB
-                 o AS (SELECT doc_id, w, h,
-                         least(255, greatest(0, floor(yq + 1.402::DOUBLE * (cr - 128) + 0.5::DOUBLE))) AS r,
-                         least(255, greatest(0, floor(yq - 0.344136::DOUBLE * (cb - 128) - 0.714136::DOUBLE * (cr - 128) + 0.5::DOUBLE))) AS g,
-                         least(255, greatest(0, floor(yq + 1.772::DOUBLE * (cb - 128) + 0.5::DOUBLE))) AS b
-                       FROM ycc)
-            SELECT doc_id, CAST(max(w) AS BIGINT) AS width, CAST(max(h) AS BIGINT) AS height,
-                   CAST(count(*) AS BIGINT) AS n_px,
-                   CAST(sum(r) AS BIGINT) AS r_sum, CAST(sum(g) AS BIGINT) AS g_sum,
-                   CAST(sum(b) AS BIGINT) AS b_sum,
-                   CAST(min(r) AS BIGINT) AS r_min, CAST(max(b) AS BIGINT) AS b_max
-            FROM o GROUP BY doc_id ORDER BY doc_id""")
-  )
+                 ${jfifRoundTripSql("doc_id, w, h")}
+            $rgbStatsSql""") { id =>
+    val (w, h) = synthColorDims(id)
+    val sub = id % 3 != 0
+    val tile = if (sub) 16 else 8
+    val ri = if (id % 4 == 0) 2 else 0 // a quarter restarts
+    rgbDecodeRow(id, JpegCodec.decodeJpegColor(JpegCodec.encodeJpegColor(
+      w, h, synthColorFrameTiles(id, 0, w, h, tile), quant = 1,
+      chromaSubsample = sub, restartInterval = ri)).get)
+  }
 
   /** REAL COLOR PNG decode: per doc either a TRUECOLOR (type 2, even
     * ids — byte-level unfilter at bpp=3 across all five cycling
@@ -463,46 +447,8 @@ object Multimodal {
     * the fixture arithmetic; a bpp-offset filter, PLTE layout, or
     * palette-lookup bug breaks the hash. ImageIO cross-checks (both
     * directions, truecolor + indexed) live in ImageCodecSpec. */
-  private val qImageDecodePngColor = Q(
-    "q_image_decode_png_color",
-    (s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions(_.map { id =>
-          val (w, h) = (((id % 23) + 2).toInt, ((id % 13) + 2).toInt)
-          val bytes =
-            if (id % 2 == 0) {
-              val px = Array.tabulate(w * h) { k =>
-                val i = k / w; val j = k % w
-                val r = ((id * 19 + i * 7 + j * 3) % 256).toInt
-                val g = ((id * 23 + i * 5 + j * 11) % 256).toInt
-                val b = ((id * 29 + i * 13 + j * 17) % 256).toInt
-                (r << 16) | (g << 8) | b
-              }
-              graft.api.ImageCodec.encodePngColor(w, h, px)
-            } else {
-              val nPal = ((id % 15) + 2).toInt
-              val pal = Array.tabulate(nPal) { n =>
-                val r = ((n * 41 + id) % 256).toInt
-                val g = ((n * 59 + id * 3) % 256).toInt
-                val b = ((n * 83 + id * 7) % 256).toInt
-                (r << 16) | (g << 8) | b
-              }
-              val idx = Array.tabulate(w * h)(k => ((id + k * 7) % nPal).toInt)
-              graft.api.ImageCodec.encodePngPal(w, h, pal, idx)
-            }
-          val (dw, dh, px) = graft.api.ImageCodec.decodePngColor(bytes).get
-          RgbDecodeRow(id, dw.toLong, dh.toLong, px.length.toLong,
-            px.map(p => ((p >> 16) & 0xff).toLong).sum,
-            px.map(p => ((p >> 8) & 0xff).toLong).sum,
-            px.map(p => (p & 0xff).toLong).sum,
-            px.map(p => ((p >> 16) & 0xff).toLong).min,
-            px.map(p => (p & 0xff).toLong).max)
-        })
-        .toDF()
-        .orderBy("doc_id")
-    },
-    Some("""WITH d AS (SELECT doc_id, (doc_id % 23) + 2 AS w, (doc_id % 13) + 2 AS h,
+  private val qImageDecodePngColor = perDocQ("q_image_decode_png_color",
+    s"""WITH d AS (SELECT doc_id, (doc_id % 23) + 2 AS w, (doc_id % 13) + 2 AS h,
                    (doc_id % 15) + 2 AS np
                  FROM documents),
                  g AS (SELECT doc_id, w, h, np,
@@ -518,13 +464,31 @@ object Multimodal {
                               THEN (doc_id * 29 + (k // w) * 13 + (k % w) * 17) % 256
                               ELSE (((doc_id + k * 7) % np) * 83 + doc_id * 7) % 256 END AS b
                        FROM g)
-            SELECT doc_id, CAST(max(w) AS BIGINT) AS width, CAST(max(h) AS BIGINT) AS height,
-                   CAST(count(*) AS BIGINT) AS n_px,
-                   CAST(sum(r) AS BIGINT) AS r_sum, CAST(sum(g) AS BIGINT) AS g_sum,
-                   CAST(sum(b) AS BIGINT) AS b_sum,
-                   CAST(min(r) AS BIGINT) AS r_min, CAST(max(b) AS BIGINT) AS b_max
-            FROM o GROUP BY doc_id ORDER BY doc_id""")
-  )
+            $rgbStatsSql""") { id =>
+    val (w, h) = (((id % 23) + 2).toInt, ((id % 13) + 2).toInt)
+    val bytes =
+      if (id % 2 == 0) {
+        val px = Array.tabulate(w * h) { k =>
+          val i = k / w; val j = k % w
+          val r = ((id * 19 + i * 7 + j * 3) % 256).toInt
+          val g = ((id * 23 + i * 5 + j * 11) % 256).toInt
+          val b = ((id * 29 + i * 13 + j * 17) % 256).toInt
+          (r << 16) | (g << 8) | b
+        }
+        ImageCodec.encodePngColor(w, h, px)
+      } else {
+        val nPal = ((id % 15) + 2).toInt
+        val pal = Array.tabulate(nPal) { n =>
+          val r = ((n * 41 + id) % 256).toInt
+          val g = ((n * 59 + id * 3) % 256).toInt
+          val b = ((n * 83 + id * 7) % 256).toInt
+          (r << 16) | (g << 8) | b
+        }
+        val idx = Array.tabulate(w * h)(k => ((id + k * 7) % nPal).toInt)
+        ImageCodec.encodePngPal(w, h, pal, idx)
+      }
+    rgbDecodeRow(id, ImageCodec.decodePngColor(bytes).get)
+  }
 
   /** REAL GIF decode (LZW): per doc a real GIF87a is built — 256-gray
     * global color table and a REAL LZW-compressed index stream
@@ -534,39 +498,12 @@ object Multimodal {
     * synth formula; a bit-packing, width-bump, clear-reset, or KwKwK
     * bug breaks the hash. ImageIO cross-checks (both directions,
     * including ImageIO's interlaced output) live in ImageCodecSpec. */
-  private val qImageDecodeGif = Q(
-    "q_image_decode_gif",
-    (s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions(_.map { id =>
-          val (w, h) = synthDims(id)
-          val px = Array.tabulate(w * h) { k =>
-            val i = k / w; val j = k % w
-            ((id * 41 + i * 5 + j * 17) % 256).toInt
-          }
-          val bytes = graft.api.ImageCodec.encodeGifGray(w, h, px)
-          val (dw, dh, out) = graft.api.ImageCodec.decodeGifGray(bytes).get
-          ImgDecodeRow(id, dw.toLong, dh.toLong, out.length.toLong,
-            out.map(_.toLong).sum, out.min.toLong, out.max.toLong)
-        })
-        .toDF()
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH d AS (SELECT doc_id, $sqlW AS w, $sqlH AS h
-                       FROM documents),
-                 p AS (SELECT doc_id, w, h,
-                         flatten(list_transform(generate_series(0, h - 1), i ->
-                           list_transform(generate_series(0, w - 1), j ->
-                             (doc_id * 41 + i * 5 + j * 17) % 256))) AS px
-                       FROM d)
-            SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-                   CAST(len(px) AS BIGINT) AS n_px,
-                   CAST(list_sum(px) AS BIGINT) AS px_sum,
-                   CAST(list_min(px) AS BIGINT) AS px_min,
-                   CAST(list_max(px) AS BIGINT) AS px_max
-            FROM p ORDER BY doc_id""")
-  )
+  private val qImageDecodeGif = perDocQ("q_image_decode_gif",
+      grayStatsSql(sqlW, sqlH, "(doc_id * 41 + i * 5 + j * 17) % 256")) { id =>
+    val (w, h) = synthDims(id)
+    imgDecodeRow(id, ImageCodec.decodeGifGray(
+      ImageCodec.encodeGifGray(w, h, synthPixels(id, w, h, 41, 5, 17))).get)
+  }
 
   /** REAL BMP decode: per doc a real 8-bpp palette BMP is built
     * (BITMAPFILEHEADER/INFOHEADER, identity-gray palette, bottom-up
@@ -574,39 +511,12 @@ object Multimodal {
     * walk. Lossless → the oracle predicts every pixel; a stride,
     * bottom-up, or palette-mapping bug breaks the hash. ImageIO
     * cross-checks live in ImageCodecSpec. */
-  private val qImageDecodeBmp = Q(
-    "q_image_decode_bmp",
-    (s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions(_.map { id =>
-          val (w, h) = synthDims(id)
-          val px = Array.tabulate(w * h) { k =>
-            val i = k / w; val j = k % w
-            ((id * 29 + i * 3 + j * 19) % 256).toInt
-          }
-          val bytes = graft.api.ImageCodec.encodeBmpGray(w, h, px)
-          val (dw, dh, out) = graft.api.ImageCodec.decodeBmpGray(bytes).get
-          ImgDecodeRow(id, dw.toLong, dh.toLong, out.length.toLong,
-            out.map(_.toLong).sum, out.min.toLong, out.max.toLong)
-        })
-        .toDF()
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH d AS (SELECT doc_id, $sqlW AS w, $sqlH AS h
-                       FROM documents),
-                 p AS (SELECT doc_id, w, h,
-                         flatten(list_transform(generate_series(0, h - 1), i ->
-                           list_transform(generate_series(0, w - 1), j ->
-                             (doc_id * 29 + i * 3 + j * 19) % 256))) AS px
-                       FROM d)
-            SELECT doc_id, CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-                   CAST(len(px) AS BIGINT) AS n_px,
-                   CAST(list_sum(px) AS BIGINT) AS px_sum,
-                   CAST(list_min(px) AS BIGINT) AS px_min,
-                   CAST(list_max(px) AS BIGINT) AS px_max
-            FROM p ORDER BY doc_id""")
-  )
+  private val qImageDecodeBmp = perDocQ("q_image_decode_bmp",
+      grayStatsSql(sqlW, sqlH, "(doc_id * 29 + i * 3 + j * 19) % 256")) { id =>
+    val (w, h) = synthDims(id)
+    imgDecodeRow(id, ImageCodec.decodeBmpGray(
+      ImageCodec.encodeBmpGray(w, h, synthPixels(id, w, h, 29, 3, 19))).get)
+  }
 
   /** Perceptual-hash image near-dup census row. */
   final case class PhashRow(doc_id: Long, phash: Long)
@@ -631,22 +541,18 @@ object Multimodal {
   private val qImagePhashDedup = Q(
     "q_image_phash_dedup",
     (s, dir) => {
-      import s.implicits._
-      val hashed = docIds(s, dir)
-        .mapPartitions(_.map { id =>
-          val (w, h) = synthDims(id)
-          val g = id % 41
-          val pi = (id % h).toInt; val pj = ((id / 7) % w).toInt
-          val px = Array.tabulate(w * h) { k =>
-            val i = k / w; val j = k % w
-            val base = (g * 37 + i * 11 + j * 7) % 256
-            (if (i == pi && j == pj) (base + 64) % 256 else base).toInt
-          }
-          val bytes = graft.api.ImageCodec.encodePngGray(w, h, px)
-          val (dw, dh, out) = graft.api.ImageCodec.decodePngGray(bytes).get
-          PhashRow(id, graft.api.ImageCodec.aHash64(out, dw, dh))
-        })
-        .toDF()
+      val hashed = perDoc(s, dir) { id =>
+        val (w, h) = synthDims(id)
+        val g = id % 41
+        val pi = (id % h).toInt; val pj = ((id / 7) % w).toInt
+        val px = Array.tabulate(w * h) { k =>
+          val i = k / w; val j = k % w
+          val base = (g * 37 + i * 11 + j * 7) % 256
+          (if (i == pi && j == pj) (base + 64) % 256 else base).toInt
+        }
+        val (dw, dh, out) = ImageCodec.decodePngGray(ImageCodec.encodePngGray(w, h, px)).get
+        PhashRow(id, ImageCodec.aHash64(out, dw, dh))
+      }
         // consumed by the band self-join (twice) AND the final census
         // join — without truncation the codec pass re-executes 2-3x
         .transform(graft.api.Ckpt.apply)
@@ -687,22 +593,8 @@ object Multimodal {
     * replays the `src = floor(dst · srcDim / dstDim)` index arithmetic,
     * so resample indexing bugs (off-by-one, rounding direction) break
     * the hash. */
-  private val qImageResize = Q(
-    "q_image_resize",
-    (s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions(_.map { id =>
-          val (w, h) = synthDims(id)
-          val bytes = graft.api.ImageCodec.encodePngGray(w, h, synthPixels(id, w, h))
-          val (dw, dh, px) = graft.api.ImageCodec.decodePngGray(bytes).get
-          val r = graft.api.ImageCodec.resizeNearest(px, dw, dh, 8, 8)
-          ImgResizeRow(id, 8L, 8L, r.map(_.toLong).sum, r.head.toLong, r.last.toLong)
-        })
-        .toDF()
-        .orderBy("doc_id")
-    },
-    Some(s"""WITH d AS (SELECT doc_id, $sqlW AS w, $sqlH AS h
+  private val qImageResize = perDocQ("q_image_resize",
+    s"""WITH d AS (SELECT doc_id, $sqlW AS w, $sqlH AS h
                        FROM documents),
                  r AS (SELECT doc_id,
                          flatten(list_transform(generate_series(0, 7), y ->
@@ -713,8 +605,13 @@ object Multimodal {
                    CAST(list_sum(px) AS BIGINT) AS r_sum,
                    CAST(px[1] AS BIGINT) AS r_first,
                    CAST(px[64] AS BIGINT) AS r_last
-            FROM r ORDER BY doc_id""")
-  )
+            FROM r ORDER BY doc_id""") { id =>
+    val (w, h) = synthDims(id)
+    val bytes = ImageCodec.encodePngGray(w, h, synthPixels(id, w, h))
+    val (dw, dh, px) = ImageCodec.decodePngGray(bytes).get
+    val r = ImageCodec.resizeNearest(px, dw, dh, 8, 8)
+    ImgResizeRow(id, 8L, 8L, r.map(_.toLong).sum, r.head.toLong, r.last.toLong)
+  }
 
   /** Real decoded audio statistics. */
   final case class AudioRow(doc_id: Long, sample_rate: Long, channels: Long,
@@ -726,27 +623,8 @@ object Multimodal {
     * the oracle predicts every decoded sample stat, so RIFF layout,
     * little-endian framing, or interleave bugs break the hash. The JDK's
     * own javax.sound is the spec suite's ground truth. */
-  private val qAudioDecode = Q(
-    "q_audio_decode",
-    (s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions(_.map { id =>
-          val nFrames = ((id % 441) + 20).toInt
-          val rate = (8000 + (id % 5) * 4000).toInt
-          val ch = ((id % 2) + 1).toInt
-          val samples = Array.tabulate(nFrames * ch)(k =>
-            (((id * 17 + k * 29) % 65536) - 32768).toShort)
-          val bytes = graft.api.MediaCodec.encodeWavPcm16(rate, ch, samples)
-          val (m, out) = graft.api.MediaCodec.decodeWavPcm16(bytes).get
-          AudioRow(id, m.sampleRate, m.channels, m.nFrames,
-            m.nFrames * 1000L / m.sampleRate,
-            out.map(_.toLong).sum, out.min.toLong, out.max.toLong)
-        })
-        .toDF()
-        .orderBy("doc_id")
-    },
-    Some("""WITH d AS (SELECT doc_id, (doc_id % 441) + 20 AS nf,
+  private val qAudioDecode = perDocQ("q_audio_decode",
+    """WITH d AS (SELECT doc_id, (doc_id % 441) + 20 AS nf,
                               8000 + (doc_id % 5) * 4000 AS rate,
                               (doc_id % 2) + 1 AS ch
                        FROM documents),
@@ -760,8 +638,17 @@ object Multimodal {
                    CAST(list_sum(s) AS BIGINT) AS s_sum,
                    CAST(list_min(s) AS BIGINT) AS s_min,
                    CAST(list_max(s) AS BIGINT) AS s_max
-            FROM p ORDER BY doc_id""")
-  )
+            FROM p ORDER BY doc_id""") { id =>
+    val nFrames = ((id % 441) + 20).toInt
+    val rate = (8000 + (id % 5) * 4000).toInt
+    val ch = ((id % 2) + 1).toInt
+    val samples = Array.tabulate(nFrames * ch)(k =>
+      (((id * 17 + k * 29) % 65536) - 32768).toShort)
+    val (m, out) = MediaCodec.decodeWavPcm16(MediaCodec.encodeWavPcm16(rate, ch, samples)).get
+    AudioRow(id, m.sampleRate, m.channels, m.nFrames,
+      m.nFrames * 1000L / m.sampleRate,
+      out.map(_.toLong).sum, out.min.toLong, out.max.toLong)
+  }
 
   /** AUDIO near-dup dedup via energy-envelope fingerprinting — the
     * audio member of the per-modality dedup family (text MinHash/
@@ -781,22 +668,18 @@ object Multimodal {
   private val qAudioFpDedup = Q(
     "q_audio_fp_dedup",
     (s, dir) => {
-      import s.implicits._
-      val hashed = docIds(s, dir)
-        .mapPartitions(_.map { id =>
-          val n = ((id % 441) + 100).toInt
-          val g = id % 37
-          val k0 = (id % n).toInt
-          val samples = Array.tabulate(n) { k =>
-            val w = k.toLong * 64 / n
-            val base = ((g * 31 + w * 97) % 65536) - 32768
-            (if (k == k0) ((g * 31 + w * 97 + 4096) % 65536) - 32768 else base).toShort
-          }
-          val bytes = graft.api.MediaCodec.encodeWavPcm16(16000, 1, samples)
-          val (_, out) = graft.api.MediaCodec.decodeWavPcm16(bytes).get
-          PhashRow(id, graft.api.MediaCodec.envelopeHash64(out))
-        })
-        .toDF()
+      val hashed = perDoc(s, dir) { id =>
+        val n = ((id % 441) + 100).toInt
+        val g = id % 37
+        val k0 = (id % n).toInt
+        val samples = Array.tabulate(n) { k =>
+          val w = k.toLong * 64 / n
+          val base = ((g * 31 + w * 97) % 65536) - 32768
+          (if (k == k0) ((g * 31 + w * 97 + 4096) % 65536) - 32768 else base).toShort
+        }
+        val (_, out) = MediaCodec.decodeWavPcm16(MediaCodec.encodeWavPcm16(16000, 1, samples)).get
+        PhashRow(id, MediaCodec.envelopeHash64(out))
+      }
         // same shape as q_image_phash_dedup: one codec pass, not three
         .transform(graft.api.Ckpt.apply)
       fingerprintCensus(hashed, "fp")
@@ -835,29 +718,19 @@ object Multimodal {
     * ISO-BMFF ftyp+moov(mvhd, trak/tkhd) header is built per doc and
     * box-walked back — tkhd 16.16 dims, mvhd timescale/duration →
     * integer duration_ms; the oracle replays the arithmetic. */
-  private val qVideoMeta = Q(
-    "q_video_meta",
-    (s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions(_.map { id =>
-          val w = ((id % 624) + 16).toInt
-          val h = ((id % 344) + 16).toInt
-          val dur = ((id % 3000) + 600).toInt
-          val bytes = graft.api.MediaCodec.encodeMp4Header(w, h, 600, dur)
-          val m = graft.api.MediaCodec.decodeMp4Meta(bytes).get
-          VideoRow(id, m.format, m.width, m.height, m.durationMs, m.timescale)
-        })
-        .toDF()
-        .orderBy("doc_id")
-    },
-    Some("""SELECT doc_id, 'mp4' AS format,
+  private val qVideoMeta = perDocQ("q_video_meta",
+    """SELECT doc_id, 'mp4' AS format,
               CAST((doc_id % 624) + 16 AS BIGINT) AS width,
               CAST((doc_id % 344) + 16 AS BIGINT) AS height,
               CAST((((doc_id % 3000) + 600) * 1000) // 600 AS BIGINT) AS duration_ms,
               CAST(600 AS BIGINT) AS timescale
-            FROM documents ORDER BY doc_id""")
-  )
+            FROM documents ORDER BY doc_id""") { id =>
+    val w = ((id % 624) + 16).toInt
+    val h = ((id % 344) + 16).toInt
+    val dur = ((id % 3000) + 600).toInt
+    val m = MediaCodec.decodeMp4Meta(MediaCodec.encodeMp4Header(w, h, 600, dur)).get
+    VideoRow(id, m.format, m.width, m.height, m.durationMs, m.timescale)
+  }
 
   /** Per-source rollup of decoded image stats. */
   final case class MmRollupRow(source: String, n_docs: Long, total_px: Long,
@@ -879,8 +752,8 @@ object Multimodal {
         .select(col("doc_id"), col("source")).as[(Long, String)]
         .mapPartitions(_.map { case (id, src) =>
           val (w, h) = synthDims(id)
-          val bytes = graft.api.ImageCodec.encodePngGray(w, h, synthPixels(id, w, h))
-          val (dw, dh, px) = graft.api.ImageCodec.decodePngGray(bytes).get
+          val bytes = ImageCodec.encodePngGray(w, h, synthPixels(id, w, h))
+          val (dw, dh, px) = ImageCodec.decodePngGray(bytes).get
           MmRollupRow(src, 1L, px.length.toLong, dw.toLong, dh.toLong)
         })
         .groupBy("source")
@@ -914,30 +787,8 @@ object Multimodal {
     * what a real video pipeline samples frames by, replacing synthetic
     * sequence fan-out. Oracle replays the arithmetic, so a box-walk,
     * stts-accumulation, or stss bug breaks the hash. */
-  private val qVideoFrames = Q(
-    "q_video_frames",
-    (s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions(_.map { id =>
-          val n = ((id % 13) + 3).toInt
-          val delta = (100 + (id % 50)).toInt
-          val syncEvery = ((id % 4) + 2).toInt
-          val sizes = Array.tabulate(n)(k => (500 + ((id * 7 + k * 13) % 256)).toInt)
-          val bytes = graft.api.MediaCodec.encodeMp4WithSamples(
-            320, 240, timescale = 1000, sampleSizes = sizes.toSeq,
-            sampleDelta = delta, syncEvery = syncEvery)
-          val t = graft.api.MediaCodec.decodeMp4Samples(bytes).get
-          val lastSync = t.sync.max
-          // timescale is 1000, so decode-time ticks ARE milliseconds
-          VideoFramesRow(id, t.nSamples, t.totalBytes, t.sizes.max,
-            t.sync.length.toLong, t.decodeTime(lastSync),
-            t.decodeTime(t.nSamples + 1))
-        })
-        .toDF()
-        .orderBy("doc_id")
-    },
-    Some("""WITH d AS (SELECT doc_id,
+  private val qVideoFrames = perDocQ("q_video_frames",
+    """WITH d AS (SELECT doc_id,
                    (doc_id % 13) + 3 AS n,
                    100 + (doc_id % 50) AS delta,
                    (doc_id % 4) + 2 AS s
@@ -952,8 +803,19 @@ object Multimodal {
                    CAST(1 + (n - 1) // s AS BIGINT) AS n_sync,
                    CAST(delta * (s * ((n - 1) // s)) AS BIGINT) AS last_sync_ts_ms,
                    CAST(n * delta AS BIGINT) AS duration_ms
-            FROM t ORDER BY doc_id""")
-  )
+            FROM t ORDER BY doc_id""") { id =>
+    val n = ((id % 13) + 3).toInt
+    val delta = (100 + (id % 50)).toInt
+    val syncEvery = ((id % 4) + 2).toInt
+    val sizes = Array.tabulate(n)(k => (500 + ((id * 7 + k * 13) % 256)).toInt)
+    val t = MediaCodec.decodeMp4Samples(MediaCodec.encodeMp4WithSamples(
+      320, 240, timescale = 1000, sampleSizes = sizes.toSeq,
+      sampleDelta = delta, syncEvery = syncEvery)).get
+    // timescale is 1000, so decode-time ticks ARE milliseconds
+    VideoFramesRow(id, t.nSamples, t.totalBytes, t.sizes.max,
+      t.sync.length.toLong, t.decodeTime(t.sync.max),
+      t.decodeTime(t.nSamples + 1))
+  }
 
   /** Per-doc keyframe pixel-decode stats. */
   final case class KeyframeRow(doc_id: Long, n_samples: Long, n_key_total: Long,
@@ -975,46 +837,30 @@ object Multimodal {
     * every decoded pixel — a chunk-offset, stsc-run, sample-slicing, or
     * JPEG bug breaks the hash. Scale shape: one mapPartitions pass of
     * pure byte math per row. */
-  private val qVideoKeyframeDecode = Q(
-    "q_video_keyframe_decode",
-    (s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions(_.map { id =>
-          val (w, h) = synthJpegDims(id)
-          val n = ((id % 7) + 3).toInt
-          val delta = (40 + (id % 20)).toInt
-          val syncEvery = ((id % 3) + 2).toInt
-          val nChunks = ((id % 3) + 1).toInt
-          val frames = (0 until n).map { f =>
-            val px = Array.tabulate(w * h) { k =>
-              val bx = (k % w) / 8; val by = (k / w) / 8
-              ((id * 37 + f * 71 + by * 11 + bx * 5) % 256).toInt
-            }
-            graft.api.JpegCodec.encodeJpegGray(w, h, px, quant = 1)
-          }
-          val bytes = graft.api.MediaCodec.encodeMp4Mjpeg(
-            w, h, timescale = 1000, sampleDelta = delta,
-            syncEvery = syncEvery, frames = frames, nChunks = nChunks)
-          val t = graft.api.MediaCodec.decodeMp4Samples(bytes).get
-          val ranges = graft.api.MediaCodec.decodeMp4SampleRanges(bytes).get
-          val keys = t.sync.take(3)
-          val decoded = keys.map { sn =>
-            val (off, sz) = ranges((sn - 1).toInt)
-            val payload = java.util.Arrays.copyOfRange(bytes, off.toInt, (off + sz).toInt)
-            graft.api.JpegCodec.decodeJpegGray(payload).get._3
-          }
-          KeyframeRow(id, t.nSamples, t.sync.length.toLong, keys.length.toLong,
-            decoded.map(_.map(_.toLong).sum).sum,
-            decoded.head.map(_.toLong).sum,
-            decoded.map(_.min).min.toLong,
-            decoded.map(_.max).max.toLong,
-            t.decodeTime(keys.last)) // timescale 1000: ticks are ms
-        })
-        .toDF()
-        .orderBy("doc_id")
-    },
-    Some("""WITH d AS (SELECT doc_id, (doc_id % 25) + 8 AS w, (doc_id % 17) + 8 AS h,
+  /** Per doc, `frames` muxed as MJPEG-in-BMFF (timescale 1000, sample
+    * delta 40 + id % 20, a keyframe every id % 3 + 2 samples, id % 3 + 1
+    * chunks); then the first `k` sync samples are resolved through
+    * stsc/stco, sliced out of `mdat` and decoded by `decode`. Returns
+    * the decoded sample table, those sync-sample numbers and their
+    * pixels. */
+  private def mjpegKeyframes(id: Long, w: Int, h: Int, frames: Seq[Array[Byte]], k: Int)(
+      decode: Array[Byte] => Option[(Int, Int, Array[Int])])
+      : (MediaCodec.Mp4SampleTable, Seq[Long], Seq[Array[Int]]) = {
+    val bytes = MediaCodec.encodeMp4Mjpeg(w, h, timescale = 1000,
+      sampleDelta = (40 + (id % 20)).toInt, syncEvery = ((id % 3) + 2).toInt,
+      frames = frames, nChunks = ((id % 3) + 1).toInt)
+    val t = MediaCodec.decodeMp4Samples(bytes).get
+    val ranges = MediaCodec.decodeMp4SampleRanges(bytes).get
+    val keys = t.sync.take(k)
+    val decoded = keys.map { sn =>
+      val (off, sz) = ranges((sn - 1).toInt)
+      decode(java.util.Arrays.copyOfRange(bytes, off.toInt, (off + sz).toInt)).get._3
+    }
+    (t, keys, decoded)
+  }
+
+  private val qVideoKeyframeDecode = perDocQ("q_video_keyframe_decode",
+    """WITH d AS (SELECT doc_id, (doc_id % 25) + 8 AS w, (doc_id % 17) + 8 AS h,
                    (doc_id % 7) + 3 AS n, 40 + (doc_id % 20) AS delta,
                    (doc_id % 3) + 2 AS s
                  FROM documents),
@@ -1034,8 +880,23 @@ object Multimodal {
                    CAST(min(val) AS BIGINT) AS px_min,
                    CAST(max(val) AS BIGINT) AS px_max,
                    CAST(max(ki * s) * max(delta) AS BIGINT) AS last_dec_ms
-            FROM v GROUP BY doc_id ORDER BY doc_id""")
-  )
+            FROM v GROUP BY doc_id ORDER BY doc_id""") { id =>
+    val (w, h) = synthJpegDims(id)
+    val frames = (0 until ((id % 7) + 3).toInt).map { f =>
+      val px = Array.tabulate(w * h) { k =>
+        val bx = (k % w) / 8; val by = (k / w) / 8
+        ((id * 37 + f * 71 + by * 11 + bx * 5) % 256).toInt
+      }
+      JpegCodec.encodeJpegGray(w, h, px, quant = 1)
+    }
+    val (t, keys, decoded) = mjpegKeyframes(id, w, h, frames, 3)(JpegCodec.decodeJpegGray)
+    KeyframeRow(id, t.nSamples, t.sync.length.toLong, keys.length.toLong,
+      decoded.map(_.map(_.toLong).sum).sum,
+      decoded.head.map(_.toLong).sum,
+      decoded.map(_.min).min.toLong,
+      decoded.map(_.max).max.toLong,
+      t.decodeTime(keys.last)) // timescale 1000: ticks are ms
+  }
 
   /** Per-doc COLOR keyframe pixel-decode stats (RGB channel sums). */
   final case class ColorKeyframeRow(doc_id: Long, n_samples: Long, n_key_total: Long,
@@ -1051,55 +912,8 @@ object Multimodal {
     * oracle replays the per-frame tile colors and BOTH JFIF conversions
     * term-for-term, so a sampling-factor, chunk-offset, or
     * conversion-rounding bug breaks the hash. */
-  private def synthColorFrameTiles(id: Long, f: Int, w: Int, h: Int,
-      tile: Int): Array[Int] =
-    Array.tabulate(w * h) { k =>
-      val tx = (k % w) / tile; val ty = (k / w) / tile
-      val r = ((id * 7 + f * 31 + ty * 13 + tx * 29) % 256).toInt
-      val g = ((id * 11 + f * 41 + ty * 17 + tx * 5) % 256).toInt
-      val b = ((id * 13 + f * 59 + ty * 3 + tx * 23) % 256).toInt
-      (r << 16) | (g << 8) | b
-    }
-
-  private val qVideoKeyframeColor = Q(
-    "q_video_keyframe_color",
-    (s, dir) => {
-      import s.implicits._
-      docIds(s, dir)
-        .mapPartitions(_.map { id =>
-          val (w, h) = synthColorDims(id)
-          val sub = id % 3 != 0
-          val tile = if (sub) 16 else 8
-          val n = ((id % 5) + 3).toInt
-          val delta = (40 + (id % 20)).toInt
-          val syncEvery = ((id % 3) + 2).toInt
-          val nChunks = ((id % 3) + 1).toInt
-          val frames = (0 until n).map { f =>
-            graft.api.JpegCodec.encodeJpegColor(w, h,
-              synthColorFrameTiles(id, f, w, h, tile), quant = 1,
-              chromaSubsample = sub)
-          }
-          val bytes = graft.api.MediaCodec.encodeMp4Mjpeg(
-            w, h, timescale = 1000, sampleDelta = delta,
-            syncEvery = syncEvery, frames = frames, nChunks = nChunks)
-          val t = graft.api.MediaCodec.decodeMp4Samples(bytes).get
-          val ranges = graft.api.MediaCodec.decodeMp4SampleRanges(bytes).get
-          val keys = t.sync.take(2)
-          val decoded = keys.map { sn =>
-            val (off, sz) = ranges((sn - 1).toInt)
-            val payload = java.util.Arrays.copyOfRange(bytes, off.toInt, (off + sz).toInt)
-            graft.api.JpegCodec.decodeJpegColor(payload).get._3
-          }
-          ColorKeyframeRow(id, t.nSamples, t.sync.length.toLong, keys.length.toLong,
-            decoded.map(_.map(p => ((p >> 16) & 0xff).toLong).sum).sum,
-            decoded.map(_.map(p => ((p >> 8) & 0xff).toLong).sum).sum,
-            decoded.map(_.map(p => (p & 0xff).toLong).sum).sum,
-            t.decodeTime(keys.last)) // timescale 1000: ticks are ms
-        })
-        .toDF()
-        .orderBy("doc_id")
-    },
-    Some("""WITH d AS (SELECT doc_id, (doc_id % 29) + 8 AS w, (doc_id % 19) + 8 AS h,
+  private val qVideoKeyframeColor = perDocQ("q_video_keyframe_color",
+    s"""WITH d AS (SELECT doc_id, (doc_id % 29) + 8 AS w, (doc_id % 19) + 8 AS h,
                    CASE WHEN doc_id % 3 = 0 THEN 8 ELSE 16 END AS tile,
                    (doc_id % 5) + 3 AS n, 40 + (doc_id % 20) AS delta,
                    (doc_id % 3) + 2 AS s
@@ -1113,16 +927,7 @@ object Multimodal {
                          (doc_id * 11 + f * 41 + ((p // w) // tile) * 17 + ((p % w) // tile) * 5) % 256 AS g0,
                          (doc_id * 13 + f * 59 + ((p // w) // tile) * 3 + ((p % w) // tile) * 23) % 256 AS b0
                        FROM g),
-                 ycc AS (SELECT doc_id, n, delta, s, ki,
-                           least(255, greatest(0, floor(0.299::DOUBLE * r0 + 0.587::DOUBLE * g0 + 0.114::DOUBLE * b0 + 0.5::DOUBLE))) AS yq,
-                           least(255, greatest(0, floor(128.0::DOUBLE - 0.168736::DOUBLE * r0 - 0.331264::DOUBLE * g0 + 0.5::DOUBLE * b0 + 0.5::DOUBLE))) AS cb,
-                           least(255, greatest(0, floor(128.0::DOUBLE + 0.5::DOUBLE * r0 - 0.418688::DOUBLE * g0 - 0.081312::DOUBLE * b0 + 0.5::DOUBLE))) AS cr
-                         FROM c),
-                 o AS (SELECT doc_id, n, delta, s, ki,
-                         least(255, greatest(0, floor(yq + 1.402::DOUBLE * (cr - 128) + 0.5::DOUBLE))) AS r,
-                         least(255, greatest(0, floor(yq - 0.344136::DOUBLE * (cb - 128) - 0.714136::DOUBLE * (cr - 128) + 0.5::DOUBLE))) AS g,
-                         least(255, greatest(0, floor(yq + 1.772::DOUBLE * (cb - 128) + 0.5::DOUBLE))) AS b
-                       FROM ycc)
+                 ${jfifRoundTripSql("doc_id, n, delta, s, ki")}
             SELECT doc_id,
                    CAST(max(n) AS BIGINT) AS n_samples,
                    CAST(max(1 + (n - 1) // s) AS BIGINT) AS n_key_total,
@@ -1131,8 +936,21 @@ object Multimodal {
                    CAST(sum(g) AS BIGINT) AS g_sum,
                    CAST(sum(b) AS BIGINT) AS b_sum,
                    CAST(max(ki * s) * max(delta) AS BIGINT) AS last_dec_ms
-            FROM o GROUP BY doc_id ORDER BY doc_id""")
-  )
+            FROM o GROUP BY doc_id ORDER BY doc_id""") { id =>
+    val (w, h) = synthColorDims(id)
+    val sub = id % 3 != 0
+    val tile = if (sub) 16 else 8
+    val frames = (0 until ((id % 5) + 3).toInt).map { f =>
+      JpegCodec.encodeJpegColor(w, h, synthColorFrameTiles(id, f, w, h, tile),
+        quant = 1, chromaSubsample = sub)
+    }
+    val (t, keys, decoded) = mjpegKeyframes(id, w, h, frames, 2)(JpegCodec.decodeJpegColor)
+    ColorKeyframeRow(id, t.nSamples, t.sync.length.toLong, keys.length.toLong,
+      decoded.map(channel(_, 16).sum).sum,
+      decoded.map(channel(_, 8).sum).sum,
+      decoded.map(channel(_, 0).sum).sum,
+      t.decodeTime(keys.last)) // timescale 1000: ticks are ms
+  }
 
   val all: Seq[Q] = Seq(qMultimodalDecode, qMultimodalFrames,
     qMultimodalFeatures, qMultimodalResize,

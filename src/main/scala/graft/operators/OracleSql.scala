@@ -219,4 +219,44 @@ private[operators] object OracleSql {
                              AS s
                            FROM toks),
                  sp AS (SELECT doc_id, s.pos AS pos, s.span AS span FROM spans)"""
+
+  /** The labelled distinct-value count frame of the event-value drift
+    * tests ([[graft.api.Drift]]'s ks/emd/mannWhitney, click vs
+    * purchase): `c(x, ca, cb)`. */
+  val driftCounts: String =
+    """c AS (SELECT value AS x,
+                         sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS ca,
+                         sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS cb
+                       FROM events WHERE event_type IN ('click', 'purchase')
+                         AND value IS NOT NULL
+                       GROUP BY value)"""
+
+  /** The hourly quantized value series of
+    * [[graft.api.TimeSeries]]'s autocorr family: per (event_type,
+    * floor-div hour) the DECIMAL(30,10) value sum, floored to the exact
+    * integer `x = floor(sum·1e4)`, over events whose key satisfies
+    * `keyPred` — `series(g, bucket, x)`. */
+  def hourlySeries(keyPred: String): String =
+    s"""series AS (
+              SELECT event_type AS g,
+                     (epoch_ms(ts) // 3600000
+                      - CASE WHEN epoch_ms(ts) % 3600000 < 0 THEN 1 ELSE 0 END) AS bucket,
+                     CAST(floor(CAST(sum(CAST(value AS DECIMAL(30,10))) AS DOUBLE) * 10000) AS HUGEINT) AS x
+              FROM events
+              WHERE value IS NOT NULL AND $keyPred
+              GROUP BY 1, 2)"""
+
+  /** The first 8 hex digits of the md5 hex string `hh` as an integer,
+    * LEAST significant digit first (digit k weighs 16^(k-1)) — the
+    * uniform draw of [[graft.api.Privacy.dpCounts]] and
+    * [[graft.api.Experiment.bootstrapMeanCi]]. */
+  val md5Nibbles8: String =
+    """(strpos('0123456789abcdef', substring(hh, 1, 1)) - 1) * 1
+                       + (strpos('0123456789abcdef', substring(hh, 2, 1)) - 1) * 16
+                       + (strpos('0123456789abcdef', substring(hh, 3, 1)) - 1) * 256
+                       + (strpos('0123456789abcdef', substring(hh, 4, 1)) - 1) * 4096
+                       + (strpos('0123456789abcdef', substring(hh, 5, 1)) - 1) * 65536
+                       + (strpos('0123456789abcdef', substring(hh, 6, 1)) - 1) * 1048576
+                       + (strpos('0123456789abcdef', substring(hh, 7, 1)) - 1) * 16777216
+                       + (strpos('0123456789abcdef', substring(hh, 8, 1)) - 1) * 268435456"""
 }

@@ -618,14 +618,7 @@ object Windows {
           widthMs = 3600000L, maxLag = 3)
         .select(col("g"), col("lag"), col("n_pairs"), col("acf"))
         .orderBy(asc_nulls_first("g"), asc_nulls_first("lag")),
-    Some("""WITH series AS (
-              SELECT event_type AS g,
-                     (epoch_ms(ts) // 3600000
-                      - CASE WHEN epoch_ms(ts) % 3600000 < 0 THEN 1 ELSE 0 END) AS bucket,
-                     CAST(floor(CAST(sum(CAST(value AS DECIMAL(30,10))) AS DOUBLE) * 10000) AS HUGEINT) AS x
-              FROM events
-              WHERE value IS NOT NULL AND event_type IS NOT NULL
-              GROUP BY 1, 2),
+    Some(s"""WITH ${OracleSql.hourlySeries("event_type IS NOT NULL")},
             lags AS (SELECT unnest(generate_series(1, 3)) AS lag),
             pairs AS (SELECT s1.g, l.lag, s1.x AS x, s2.x AS y
                       FROM series s1
@@ -659,14 +652,7 @@ object Windows {
           keyA = "click", keyB = "purchase", widthMs = 3600000L, maxLag = 3)
         .select(col("lag"), col("n_pairs"), col("xcf"))
         .orderBy("lag"),
-    Some("""WITH series AS (
-              SELECT event_type AS g,
-                     (epoch_ms(ts) // 3600000
-                      - CASE WHEN epoch_ms(ts) % 3600000 < 0 THEN 1 ELSE 0 END) AS bucket,
-                     CAST(floor(CAST(sum(CAST(value AS DECIMAL(30,10))) AS DOUBLE) * 10000) AS HUGEINT) AS x
-              FROM events
-              WHERE value IS NOT NULL AND event_type IN ('click', 'purchase')
-              GROUP BY 1, 2),
+    Some(s"""WITH ${OracleSql.hourlySeries("event_type IN ('click', 'purchase')")},
             lags AS (SELECT unnest(generate_series(-3, 3)) AS lag),
             pairs AS (SELECT l.lag, s1.x AS x, s2.x AS y
                       FROM series s1
@@ -835,14 +821,7 @@ object Windows {
         .select(col("g"), col("n_buckets"), col("slope"), col("intercept"),
           col("r2"))
         .orderBy(asc_nulls_first("g")),
-    Some("""WITH series AS (
-              SELECT event_type AS g,
-                     (epoch_ms(ts) // 3600000
-                      - CASE WHEN epoch_ms(ts) % 3600000 < 0 THEN 1 ELSE 0 END) AS bucket,
-                     CAST(floor(CAST(sum(CAST(value AS DECIMAL(30,10))) AS DOUBLE) * 10000) AS HUGEINT) AS x
-              FROM events
-              WHERE value IS NOT NULL AND event_type IS NOT NULL
-              GROUP BY 1, 2),
+    Some(s"""WITH ${OracleSql.hourlySeries("event_type IS NOT NULL")},
             rb AS (SELECT g, bucket - min(bucket) OVER (PARTITION BY g) AS t, x
                    FROM series),
             m AS (SELECT g, count(*) AS n, sum(t) AS st, sum(x) AS sx,
@@ -881,14 +860,7 @@ object Windows {
           widthMs = 3600000L, season = 24)
         .select(col("g"), col("n_eval"), col("mae"), col("rmse"))
         .orderBy(asc_nulls_first("g")),
-    Some("""WITH series AS (
-              SELECT event_type AS g,
-                     (epoch_ms(ts) // 3600000
-                      - CASE WHEN epoch_ms(ts) % 3600000 < 0 THEN 1 ELSE 0 END) AS bucket,
-                     CAST(floor(CAST(sum(CAST(value AS DECIMAL(30,10))) AS DOUBLE) * 10000) AS HUGEINT) AS x
-              FROM events
-              WHERE value IS NOT NULL AND event_type IS NOT NULL
-              GROUP BY 1, 2),
+    Some(s"""WITH ${OracleSql.hourlySeries("event_type IS NOT NULL")},
             scored AS (SELECT s1.g, s1.x, s2.x AS yhat
                        FROM series s1
                        JOIN series s2 ON s1.g = s2.g AND s1.bucket = s2.bucket + 24),
@@ -1182,7 +1154,7 @@ object Windows {
     (s, dir) =>
       graft.api.Experiment.bootstrapMeanCi(Tables.events(s, dir),
         "event_id", "value", b = 20, seed = "graft-boot"),
-    Some("""WITH r AS (SELECT event_id, value, unnest(generate_series(1, 20)) AS b
+    Some(s"""WITH r AS (SELECT event_id, value, unnest(generate_series(1, 20)) AS b
                        FROM events
                        WHERE value IS NOT NULL AND event_id IS NOT NULL),
                  h AS (SELECT value, b,
@@ -1190,14 +1162,7 @@ object Windows {
                                     CAST(b AS VARCHAR), ':', 'graft-boot')) AS hh
                        FROM r),
                  v AS (SELECT value, b,
-                         (strpos('0123456789abcdef', substring(hh, 1, 1)) - 1) * 1
-                       + (strpos('0123456789abcdef', substring(hh, 2, 1)) - 1) * 16
-                       + (strpos('0123456789abcdef', substring(hh, 3, 1)) - 1) * 256
-                       + (strpos('0123456789abcdef', substring(hh, 4, 1)) - 1) * 4096
-                       + (strpos('0123456789abcdef', substring(hh, 5, 1)) - 1) * 65536
-                       + (strpos('0123456789abcdef', substring(hh, 6, 1)) - 1) * 1048576
-                       + (strpos('0123456789abcdef', substring(hh, 7, 1)) - 1) * 16777216
-                       + (strpos('0123456789abcdef', substring(hh, 8, 1)) - 1) * 268435456
+                         ${OracleSql.md5Nibbles8}
                          AS vv
                        FROM h),
                  u AS (SELECT value, b,
@@ -1506,19 +1471,13 @@ object Windows {
         .select(col("g").as("event_type"), col("phase"), col("n_obs"),
           col("seasonal"))
         .orderBy(asc_nulls_first("event_type"), asc("phase")),
-    Some("""WITH s0 AS (SELECT event_type AS g,
-                          (epoch_ms(ts) // 3600000
-                           - CASE WHEN epoch_ms(ts) % 3600000 < 0 THEN 1 ELSE 0 END) AS bucket,
-                          CAST(floor(CAST(sum(CAST(value AS DECIMAL(30,10))) AS DOUBLE) * 10000) AS HUGEINT) AS x
-                        FROM events
-                        WHERE value IS NOT NULL AND event_type IS NOT NULL
-                        GROUP BY 1, 2),
+    Some(s"""WITH ${OracleSql.hourlySeries("event_type IS NOT NULL")},
                  w AS (SELECT g, bucket, x,
                          sum(x) OVER (PARTITION BY g ORDER BY bucket
                            RANGE BETWEEN 12 PRECEDING AND 12 FOLLOWING) AS wsum,
                          count(*) OVER (PARTITION BY g ORDER BY bucket
                            RANGE BETWEEN 12 PRECEDING AND 12 FOLLOWING) AS wn
-                       FROM s0),
+                       FROM series),
                  d AS (SELECT g, bucket % 24 AS phase, 25 * x - wsum AS detr
                        FROM w WHERE wn = 25)
             SELECT g AS event_type, CAST(phase AS BIGINT) AS phase,

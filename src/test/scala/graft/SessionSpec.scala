@@ -9,7 +9,8 @@ import scala.jdk.CollectionConverters._
   * and UTC zone to drift apart. Every checkpoint goes through
   * [[graft.api.Ckpt]], so a tracking scope sees it and its pin can be
   * dropped. Each shared DuckDB oracle fragment is spelled once, in
-  * graft/operators/OracleSql.scala, so the oracles cannot drift apart. */
+  * graft/operators/OracleSql.scala, so the oracles cannot drift apart;
+  * the folded Spark-side and codec twins stay one helper each. */
 class SessionSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
 
@@ -42,6 +43,20 @@ class SessionSpec extends AnyFunSuite {
       assert(hits.map(_._1) == Seq(root.resolve("graft/operators/OracleSql.scala")),
         hits.map { case (f, n) => s"$f:$n" }.mkString(s"'$needle' sites: ", ", ", ""))
     }
+  }
+
+  test("folded twins: each shared fragment and helper is spelled on one line of src/main") {
+    val misplaced = for ((needle, file) <- Seq(
+        "strpos('0123456789abcdef', substring(hh, 1, 1))" -> "graft/operators/OracleSql.scala",
+        "CAST(floor(CAST(sum(CAST(value AS DECIMAL(30,10))) AS DOUBLE) * 10000) AS HUGEINT) AS x" ->
+          "graft/operators/OracleSql.scala",
+        "CAST(list_sum(px) AS BIGINT) AS px_sum" -> "graft/operators/Multimodal.scala",
+        "approx_percentile(x, array(" -> "graft/api/Drift.scala",
+        """.agg(sum(col(valueCol).cast("decimal(30,10)")).as("sd"))""" -> "graft/api/TimeSeries.scala",
+        "box(\"mvhd\"" -> "graft/api/MediaCodec.scala");
+        hits = sitesOf(needle) if hits.map(_._1) != Seq(root.resolve(file)))
+      yield hits.map { case (f, n) => s"$f:$n" }.mkString(s"'$needle' sites: ", ", ", "")
+    assert(misplaced.isEmpty, misplaced.mkString("\n", "\n", ""))
   }
 
   test("Session.local() sizes the generated-code cache above Spark's default of 100") {

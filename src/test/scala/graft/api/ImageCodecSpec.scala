@@ -130,6 +130,13 @@ class ImageCodecSpec extends AnyFunSuite {
     flipped(flipped.length - 20) = (flipped(flipped.length - 20) ^ 0x55).toByte
     assert(ImageCodec.decodePngGray(flipped).isEmpty
       || ImageCodec.decodePngGray(flipped).isDefined) // must not throw either way
+    // a chunk whose forged length is near Int.MaxValue must not wrap past
+    // the bounds check (IHDR ends at byte 33)
+    val gray3 = ImageCodec.encodePngGray(3, 3, pix(4L, 3, 3))
+    val bigChunk = gray3.take(33) ++ java.nio.ByteBuffer.allocate(4).putInt(0x7ffffff0).array() ++
+      "junk".getBytes("US-ASCII") ++ gray3.drop(33)
+    assert(ImageCodec.decodePngGray(bigChunk).isEmpty)
+    assert(ImageCodec.decodePngColor(bigChunk).isEmpty)
   }
 
   test("adversarial header dims are rejected before allocation (no executor OOM)") {
@@ -242,6 +249,15 @@ class ImageCodecSpec extends AnyFunSuite {
     assert(ImageCodec.decodeGifGray(gif.dropRight(6)).isEmpty) // truncated LZW stream
     assert(ImageCodec.decodeBmpGray(bmp.take(40)).isEmpty)   // truncated header
     assert(ImageCodec.decodeBmpGray(gif).isEmpty)            // wrong container
+    // forged header offsets and counts must not wrap past the bounds checks
+    def forgedBmp(off: Int, v: Int): Array[Byte] = {
+      val b = bmp.clone()
+      java.nio.ByteBuffer.wrap(b, off, 4).order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(v)
+      b
+    }
+    assert(ImageCodec.decodeBmpGray(forgedBmp(10, Int.MinValue)).isEmpty) // pixel-data offset
+    assert(ImageCodec.decodeBmpGray(forgedBmp(14, 0x7ffffff0)).isEmpty)   // header size
+    assert(ImageCodec.decodeBmpGray(forgedBmp(46, -1)).isEmpty)           // palette colors
     assert(ImageCodec.decodeGifGray(bmp).isEmpty)
     // non-gray palette: a color image must refuse the gray decode
     val colorGif = {

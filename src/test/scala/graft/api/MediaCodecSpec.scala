@@ -177,7 +177,23 @@ class MediaCodecSpec extends AnyFunSuite {
     // a PNG through the video/audio parsers must also be a clean None
     val png = ImageCodec.encodePngGray(3, 3, Array.fill(9)(7))
     assert(MediaCodec.decodeWavMeta(png).isEmpty && MediaCodec.decodeMp4Meta(png).isEmpty)
+    // a forged length near Int.MaxValue must not wrap past the bounds check
+    def be(v: Int) = java.nio.ByteBuffer.allocate(4).putInt(v).array()
+    def le(v: Int) = java.nio.ByteBuffer.allocate(4)
+      .order(java.nio.ByteOrder.LITTLE_ENDIAN).putInt(v).array()
+    val huge = 0x7ffffff0
+    val bigBox = mp4.take(24) ++ be(huge) ++ "free".getBytes("US-ASCII") ++ new Array[Byte](16)
+    assert(new String(mp4, 4, 4, "US-ASCII") == "ftyp" && be32(mp4, 0) == 24)
+    assert(MediaCodec.decodeMp4Meta(bigBox).isEmpty)
+    assert(MediaCodec.decodeMp4Samples(bigBox).isEmpty)
+    assert(MediaCodec.decodeMp4SampleRanges(bigBox).isEmpty)
+    val bigChunk = "RIFF".getBytes("US-ASCII") ++ le(36) ++ "WAVE".getBytes("US-ASCII") ++
+      "junk".getBytes("US-ASCII") ++ le(huge) ++ new Array[Byte](32)
+    assert(MediaCodec.decodeWavMeta(bigChunk).isEmpty)
+    assert(MediaCodec.decodeWavPcm16(bigChunk).isEmpty)
   }
+
+  private def be32(b: Array[Byte], off: Int): Int = java.nio.ByteBuffer.wrap(b, off, 4).getInt
 
   test("envelopeHash64: integer mean threshold, length-invariant motif") {
     // 64 samples, one per window: bit w = 1 iff 64*|s(w)| >= sum|s|

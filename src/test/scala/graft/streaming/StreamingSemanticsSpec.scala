@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.{SparkTestBase, Tables}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -345,44 +346,51 @@ class StreamingSemanticsSpec extends SparkTestBase {
     assert(byDoc.values.flatten.toSet.subsetOf(Set(10L, 11L)), byDoc.toString)
   }
 
-  test("streaming near-dup: band state survives restart; a pair split across it matches as uninterrupted") {
+  /** Runs `query` over a MemoryStream of `before` then `during` twice:
+    * uninterrupted into a memory sink, and into a parquet sink with a
+    * checkpoint, stopped after `before`, given `during` while down and
+    * restarted. Returns (uninterrupted, restarted) outputs. */
+  private def uninterruptedAndRestarted[A: Encoder](name: String, before: Seq[A],
+      during: Seq[A])(query: DataFrame => Dataset[_]): (DataFrame, DataFrame) = {
     implicit val sqlCtx = spark.sqlContext
-    val t1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
-    val t2 = t1 + " nu" // 3-gram Jaccard vs t1 = 10/11
-    val t3 = "one two three four five six seven eight nine ten eleven twelve"
-    val before = Seq((1L, t1, 1000L), (3L, t3, 1001L))
-    // doc 2 is doc 1's near-dup and arrives while the query is DOWN
-    val during = Seq((2L, t2, 2000L), (4L, t2 + " xi", 2001L))
-    def matches(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double)] =
-      df.collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("matched_id"),
-        r.getAs[Double]("est_jaccard"))).toSeq.sorted
-
-    // reference: the same two batches through one uninterrupted query
-    val memRef = MemoryStream[(Long, String, Long)]
-    val ref = StatefulOps.streamingNearDedup(StatefulOps.bandRows(
-        memRef.toDF().toDF("id", "text", "tsMs"), "id", "text", "tsMs"), threshold = 0.5)
-      .writeStream.format("memory").queryName("s_nd_ref").outputMode("append")
-      .start()
+    val memRef = MemoryStream[A]
+    val ref = query(memRef.toDF())
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
     try {
       memRef.addData(before); ref.processAllAvailable()
       memRef.addData(during); ref.processAllAvailable()
     } finally ref.stop()
-    val expected = matches(spark.table("s_nd_ref"))
 
-    val mem = MemoryStream[(Long, String, Long)]
-    val rows = StatefulOps.bandRows(
-      mem.toDF().toDF("id", "text", "tsMs"), "id", "text", "tsMs")
-    val cp = java.nio.file.Files.createTempDirectory("neardup-cp-").toString
-    val out = java.nio.file.Files.createTempDirectory("neardup-out-").resolve("p").toString
-    def start() = StatefulOps.streamingNearDedup(rows, threshold = 0.5)
-      .writeStream.format("parquet").option("path", out)
+    val mem = MemoryStream[A]
+    val stream = query(mem.toDF())
+    val cp = java.nio.file.Files.createTempDirectory(s"$name-cp-").toString
+    val out = java.nio.file.Files.createTempDirectory(s"$name-out-").resolve("p").toString
+    def start() = stream.writeStream.format("parquet").option("path", out)
       .option("checkpointLocation", cp).outputMode("append").start()
     val q1 = start()
     try { mem.addData(before); q1.processAllAvailable() } finally q1.stop()
     mem.addData(during)
     val q2 = start()
     try q2.processAllAvailable() finally q2.stop()
-    val got = matches(spark.read.parquet(out))
+    (spark.table(name), spark.read.parquet(out))
+  }
+
+  test("streaming near-dup: band state survives restart; a pair split across it matches as uninterrupted") {
+    val t1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda mu"
+    val t2 = t1 + " nu" // 3-gram Jaccard vs t1 = 10/11
+    val t3 = "one two three four five six seven eight nine ten eleven twelve"
+    val before = Seq((1L, t1, 1000L), (3L, t3, 1001L))
+    // doc 2 is doc 1's near-dup and arrives while the query is DOWN
+    val during = Seq((2L, t2, 2000L), (4L, t2 + " xi", 2001L))
+    def matches(df: DataFrame): Seq[(Long, Long, Double)] =
+      df.collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("matched_id"),
+        r.getAs[Double]("est_jaccard"))).toSeq.sorted
+    val (ref, restarted) = uninterruptedAndRestarted("s_nd_restart", before, during) { in =>
+      StatefulOps.streamingNearDedup(StatefulOps.bandRows(
+        in.toDF("id", "text", "tsMs"), "id", "text", "tsMs"), threshold = 0.5)
+    }
+    val expected = matches(ref)
+    val got = matches(restarted)
     // doc 2 finds doc 1 only through the band state recovered from the
     // checkpoint — a from-zero restart would match it to nothing earlier
     assert(got.exists { case (id, m, _) => id == 2L && m == 1L }, got.toString)
@@ -1412,23 +1420,44 @@ class StreamingSemanticsSpec extends SparkTestBase {
       else 0.0
     }
 
-  test("streaming vec near-dup + exact-cosine reconcile ≡ batch annPairs on in-order replay") {
-    implicit val sqlCtx = spark.sqlContext
-    // 6 orthogonal (base, variant) true pairs + 2 solo vectors. Bases
-    // and solos arrive first; variants (and one more solo pairing
-    // nothing) arrive in a SECOND batch, so every true pair crosses the
-    // band-state batch boundary except pair 5, which arrives whole in
-    // batch 2 (the same-batch case).
-    val pairs = (0 until 6).map(p => (2L * p, vecBase(p), 2L * p + 1, vecVariant(p)))
-    val solos = Seq((100L, vecBase(6)), (101L, vecBase(7)))
-    val all: Seq[(Long, Seq[Double])] =
-      pairs.flatMap(t => Seq((t._1, t._2), (t._3, t._4))) ++ solos
-    val df = all.toDF("vid", "emb")
-    val (nPlanes, bands, thr) = (16, 8, 0.8)
-    val batchPairs = graft.api.Similarity.annPairs(df, "vid", "emb",
-        threshold = thr, nPlanes = nPlanes, bands = bands, dim = 64,
+  /** 6 orthogonal (base, variant) true pairs + 2 solo vectors, in two
+    * arrival batches: bases of pairs 0-4 and the solos first, then
+    * variants 0-4 (every true pair crosses the batch boundary) and pair 5
+    * whole (the same-batch case). Rows are (vid, emb, tsMs). */
+  private val vecBatches: (Seq[(Long, Seq[Double], Long)], Seq[(Long, Seq[Double], Long)]) = (
+    (0 until 5).map(p => (2L * p, vecBase(p), 1000L + p)) ++
+      Seq((100L, vecBase(6), 1050L), (101L, vecBase(7), 1050L)),
+    (0 until 5).map(p => (2L * p + 1, vecVariant(p), 2000L + p)) ++
+      Seq((10L, vecBase(5), 2100L), (11L, vecVariant(5), 2101L)))
+
+  private def vecDf: DataFrame =
+    (vecBatches._1 ++ vecBatches._2).map(r => (r._1, r._2)).toDF("vid", "emb")
+
+  /** Batch `Similarity.annPairs` over [[vecDf]] at the streaming specs'
+    * banding (16 planes, 8 bands, cosine ≥ 0.8). */
+  private def vecBatchPairs: Set[(Long, Long)] =
+    graft.api.Similarity.annPairs(vecDf, "vid", "emb",
+        threshold = 0.8, nPlanes = 16, bands = 8, dim = 64,
         multiProbe = true, maxBucketVecs = 0)
       .collect().map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"))).toSet
+
+  /** Exact-cosine reconcile of vec near-dup matches, as (min id, max id). */
+  private def verifiedVecPairs(matches: DataFrame): Set[(Long, Long)] =
+    StatefulOps.exactVerifyVecMatches(matches, vecDf, "vid", "emb", threshold = 0.8)
+      .collect().map(r => (math.min(r.getAs[Long]("id"), r.getAs[Long]("matched_id")),
+        math.max(r.getAs[Long]("id"), r.getAs[Long]("matched_id")))).toSet
+
+  private def vecNearDedup(in: DataFrame): Dataset[StatefulOps.VecMatch] =
+    StatefulOps.streamingVecNearDedup(StatefulOps.vecBandRows(
+        in.toDF("vid", "emb", "tsMs"), "vid", "emb", "tsMs",
+        nPlanes = 16, bands = 8, dim = 64),
+      nPlanes = 16, estThreshold = 0.0)
+
+  test("streaming vec near-dup + exact-cosine reconcile ≡ batch annPairs on in-order replay") {
+    implicit val sqlCtx = spark.sqlContext
+    val (nPlanes, bands, thr) = (16, 8, 0.8)
+    val df = vecDf
+    val batchPairs = vecBatchPairs
     // fixture sanity: the exact pair set is exactly the 6 constructed
     // pairs (cos(base_p, variant_p) ≈ 0.993; cross pairs exactly 0) and
     // the LSH catches all of them here (orthogonal blocks hash apart)
@@ -1436,30 +1465,17 @@ class StreamingSemanticsSpec extends SparkTestBase {
       s"batch annPairs surprised: $batchPairs")
 
     val mem = MemoryStream[(Long, Seq[Double], Long)]
-    val rows = StatefulOps.vecBandRows(
-      mem.toDF().toDF("vid", "emb", "tsMs"), "vid", "emb", "tsMs",
-      nPlanes = nPlanes, bands = bands, dim = 64)
-    val q = StatefulOps.streamingVecNearDedup(rows, nPlanes = nPlanes,
-        estThreshold = 0.0)
+    val q = vecNearDedup(mem.toDF())
       .writeStream.format("memory").queryName("s_vecnd").outputMode("append")
       .start()
     try {
-      // batch 1: bases of pairs 0-4 + solos (arrival order = id order)
-      mem.addData((0 until 5).map(p => (2L * p, vecBase(p), 1000L + p)) ++
-        solos.map { case (id, v) => (id, v, 1050L) })
-      q.processAllAvailable()
-      // batch 2: variants 0-4 (cross-batch) + pair 5 whole (same-batch)
-      mem.addData((0 until 5).map(p => (2L * p + 1, vecVariant(p), 2000L + p)) ++
-        Seq((10L, vecBase(5), 2100L), (11L, vecVariant(5), 2101L)))
-      q.processAllAvailable()
+      mem.addData(vecBatches._1); q.processAllAvailable()
+      mem.addData(vecBatches._2); q.processAllAvailable()
     } finally q.stop()
     val matches = spark.table("s_vecnd")
     // est-threshold-0 candidates include signature noise; the reconcile
     // must reduce them to EXACTLY the batch pair set
-    val verified = StatefulOps.exactVerifyVecMatches(matches, df, "vid", "emb",
-        threshold = thr)
-      .collect().map(r => (math.min(r.getAs[Long]("id"), r.getAs[Long]("matched_id")),
-        math.max(r.getAs[Long]("id"), r.getAs[Long]("matched_id")))).toSet
+    val verified = verifiedVecPairs(matches)
     assert(verified == batchPairs,
       s"stream-batch mismatch: extra=${verified -- batchPairs} missing=${batchPairs -- verified}")
     // the verified sim is the exact rounded cosine batch annPairs reports
@@ -1477,6 +1493,20 @@ class StreamingSemanticsSpec extends SparkTestBase {
     // solos flagged nothing after the reconcile
     assert(!verified.flatMap(p => Set(p._1, p._2)).exists(Set(100L, 101L)),
       verified.toString)
+  }
+
+  test("streaming vec near-dup: band state survives restart; output and reconcile ≡ uninterrupted and batch") {
+    val (ref, restarted) = uninterruptedAndRestarted("s_vecnd_restart",
+      vecBatches._1, vecBatches._2)(vecNearDedup)
+    def rows(df: DataFrame): Seq[(Long, Long, Long, Double)] =
+      df.collect().map(r => (r.getAs[Long]("band"), r.getAs[Long]("id"),
+        r.getAs[Long]("matched_id"), r.getAs[Double]("est_cos"))).toSeq.sorted
+    val got = rows(restarted)
+    // variant 1 meets base 0 only through the band state recovered from
+    // the checkpoint: it arrived while the query was down
+    assert(got.exists(r => r._2 == 1L && r._3 == 0L), got.toString)
+    assert(got == rows(ref), s"restarted $got vs uninterrupted ${rows(ref)}")
+    assert(verifiedVecPairs(restarted) == vecBatchPairs)
   }
 
   test("streaming vec near-dup: hot-bucket cap keeps earliest, probe rows never index") {
@@ -1508,55 +1538,73 @@ class StreamingSemanticsSpec extends SparkTestBase {
       .forall(_.getAs[Double]("est_cos") >= 0.99))
   }
 
-  test("streaming SemDeDup ≡ batch Similarity.semDedup on an id-ordered replay") {
-    implicit val sqlCtx = spark.sqlContext
+  /** The SemDeDup stream-batch fixture: the non-empty embeddings, the
+    * batch `Similarity.semDedup` verdicts (id → (cell, keep, sim)), the
+    * SAME fitted IVF centers (fit-once / apply-at-ingest: identical call
+    * path and decimal-exact Lloyd update ⇒ identical centers) and the
+    * stream rows (vid, emb, tsMs) in id order. */
+  private lazy val semFixture = {
     val emb = Tables.embeddings(spark, sfDir)
       .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
       .select(col("vec_id"), col("embedding"))
-    // the batch election this stream must reproduce row for row
-    val batch = graft.api.Similarity.semDedup(emb, "vec_id", "embedding",
-        simThreshold = 0.4, targetCell = 128, iterations = 1, nProbe = 2)
-      .collect().map(r => r.getAs[Long]("id") ->
-        ((r.getAs[Long]("cell"), r.getAs[Long]("keep"),
-          Option(r.get(3)).map(_.asInstanceOf[Double])))).toMap
-    assert(batch.nonEmpty && batch.values.exists(_._2 == 0L),
-      "fixture should contain at least one semantic duplicate")
-    // the SAME fitted model (fit-once / apply-at-ingest): identical call
-    // path and decimal-exact Lloyd update ⇒ identical centers
-    val n = emb.count()
+    val batch = semVerdicts(graft.api.Similarity.semDedup(emb, "vec_id", "embedding",
+      simThreshold = 0.4, targetCell = 128, iterations = 1, nProbe = 2))
     val centers = graft.api.Similarity.fitIvf(emb, "vec_id", "embedding",
-      graft.api.Similarity.ivfCellsFor(n, 128), 1)
+      graft.api.Similarity.ivfCellsFor(emb.count(), 128), 1)
     val rows = emb.collect()
       .map(r => (r.getAs[Long]("vec_id"),
         r.getSeq[Float](1).map(_.toDouble), 1000L + r.getAs[Long]("vec_id")))
-      .sortBy(_._1)
-    val mem = MemoryStream[(Long, Seq[Double], Long)]
-    val cellRows = StatefulOps.semCellRows(
-      mem.toDF().toDF("vid", "emb", "tsMs"), "vid", "emb", "tsMs",
-      centers, nProbe = 2)
-    val q = StatefulOps.streamingSemDedup(cellRows, simThreshold = 0.4)
-      .writeStream.format("memory").queryName("s_semdd").outputMode("append")
-      .start()
-    try {
-      // two micro-batches, id-ordered: cross-batch AND within-batch dups
-      val (b1, b2) = rows.splitAt(rows.length / 2)
-      mem.addData(b1); q.processAllAvailable()
-      mem.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    // assemble batch-shaped verdicts from the static assignment frame +
-    // the accumulated matches
+      .sortBy(_._1).toSeq
+    (emb, batch, centers, rows)
+  }
+
+  private def semVerdicts(df: DataFrame): Map[Long, (Long, Long, Option[Double])] =
+    df.collect().map(r => r.getAs[Long]("id") ->
+      ((r.getAs[Long]("cell"), r.getAs[Long]("keep"),
+        Option(r.get(3)).map(_.asInstanceOf[Double])))).toMap
+
+  private def semDedup(in: DataFrame): Dataset[StatefulOps.SemMatch] =
+    StatefulOps.streamingSemDedup(StatefulOps.semCellRows(
+      in.toDF("vid", "emb", "tsMs"), "vid", "emb", "tsMs", semFixture._3, nProbe = 2),
+      simThreshold = 0.4)
+
+  /** Batch-shaped verdicts from the static cell assignment of every
+    * embedding plus the stream's accumulated `matches`. */
+  private def streamSemVerdicts(matches: DataFrame): Map[Long, (Long, Long, Option[Double])] = {
     val staticCells = StatefulOps.semCellRows(
-      emb.select(col("vec_id").as("vid"), col("embedding").as("emb"),
+      semFixture._1.select(col("vec_id").as("vid"), col("embedding").as("emb"),
         (col("vec_id") + 1000L).as("tsMs")),
-      "vid", "emb", "tsMs", centers, nProbe = 2).toDF()
-    val got = StatefulOps.semDedupVerdicts(staticCells, spark.table("s_semdd"))
-      .collect().map(r => r.getAs[Long]("id") ->
-        ((r.getAs[Long]("cell"), r.getAs[Long]("keep"),
-          Option(r.get(3)).map(_.asInstanceOf[Double])))).toMap
-    assert(got == batch,
-      s"stream-batch mismatch: " +
-        s"extra=${got.filterNot { case (k, v) => batch.get(k).contains(v) }.take(5)} " +
-        s"missing=${batch.filterNot { case (k, v) => got.get(k).contains(v) }.take(5)}")
+      "vid", "emb", "tsMs", semFixture._3, nProbe = 2).toDF()
+    semVerdicts(StatefulOps.semDedupVerdicts(staticCells, matches))
+  }
+
+  private def semMismatch(got: Map[Long, (Long, Long, Option[Double])],
+      batch: Map[Long, (Long, Long, Option[Double])]): String =
+    s"extra=${got.filterNot { case (k, v) => batch.get(k).contains(v) }.take(5)} " +
+      s"missing=${batch.filterNot { case (k, v) => got.get(k).contains(v) }.take(5)}"
+
+  /** Streams `first` then `second` through one SemDeDup query. */
+  private def semStream(name: String, first: Seq[(Long, Seq[Double], Long)],
+      second: Seq[(Long, Seq[Double], Long)]): DataFrame = {
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(Long, Seq[Double], Long)]
+    val q = semDedup(mem.toDF())
+      .writeStream.format("memory").queryName(name).outputMode("append").start()
+    try {
+      mem.addData(first); q.processAllAvailable()
+      mem.addData(second); q.processAllAvailable()
+    } finally q.stop()
+    spark.table(name)
+  }
+
+  test("streaming SemDeDup ≡ batch Similarity.semDedup on an id-ordered replay") {
+    val (_, batch, _, rows) = semFixture
+    assert(batch.nonEmpty && batch.values.exists(_._2 == 0L),
+      "fixture should contain at least one semantic duplicate")
+    // two micro-batches, id-ordered: cross-batch AND within-batch dups
+    val (b1, b2) = rows.splitAt(rows.length / 2)
+    val got = streamSemVerdicts(semStream("s_semdd", b1, b2))
+    assert(got == batch, s"stream-batch mismatch: ${semMismatch(got, batch)}")
   }
 
   test("streaming SemDeDup ≡ batch on a REVERSED (larger-ids-first) replay") {
@@ -1565,48 +1613,29 @@ class StreamingSemanticsSpec extends SparkTestBase {
     // (vs.id < r.id) guard suppressed that match and wrongly emitted
     // the larger id as a keeper; bidirectional scoring restores batch
     // parity for any arrival order of the pairs that meet in state
-    implicit val sqlCtx = spark.sqlContext
-    val emb = Tables.embeddings(spark, sfDir)
-      .filter(col("embedding").isNotNull && size(col("embedding")) > 0)
-      .select(col("vec_id"), col("embedding"))
-    val batch = graft.api.Similarity.semDedup(emb, "vec_id", "embedding",
-        simThreshold = 0.4, targetCell = 128, iterations = 1, nProbe = 2)
-      .collect().map(r => r.getAs[Long]("id") ->
-        ((r.getAs[Long]("cell"), r.getAs[Long]("keep"),
-          Option(r.get(3)).map(_.asInstanceOf[Double])))).toMap
-    val n = emb.count()
-    val centers = graft.api.Similarity.fitIvf(emb, "vec_id", "embedding",
-      graft.api.Similarity.ivfCellsFor(n, 128), 1)
-    val rows = emb.collect()
-      .map(r => (r.getAs[Long]("vec_id"),
-        r.getSeq[Float](1).map(_.toDouble), 1000L + r.getAs[Long]("vec_id")))
-      .sortBy(_._1)
-    val mem = MemoryStream[(Long, Seq[Double], Long)]
-    val cellRows = StatefulOps.semCellRows(
-      mem.toDF().toDF("vid", "emb", "tsMs"), "vid", "emb", "tsMs",
-      centers, nProbe = 2)
-    val q = StatefulOps.streamingSemDedup(cellRows, simThreshold = 0.4)
-      .writeStream.format("memory").queryName("s_semdd_rev").outputMode("append")
-      .start()
-    try {
-      // the HIGH-id half arrives a micro-batch BEFORE the low-id half:
-      // every cross-half pair meets in state in the order the old guard
-      // dropped
-      val (lo, hi) = rows.splitAt(rows.length / 2)
-      mem.addData(hi); q.processAllAvailable()
-      mem.addData(lo); q.processAllAvailable()
-    } finally q.stop()
-    val staticCells = StatefulOps.semCellRows(
-      emb.select(col("vec_id").as("vid"), col("embedding").as("emb"),
-        (col("vec_id") + 1000L).as("tsMs")),
-      "vid", "emb", "tsMs", centers, nProbe = 2).toDF()
-    val got = StatefulOps.semDedupVerdicts(staticCells, spark.table("s_semdd_rev"))
-      .collect().map(r => r.getAs[Long]("id") ->
-        ((r.getAs[Long]("cell"), r.getAs[Long]("keep"),
-          Option(r.get(3)).map(_.asInstanceOf[Double])))).toMap
-    assert(got == batch,
-      s"reversed-order stream-batch mismatch: " +
-        s"extra=${got.filterNot { case (k, v) => batch.get(k).contains(v) }.take(5)} " +
-        s"missing=${batch.filterNot { case (k, v) => got.get(k).contains(v) }.take(5)}")
+    val (_, batch, _, rows) = semFixture
+    // the HIGH-id half arrives a micro-batch BEFORE the low-id half:
+    // every cross-half pair meets in state in the order the old guard
+    // dropped
+    val (lo, hi) = rows.splitAt(rows.length / 2)
+    val got = streamSemVerdicts(semStream("s_semdd_rev", hi, lo))
+    assert(got == batch, s"reversed-order stream-batch mismatch: ${semMismatch(got, batch)}")
+  }
+
+  test("streaming SemDeDup: cell state survives restart; output and verdicts ≡ uninterrupted and batch") {
+    val (_, batch, _, rows) = semFixture
+    val (b1, b2) = rows.splitAt(rows.length / 2)
+    val (ref, restarted) = uninterruptedAndRestarted("s_semdd_restart", b1, b2)(semDedup)
+    def matches(df: DataFrame): Seq[(Int, Long, Long, Double)] =
+      df.collect().map(r => (r.getAs[Int]("cell"), r.getAs[Long]("id"),
+        r.getAs[Long]("matched_id"), r.getAs[Double]("sim"))).toSeq.sorted
+    val got = matches(restarted)
+    // some duplicate pair straddles the restart: one side arrived while
+    // the query was down and meets the other only through recovered state
+    val firstIds = b1.map(_._1).toSet
+    assert(got.exists(m => firstIds(m._2) != firstIds(m._3)), got.toString)
+    assert(got == matches(ref), s"restarted $got vs uninterrupted ${matches(ref)}")
+    val verdicts = streamSemVerdicts(restarted)
+    assert(verdicts == batch, s"restarted stream-batch mismatch: ${semMismatch(verdicts, batch)}")
   }
 }
