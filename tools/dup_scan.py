@@ -9,6 +9,7 @@ then the count per file (largest first).
 Usage: tools/dup_scan.py [root]   (default root: src/main)
 """
 import os
+import signal
 import sys
 
 WINDOW = 5
@@ -43,6 +44,7 @@ def scan(root):
 
 
 def main():
+    signal.signal(signal.SIGPIPE, signal.SIG_DFL)  # quiet when piped into head
     root = sys.argv[1] if len(sys.argv) > 1 else "src/main"
     per_file = scan(root)
     print(sum(per_file.values()))
